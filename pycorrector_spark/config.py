@@ -42,7 +42,7 @@ class PipelineConfig:
     allowed_langs: tuple = ("zh", "en")
 
     # scale knobs
-    shuffle_partitions: int = 32
+    shuffle_partitions: int = 32       # not read by the pipeline; perfbench's traced run uses it
     salt_hot_host_threshold: int = 0   # >0 enables salting when a host
                                        # exceeds this row count per partition
 
@@ -70,8 +70,8 @@ def keep_decision(
 ):
     """Frozen rule -> (keep: bool, drop_reason: str). First failing rule wins.
 
-    Scalar form; the Spark stage applies the same rule vectorized with
-    identical comparison order (see operators/quality.py).
+    Scalar form; the score stage (operators/score.py process_batch)
+    applies it per row to the signals from textops.signals_frame.
     """
     if not len_ok:
         return False, "len"

@@ -375,7 +375,12 @@ def url_dedup_latest(
     shuffle), (2) same-key join back (exchange-reused partitioning) and
     a second hash agg taking max(id) among the max-ts rows, which is the
     deterministic tie-break. No window, no sort aggregate. Returns
-    (id, norm_url, ts, n_crawls)."""
+    (id, norm_url, ts, n_crawls).
+
+    NULL ts sorts last: a norm_url with any non-NULL ts keeps its newest
+    one, and one whose ts are all NULL keeps its largest id with a NULL
+    ts (the null-safe match against the NULL max). n_crawls counts the
+    NULL-ts crawls too."""
     norm = normalize_url_expr(F.col(url_col))
     base = df.select(norm.alias("norm_url"), F.col(ts_col), F.col(id_col))
     tops = base.groupBy("norm_url").agg(
@@ -383,7 +388,7 @@ def url_dedup_latest(
     )
     return (
         base.join(tops, "norm_url")
-        .where(F.col(ts_col) == F.col("_ts_max"))
+        .where(F.col(ts_col).eqNullSafe(F.col("_ts_max")))
         .groupBy("norm_url")
         .agg(
             F.max(id_col).alias(id_col),

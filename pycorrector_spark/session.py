@@ -1,8 +1,8 @@
 """SparkSession builder tuned for this engine.
 
-Local-mode defaults sized for the sandbox (local[32], 128 GiB host); the
-same settings transfer to cluster mode except master/memory, which
-spark-submit supplies.
+Local mode defaults to one Spark core per CPU this process may run on
+(``SPARK_GRAFT_CPUS`` overrides it); the same settings transfer to cluster
+mode except master/memory, which spark-submit supplies.
 """
 
 from __future__ import annotations
@@ -12,18 +12,32 @@ import os
 from pyspark.sql import SparkSession
 
 
+def resolve_master(master: str = None) -> tuple:
+    """(master URL, local core count) from the argument, then
+    ``SPARK_GRAFT_MASTER``, then ``local[SPARK_GRAFT_CPUS]``, then one core
+    per CPU in this process's affinity mask. Any master without a plain
+    ``local[N]`` core count (``local[*]``, a cluster URL) counts as the
+    affinity-mask CPU count."""
+    host_cores = len(os.sched_getaffinity(0))
+    master = (
+        master
+        or os.environ.get("SPARK_GRAFT_MASTER")
+        or f"local[{os.environ.get('SPARK_GRAFT_CPUS') or host_cores}]"
+    )
+    try:
+        n_cores = int(master.split("[")[-1].rstrip("]"))
+    except ValueError:
+        n_cores = host_cores
+    return master, n_cores
+
+
 def get_spark(
     app_name: str = "pycorrector_spark",
     master: str = None,
     shuffle_partitions: int = None,
     extra_conf: dict = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    cores = master.split("[")[-1].rstrip("]") if "[" in master else "32"
-    try:
-        n_cores = int(cores) if cores != "*" else (os.cpu_count() or 8)
-    except ValueError:
-        n_cores = 32
+    master, n_cores = resolve_master(master)
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * n_cores, 8)
     b = (

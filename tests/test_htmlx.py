@@ -191,3 +191,42 @@ def test_url_dedup_latest_keeps_newest_crawl(spark):
     ).withColumn("warc_ts", F.to_timestamp(F.lit("2026-01-01 00:00:00")))
     (w,) = url_dedup_latest(tied).collect()
     assert w.doc_id == 2 and w.n_crawls == 2
+
+
+def test_url_dedup_latest_null_timestamps(spark):
+    """A norm_url whose warc_ts are all NULL still yields one row (largest
+    id), and a NULL ts never beats a real one in a mixed group — the
+    same winners as the oracle's ROW_NUMBER() OVER (ORDER BY warc_ts
+    DESC, doc_id DESC) with DuckDB's NULLS LAST."""
+    import datetime as dt
+
+    import duckdb
+    import pandas as pd
+
+    from pycorrector_spark.operators.htmlx import url_dedup_latest
+
+    t0, t1 = dt.datetime(2026, 1, 1), dt.datetime(2026, 1, 2)
+    rows = [
+        (1, "https://a.example/x", None),   # all-NULL group
+        (2, "https://a.example/x", None),
+        (3, "https://b.example/y", t1),     # mixed group: newest ts wins
+        (5, "https://b.example/y", t0),
+        (6, "https://b.example/y", None),   # largest id, but NULL ts
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, url string, warc_ts timestamp")
+    got = {
+        r.doc_id: (r.warc_ts, r.n_crawls) for r in url_dedup_latest(df).collect()
+    }
+    assert got == {2: (None, 2), 3: (t1, 3)}
+
+    crawls = pd.DataFrame(rows, columns=["doc_id", "url", "warc_ts"])
+    want = duckdb.sql("""
+        SELECT doc_id, n_crawls FROM (
+          SELECT doc_id,
+                 ROW_NUMBER() OVER (PARTITION BY url
+                                    ORDER BY warc_ts DESC, doc_id DESC) AS rn,
+                 COUNT(*) OVER (PARTITION BY url) AS n_crawls
+          FROM crawls)
+        WHERE rn = 1
+    """).fetchall()
+    assert sorted(want) == sorted((k, v[1]) for k, v in got.items())

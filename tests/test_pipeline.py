@@ -224,3 +224,31 @@ def test_hot_host_salting_wired_through_config(spark):
         .collect()
     )
     assert sum(1 for n in parts if n > 0) >= 4  # hot host spread out
+
+
+def _two_docs_per_partition(spark, n_parts):
+    from pyspark.sql import functions as F
+
+    return spark.range(2 * n_parts, numPartitions=n_parts).select(
+        F.concat(F.lit("https://p.example/"), F.col("id").cast("string")).alias("url"),
+        F.lit("a short english document body").alias("text"),
+        F.lit("en").alias("lang"),
+    )
+
+
+def test_score_stage_runs_one_task_per_core(spark):
+    # every Python task pays pyspark's fixed per-task setup, so an
+    # under-split input is shuffled to exactly one partition per core
+    cores = spark.sparkContext.defaultParallelism
+    scored = run_quality_pipeline(spark, _two_docs_per_partition(spark, 1))
+    assert scored.rdd.getNumPartitions() == cores
+    rows = scored.select("url").collect()
+    assert len(rows) == 2
+
+
+def test_already_split_input_is_not_reshuffled(spark):
+    n_parts = spark.sparkContext.defaultParallelism + 3
+    scored = run_quality_pipeline(spark, _two_docs_per_partition(spark, n_parts))
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert scored.rdd.getNumPartitions() == n_parts
