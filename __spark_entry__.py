@@ -1172,113 +1172,6 @@ def q_eval_f1(spark, sf_dir):
     return eval_corrector(spark, pairs)
 
 
-def q_media_features(spark, sf_dir):
-    """Multimodal: binary payload -> feature vector through the Arrow-
-    batched decode stage. ALL 64 rows decode FOR REAL as of round 5:
-    PNG (pure-Python zlib-inflate + scanline unfilter), GIF (full LZW)
-    and baseline JPEG (DCT + Annex-K Huffman, 4:4:4 and 4:2:0 rows) —
-    true pixel statistics throughout, no deterministic_fake anywhere on
-    this path. Features emitted as comma-joined repr strings so the
-    checker can hash them; oracle = the same strings precomputed from
-    the same deterministic payloads."""
-    import pandas as pd
-    from pycorrector_spark.operators.multimodal import (
-        decode_image_batch,
-        make_media_table,
-    )
-
-    def fn(it):
-        for pdf in it:
-            feats = decode_image_batch(pdf["payload"])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": pdf["mime"],
-                    "features": [",".join(repr(float(x)) for x in f) for f in feats],
-                }
-            )
-
-    return make_media_table(spark, 64).mapInPandas(
-        fn, "media_id long, mime string, features string"
-    )
-
-
-def q_media_resize(spark, sf_dir):
-    """Multimodal resize stage (round 5, REAL end-to-end): decode
-    (PNG/GIF/baseline JPEG by signature) -> nearest-neighbor resample to
-    16x12 -> re-encode as PNG, one Arrow batch function
-    (operators/multimodal.resize_image). Output keyed by the md5 of the
-    re-encoded payload so the oracle (same pure codec driver-side)
-    proves byte-identical media bytes, not just shapes."""
-    import hashlib as _hl
-
-    import pandas as pd
-    from pycorrector_spark.operators.multimodal import make_media_table, resize_image
-
-    resized = resize_image(make_media_table(spark, 64), target_w=16, target_h=12)
-
-    def fn(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": pdf["mime"],
-                    "width": pdf["width"].astype("int64"),
-                    "height": pdf["height"].astype("int64"),
-                    "resized_md5": [
-                        _hl.md5(bytes(p)).hexdigest() for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return resized.mapInPandas(
-        fn, "media_id long, mime string, width long, height long, resized_md5 string"
-    )
-
-
-def q_media_audio(spark, sf_dir):
-    """Audio decode stage (round 5, REAL): PCM WAVs (mono/stereo,
-    seeded sine mixtures) decode through the pure RIFF/WAVE parser
-    (operators/multimodal.decode_wav) into duration/rate/signal
-    statistics — the audio sibling of media_features, same Arrow-batched
-    shape. Compressed audio stays the disclosed fake boundary (not on
-    this gated path). Oracle = same pure functions driver-side."""
-    import pandas as pd
-    from pycorrector_spark.operators.multimodal import (
-        audio_features,
-        make_audio_table,
-    )
-
-    def fn(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": pdf["mime"],
-                    "features": [
-                        ",".join(repr(float(x)) for x in audio_features(p))
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return make_audio_table(spark, 24).mapInPandas(
-        fn, "media_id long, mime string, features string"
-    )
-
-
-def q_media_frames(spark, sf_dir):
-    """Video frame sampling (round 5, REAL): multi-frame animated GIFs
-    decode through the full LZW+compositing path
-    (operators/multimodal.decode_gif_frames) and every 2nd frame (cap 4)
-    is emitted as a PNG-re-encoded sample keyed by md5 — real composited
-    pixels, not plan rows. Single-image rows exercise the 1-frame path.
-    Oracle = the same pure decode/sample/encode driver-side."""
-    from pycorrector_spark.operators.multimodal import frame_sample, make_video_table
-
-    return frame_sample(make_video_table(spark, 24), every_n=2, max_samples=4)
-
-
 # source/checkpoint dirs created by q_stream_dedup in this process (same
 # reap discipline as the IVF index dirs)
 _STREAM_DIRS: set = set()
@@ -2388,10 +2281,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- (b) new or changed this round (round 5) ----------------------
         "qf_lm_ppl_klm": q_lm_ppl_klm,
         "qf_token_budget": q_token_budget,
-        "media_features": q_media_features,
-        "media_resize": q_media_resize,
-        "media_frames": q_media_frames,
-        "media_audio": q_media_audio,
         "qf_curation_e2e": q_curation_e2e,
         "qf_url_dedup": q_url_dedup,
         "rel_shipping_priority": q_rel_shipping_priority,
@@ -2760,87 +2649,6 @@ def _dedup_minhash_oracle_sql() -> str:
         (int(i), (",".join(str(int(x)) for x in sig),)) for i, sig in zip(ids, sigs)
     ]
     return _pool_oracle_sql(len(MINHASH_POOL), ["sig"], rows)
-
-
-@functools.lru_cache(maxsize=None)
-def _media_resize_oracle_sql() -> str:
-    """Expected (media_id, mime, 16, 12, md5(png)) via the SAME pure
-    decode/resample/encode functions driver-side."""
-    import hashlib as _hl
-
-    from pycorrector_spark.operators.multimodal import (
-        decode_image,
-        encode_png,
-        media_rows,
-        resize_pixels,
-    )
-
-    values = ", ".join(
-        f"({i}, {_sq(mime)}, 16, 12, "
-        f"{_sq(_hl.md5(encode_png(resize_pixels(decode_image(payload), 16, 12))).hexdigest())})"
-        for i, mime, _w, _h, payload in media_rows(64)
-    )
-    return (
-        f"SELECT * FROM (VALUES {values}) "
-        "t(media_id, mime, width, height, resized_md5)"
-    )
-
-
-@functools.lru_cache(maxsize=None)
-def _media_audio_oracle_sql() -> str:
-    from pycorrector_spark.operators.multimodal import audio_features, audio_rows
-
-    values = ", ".join(
-        f"({i}, {_sq(mime)}, "
-        f"{_sq(','.join(repr(float(x)) for x in audio_features(payload)))})"
-        for i, mime, _rate, payload in audio_rows(24)
-    )
-    return f"SELECT * FROM (VALUES {values}) t(media_id, mime, features)"
-
-
-@functools.lru_cache(maxsize=None)
-def _media_frames_oracle_sql() -> str:
-    import hashlib as _hl
-
-    from pycorrector_spark.operators.multimodal import (
-        GIF_SIGNATURES,
-        decode_gif_frames,
-        decode_image,
-        encode_png,
-        video_rows,
-    )
-
-    out = []
-    for i, _mime, _nf, payload in video_rows(24):
-        frames = (
-            decode_gif_frames(payload)
-            if bytes(payload)[:6] in GIF_SIGNATURES
-            else [decode_image(payload)]
-        )
-        for k, fi in enumerate(range(0, len(frames), 2)):
-            if k >= 4:
-                break
-            fr = frames[fi]
-            out.append(
-                f"({i}, {fi}, {len(frames)}, {fr.shape[1]}, {fr.shape[0]}, "
-                f"{_sq(_hl.md5(encode_png(fr)).hexdigest())})"
-            )
-    return (
-        f"SELECT * FROM (VALUES {', '.join(out)}) "
-        "t(media_id, frame_index, n_frames, frame_w, frame_h, frame_md5)"
-    )
-
-
-@functools.lru_cache(maxsize=None)
-def _media_features_oracle_sql() -> str:
-    from pycorrector_spark.operators.multimodal import media_features, media_rows
-
-    values = ", ".join(
-        f"({i}, {_sq(mime)}, "
-        f"{_sq(','.join(repr(float(x)) for x in media_features(payload)))})"
-        for i, mime, _w, _h, payload in media_rows(64)
-    )
-    return f"SELECT * FROM (VALUES {values}) t(media_id, mime, features)"
 
 
 @functools.lru_cache(maxsize=None)
@@ -3938,10 +3746,6 @@ def oracle_sql() -> dict[str, str]:
         "qf_ccnet_buckets": _qf_ccnet_oracle_sql(),
         "qf_pipeline_pool": _pipeline_pool_oracle_sql(),
         "qf_pipeline_full": _pipeline_full_oracle_sql(),
-        "media_features": _media_features_oracle_sql(),
-        "media_resize": _media_resize_oracle_sql(),
-        "media_frames": _media_frames_oracle_sql(),
-        "media_audio": _media_audio_oracle_sql(),
         "qf_curation_e2e": _curation_e2e_oracle_sql(),
         "eval_f1": _eval_f1_oracle_sql(),
         "ann_lsh_topk": _ann_lsh_oracle_sql(),

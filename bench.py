@@ -91,7 +91,6 @@ def bench_queries():
         "qf_curation_e2e": q["qf_curation_e2e"],
         "qf_url_dedup": q["qf_url_dedup"],
         "qf_lm_ppl_klm": q["qf_lm_ppl_klm"],
-        "media_features": q["media_features"],
         "rel_bucketed_join": q["rel_bucketed_join"],
         "dedup_exact": q["dedup_exact"],
         "dedup_substr": q["dedup_substr"],
@@ -248,9 +247,9 @@ def run_suite(sf_dir: str, cpus: int, only: list = None) -> dict:
         "cpus": cpus,
         "n_docs": n_docs,
         # per-query throughput for document-table queries (docs/sec over
-        # the sf corpus); rel_*/ann_*/zh_*/en_*/media_*/stream_* read
-        # other tables (TPC-H, embeddings, sentence pools, fixture
-        # media), so a docs/s figure would be meaningless for them.
+        # the sf corpus); rel_*/ann_*/zh_*/en_*/stream_* read other
+        # tables (TPC-H, embeddings, sentence pools), so a docs/s
+        # figure would be meaningless for them.
         # NOTE: pool-text queries that remain (qf_lm_ppl*, qf_fix_encoding)
         # map every doc_id onto a finite sentence pool — one scored row
         # per document, so docs/s is rows-scored-per-second (comparable
@@ -260,7 +259,7 @@ def run_suite(sf_dir: str, cpus: int, only: list = None) -> dict:
             for name, sec in timings.items()
             if sec > 0
             and not name.startswith(
-                ("rel_", "ann_", "zh_", "en_", "media_", "stream_")
+                ("rel_", "ann_", "zh_", "en_", "stream_")
             )
         },
         # 2nd-fastest / fastest sample per query — ~1.0 means the minimum
@@ -373,7 +372,8 @@ def _eventlog_spark(cpus: int, name: str):
 def _task_histogram(evdir: str, job_group: str = None) -> dict:
     """max/p50 task duration of the heaviest stage, from TaskEnd events;
     with ``job_group``, only stages of jobs submitted under that
-    setJobGroup id are candidates. Removes the event-log dir afterwards."""
+    setJobGroup id are candidates, and a log with no job in that group
+    raises ValueError. Removes the event-log dir afterwards."""
     import glob
     import shutil
 
@@ -398,7 +398,11 @@ def _task_histogram(evdir: str, job_group: str = None) -> dict:
                 dur = info.get("Finish Time", 0) - info.get("Launch Time", 0)
                 stages.setdefault(ev.get("Stage ID"), []).append(dur)
     shutil.rmtree(evdir, ignore_errors=True)
-    if job_group and group_stages:
+    if job_group:
+        if not group_stages:
+            raise ValueError(
+                f"no job in the event log ran under job group {job_group!r}"
+            )
         # keep only stages submitted by the MEASURED jobs — otherwise the
         # heaviest-stage pick can land on a fixture-build/count stage and
         # the balance metric measures the wrong thing

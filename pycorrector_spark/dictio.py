@@ -235,7 +235,7 @@ def pinyin_reading_map() -> dict:
     This is the polyphone-correct stand-in for pypinyin's per-char
     readings (reference corrector.py:152-161): a polyphone keeps one
     entry PER reading instead of union-find-merging every co-listed
-    char into one giant class (the round-2 pinyin_class_map behavior,
+    char into one giant class (the round-2 union-find behavior,
     which over-admitted candidates through multi-hop chains like
     reading(A)~B, reading'(B)~C => A~C). Intersection over-admits only
     relative to lazy_pinyin's single most-common reading — strictly
@@ -247,45 +247,6 @@ def pinyin_reading_map() -> dict:
         for c in {head} | set(same) | set(diff):
             readings.setdefault(c, set()).add(i)
     return {c: frozenset(s) for c, s in readings.items()}
-
-
-@lru_cache(maxsize=None)
-def pinyin_class_map() -> dict:
-    """char -> toneless-pinyin equivalence-class representative, derived
-    from the public same_pinyin.txt by union-find (both the same-tone and
-    diff-tone columns mean 'same toneless reading', corrector.py:59-84).
-
-    This is the sandbox stand-in for pypinyin's lazy_pinyin in the
-    same-pinyin candidate filter (reference corrector.py:152-161): two
-    chars compare 'same pinyin' iff they share a class. Caveat, by
-    construction: a polyphone appearing under multiple key rows MERGES
-    its readings' classes, so the filter over-admits some candidates the
-    reference would drop — the LM re-rank still gates the final choice,
-    and coverage rises from the 113-char embedded table to ~3.3k chars.
-    Empty when the data file is absent."""
-    sp = load_same_pinyin(_p("same_pinyin.txt"))
-    parent = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a, b):
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # deterministic representative: smaller codepoint wins
-            if ra > rb:
-                ra, rb = rb, ra
-            parent[rb] = ra
-
-    for key, group in sp.items():
-        for c in group:
-            union(key, c)
-    return {c: find(c) for c in parent}
 
 
 @lru_cache(maxsize=None)

@@ -17,6 +17,8 @@ document is dropped by an earlier rule, so the expensive signals are null
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pandas as pd
 
@@ -88,17 +90,24 @@ def build_full_artifacts(cfg: PipelineConfig = DEFAULT_CONFIG) -> Artifacts:
     the exact composition the reference uses (corrector.py:124-140) — the
     English dict the real 30k-word en.json.gz, stopwords the real 1.4k
     list, and proper-noun correction runs against person+place+proper
-    names (~58k) with the 12k-char stroke table. Files absent -> graceful
-    fallback to the embedded toy dims (the result equals build_artifacts()
-    plus an empty proper corrector).
+    names (~58k) with the 12k-char stroke table. Files absent -> fallback
+    to the embedded toy dims (the result equals build_artifacts() plus an
+    empty proper corrector), announced by one UserWarning.
 
     Build cost is driver-side one-time (~7 s: SymSpell deletes index over
     30k words + 58k-name positional index); ships as one broadcast.
     """
-    from ..dictio import full_dims
+    from ..dictio import data_dir, full_dims
     from ..refimpl.proper import ProperCorrector
     from ..symspell import DeletesIndex
 
+    if data_dir() is None:
+        warnings.warn(
+            "reference dims not found: using the embedded toy dims; set "
+            "PYCORRECTOR_SPARK_DATA_DIR to the reference data directory",
+            UserWarning,
+            stacklevel=2,
+        )
     dims = full_dims()
     base = build_artifacts(cfg)
 
@@ -199,14 +208,13 @@ def make_workers(art: Artifacts):
         stopwords=art.stopwords,
         similar_chars=art.similar,
         ppl_threshold=art.cfg.ppl_rerank_threshold,
-        proper=getattr(art, "proper", None),
-        pinyin_classes=getattr(art, "pinyin_classes", None),
-        char_universe=getattr(art, "char_universe", None),
-        pinyin_readings=getattr(art, "pinyin_readings", None),
-        pinyin_canonical=getattr(art, "pinyin_canonical", None),
+        proper=art.proper,
+        pinyin_classes=art.pinyin_classes,
+        char_universe=art.char_universe,
+        pinyin_readings=art.pinyin_readings,
+        pinyin_canonical=art.pinyin_canonical,
     )
-    en = EnSpellCorrector(art.en_word_freq, art.en_confusion,
-                          index=getattr(art, "en_index", None))
+    en = EnSpellCorrector(art.en_word_freq, art.en_confusion, index=art.en_index)
     return zh, en
 
 

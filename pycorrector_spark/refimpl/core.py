@@ -33,13 +33,12 @@ choices so they agree with EACH OTHER exactly):
    gap. The detector keeps HMM=False for its OOV scan (an HMM-joined
    token is by construction OOV, which would double-flag the same span).
 3. The same-pinyin word set (reference corrector.py:152-161): with full
-   dims loaded, the filter uses toneless-reading equivalence CLASSES
-   union-found from the public same_pinyin table (~3.3k chars;
-   dictio.pinyin_class_map — polyphones over-merge their readings'
-   classes, documented there) and the real 3,502-char common set as the
-   replacement universe. pypinyin's per-char READINGS remain
-   unavailable, so the default embedded PINYIN_ZH path persists as the
-   fallback.
+   dims loaded, the filter uses per-char toneless-reading SETS from the
+   public same_pinyin table (~3.3k chars; dictio.pinyin_reading_map —
+   polyphones keep one entry per reading, no transitive merge) and the
+   real 3,502-char common set as the replacement universe. pypinyin's
+   per-char READINGS remain unavailable, so the default embedded
+   PINYIN_ZH path persists as the fallback.
 4. Proper-noun correction (refimpl/proper.py, reference
    proper_corrector.py) is opt-in: pass ``proper=ProperCorrector(names)``.
    The default stays None so golden labels are stable; with full dims,
@@ -245,8 +244,8 @@ class Corrector(Detector):
         #   no transitive merge); two chars share a pinyin iff their
         #   reading sets intersect
         # - pinyin_classes: char -> toneless-reading class representative
-        #   (dictio.pinyin_class_map union-find; round-2 behavior, kept
-        #   for comparability — polyphones over-merge, documented there)
+        #   (round-2 union-find over same_pinyin, kept for comparability;
+        #   no loader builds it any more — polyphones over-merge)
         # - neither: the embedded per-char pinyin strings (round-1)
         # - char_universe: replacement-char pool for the edit-distance-1
         #   scan — the reference uses common_char_set.txt's 3,502 chars

@@ -137,3 +137,16 @@ def test_full_artifacts_build_and_correct():
     # a clean sentence must come back untouched (the old over-wired
     # proper stage rewrote 老人 into a person name)
     assert zh.correct("少先队员应该为老人让座")["errors"] == []
+
+
+def test_toy_dims_fallback_warns(monkeypatch):
+    import pycorrector_spark.dictio as dictio
+    from pycorrector_spark.operators.score import build_full_artifacts
+
+    monkeypatch.setattr(dictio, "data_dir", lambda: None)
+    with pytest.warns(UserWarning, match="embedded toy dims") as rec:
+        build_full_artifacts()
+    assert len(rec) == 1
+    msg = str(rec[0].message)
+    assert "reference dims not found" in msg
+    assert "PYCORRECTOR_SPARK_DATA_DIR" in msg

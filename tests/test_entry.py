@@ -26,9 +26,8 @@ def test_entry_runs(spark):
 def test_oracle_keys_subset_of_queries():
     q = entry_mod.queries()
     o = entry_mod.oracle_sql()
-    assert set(o) <= set(q)
-    # SQL-expressible coverage: at least 2/3 of queries have oracles
-    assert len(o) >= (2 * len(q)) // 3
+    # every query has an oracle, and every oracle a query
+    assert set(o) == set(q)
 
 
 @pytest.mark.parametrize("name", sorted(entry_mod.queries()))

@@ -1,4 +1,4 @@
-"""Training-data operators: dedup / similarity / textstats / multimodal,
+"""Training-data operators: dedup / similarity / textstats,
 differential-tested against brute-force pandas/numpy on small frames.
 """
 
@@ -24,11 +24,6 @@ from pycorrector_spark.operators.textstats import (
     fingerprint_py,
     with_fingerprint,
     with_token_counts,
-)
-from pycorrector_spark.operators.multimodal import (
-    FEATURE_DIM,
-    extract_image_features,
-    make_media_table,
 )
 
 
@@ -209,57 +204,6 @@ def test_fingerprint_matches_python(spark, docs_pdf):
     got = {r["doc_id"]: r["fingerprint"] for r in with_fingerprint(df).collect()}
     for i, t in enumerate(sample["text"]):
         assert got[i] == fingerprint_py(t)
-
-
-# -- multimodal plumbing --
-
-def test_media_features_shape_and_determinism(spark):
-    feats = extract_image_features(make_media_table(spark, 16)).collect()
-    assert len(feats) == 16
-    for r in feats:
-        assert len(r["features"]) == FEATURE_DIM
-    again = extract_image_features(make_media_table(spark, 16)).collect()
-    a = {r["media_id"]: list(r["features"]) for r in feats}
-    b = {r["media_id"]: list(r["features"]) for r in again}
-    assert a == b
-
-
-def test_resize_real_decode_resample_reencode(spark):
-    """Round 5: resize_image decodes (PNG/GIF/JPEG), nearest-neighbor
-    resamples, and re-encodes as PNG inside the Arrow batch — the fake
-    path is gone from the image route."""
-    from pycorrector_spark.operators.multimodal import (
-        decode_image,
-        decode_png,
-        make_media_table,
-        media_rows,
-        resize_image,
-        resize_pixels,
-    )
-
-    out = resize_image(make_media_table(spark, 8), 32, 32).collect()
-    assert len(out) == 8
-    src = {i: payload for i, _m, _w, _h, payload in media_rows(8)}
-    for r in out:
-        assert (r["width"], r["height"]) == (32, 32)
-        px = decode_png(bytes(r["payload"]))  # output is a REAL PNG
-        assert px.shape[:2] == (32, 32)
-        # pixel-exact vs the serial reference resample of the source
-        want = resize_pixels(decode_image(src[r["media_id"]]), 32, 32)
-        assert np.array_equal(px, want)
-    # deterministic across runs
-    again = resize_image(make_media_table(spark, 8), 32, 32).collect()
-    assert {r["media_id"]: bytes(r["payload"]) for r in out} == \
-           {r["media_id"]: bytes(r["payload"]) for r in again}
-    # undecodable payloads raise loudly unless the disclosed fake is on
-    junk = spark.createDataFrame(
-        [(99, "audio/wav", 4, 4, bytearray(b"RIFFjunk"))],
-        "media_id long, mime string, width long, height long, payload binary",
-    )
-    with pytest.raises(Exception, match="codec"):
-        resize_image(junk, 8, 8).collect()
-    faked = resize_image(junk, 8, 8, deterministic_fake=True).collect()
-    assert len(faked[0]["payload"]) == 8 * 8 // 8
 
 
 def test_ivf_topk_recall_vs_exact(spark):
