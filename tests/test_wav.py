@@ -1,19 +1,12 @@
-"""WAV codec: RIFF/WAVE PCM decode — the fourth real multimodal codec
-(audio). Round trip vs the in-repo PCM16 writer plus format-tag and
-chunk-walking coverage."""
+"""WAV codec: RIFF/WAVE PCM decode. Round trip vs the in-repo PCM16
+writer plus format-tag and chunk-walking coverage."""
 
 import struct
 
 import numpy as np
 import pytest
 
-from pycorrector_spark.operators.multimodal import (
-    audio_features,
-    audio_rows,
-    decode_wav,
-    encode_wav,
-    media_features,
-)
+from pycorrector_spark.operators.multimodal import decode_wav, encode_wav
 
 
 def test_pcm16_roundtrip_mono_and_stereo():
@@ -62,15 +55,6 @@ def test_compressed_tag_raises():
         decode_wav(b"nonsense bytes here maybe")
 
 
-def test_media_features_routes_wav_for_real():
-    _i, _m, rate, payload = audio_rows(4)[1]
-    feats = media_features(payload, deterministic_fake=False)
-    assert feats[1] == float(rate)
-    samples, _ = decode_wav(payload)
-    assert feats[0] == float(samples.shape[0])
-    assert np.array_equal(feats, audio_features(payload))
-
-
 def test_malformed_fmt_raises_valueerror():
     """0-channel or truncated fmt chunks are data corruption, not codec
     gaps — the ValueError contract the other codecs enforce."""
@@ -87,18 +71,3 @@ def test_malformed_fmt_raises_valueerror():
     with pytest.raises(ValueError):
         decode_wav(data2)
 
-
-def test_codec_gap_falls_back_to_fake_when_allowed():
-    """A recognized RIFF/WAVE container with a compressed codec (ADPCM,
-    mp3) is a codec GAP: deterministic_fake=True must produce the seeded
-    fake vector instead of killing the batch; fake mode off still raises."""
-    from pycorrector_spark.operators.multimodal import _fake_features
-
-    fmt = struct.pack("<HHIIHH", 2, 1, 16000, 2000, 1, 4)  # ADPCM tag
-    data = (b"RIFF" + struct.pack("<I", 100) + b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", 4) + b"\x00" * 4)
-    with pytest.raises(NotImplementedError):
-        media_features(data, deterministic_fake=False)
-    feats = media_features(data, deterministic_fake=True)
-    assert np.array_equal(feats, _fake_features(data))
