@@ -9,10 +9,12 @@ heuristic quality, LM perplexity, detected-error density.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
+import numpy as np
+
 from .textops import MAX_LEN as _TEXTOPS_MAX_LEN
 from .textops import MIN_LEN as _TEXTOPS_MIN_LEN
-
-from dataclasses import dataclass, field
 
 
 @dataclass(frozen=True)
@@ -70,8 +72,8 @@ def keep_decision(
 ):
     """Frozen rule -> (keep: bool, drop_reason: str). First failing rule wins.
 
-    Scalar form; the score stage (operators/score.py process_batch)
-    applies it per row to the signals from textops.signals_frame.
+    Scalar form (the serial oracle, refimpl/golden.py); the score stage
+    applies the same rule to whole columns with ``keep_decisions``.
     """
     if not len_ok:
         return False, "len"
@@ -86,3 +88,21 @@ def keep_decision(
     if error_density > cfg.max_error_density:
         return False, "errors"
     return True, ""
+
+
+def keep_decisions(len_ok, symbol_ratio, rep_ratio, lang_id, ppl, error_density,
+                   cfg: PipelineConfig = DEFAULT_CONFIG):
+    """Column form of ``keep_decision``: numpy arrays in, (keep bool array,
+    drop_reason list) out. One ``np.select`` over the same rules in the
+    same first-failing order; a NaN ppl (no ppl computed) counts as 0.0."""
+    ppl = np.asarray(ppl, dtype=np.float64)
+    failing = [
+        ~np.asarray(len_ok, dtype=bool),
+        np.asarray(symbol_ratio) > cfg.max_symbol_ratio,
+        np.asarray(rep_ratio) > cfg.max_rep_ratio,
+        ~np.isin(np.asarray(lang_id, dtype=object), cfg.allowed_langs),
+        np.where(np.isnan(ppl), 0.0, ppl) > cfg.max_ppl,
+        np.asarray(error_density) > cfg.max_error_density,
+    ]
+    reasons = np.select(failing, DROP_REASONS, default="")
+    return reasons == "", reasons.tolist()

@@ -285,34 +285,67 @@ class CharNgramLM:
         Returns float64 array of len(sentence), or None when the sentence is
         too short for both n=2 and n=3 windows (len < 2).
         """
-        ids = self.encode(sentence)
-        L = len(ids)
-        per_n = []
-        if L >= 2:
-            u = self.uni(ids)
-            c2 = self.cond2(ids[:-1], ids[1:])          # cond2[i] = P(s[i+1]|s[i])
-            w2 = u[:-1] + c2                             # score of s[i:i+2]
-            per_n.append(self._pad_and_average(w2, 2, L))
-        if L >= 3:
-            c3 = self.cond3(ids[:-2], ids[1:-1], ids[2:])  # P(s[i+2]|s[i],s[i+1])
-            w3 = u[:-2] + c2[:-1] + c3                      # score of s[i:i+3]
-            per_n.append(self._pad_and_average(w3, 3, L))
-        if not per_n:
-            return None
-        return np.average(np.array(per_n), axis=0)
+        return self.window_avg_scores_batch([sentence])[0]
+
+    def window_avg_scores_batch(self, sentences):
+        """``window_avg_scores`` of every sentence, from ONE flat probe pass.
+
+        One cond2 and one cond3 probe cover the windows of all sentences
+        at once over their concatenated ids; windows that would cross a
+        sentence boundary are skipped. The probes are position-wise, so
+        every kept window scores exactly as it does alone. The edge-pad +
+        sliding mean then runs as one row-wise cumsum per group of
+        similar-length sentences (same bit length; length 2, which has no
+        3-gram window, apart): a row's prefix sums do not depend on the
+        entries after it, so the first len(s) floats of each row are
+        bitwise the one-sentence result.
+        """
+        out = [None] * len(sentences)
+        # group key: bit length of len, with len 2 (no 3-gram window) apart
+        groups = {}
+        for i, s in enumerate(sentences):
+            if len(s) >= 2:
+                groups.setdefault(len(s).bit_length() if len(s) >= 3 else 0, []).append(i)
+        if not groups:
+            return out
+        lens = np.array([len(s) for s in sentences], dtype=np.int64)
+        ids = self.encode("".join(sentences))
+        starts = np.cumsum(lens) - lens
+        # chars from each position to the end of its sentence, itself included
+        left = np.repeat(starts + lens, lens) - np.arange(len(ids))
+        u = self.uni(ids)
+        c2 = np.empty(len(ids))
+        w2 = np.empty(len(ids))
+        w3 = np.empty(len(ids))
+        p2 = np.nonzero(left >= 2)[0]
+        c2[p2] = self.cond2(ids[p2], ids[p2 + 1])     # P(s[i+1]|s[i])
+        w2[p2] = u[p2] + c2[p2]                      # score of s[i:i+2]
+        p3 = np.nonzero(left >= 3)[0]
+        w3[p3] = u[p3] + c2[p3] + self.cond3(ids[p3], ids[p3 + 1], ids[p3 + 2])
+        for key, rows in groups.items():
+            avg = self._pad_and_average(w2, 2, starts[rows], lens[rows])
+            if key:
+                avg = (avg + self._pad_and_average(w3, 3, starts[rows], lens[rows])) / 2.0
+            for k, i in enumerate(rows):
+                out[i] = avg[k, : len(sentences[i])]
+        return out
 
     @staticmethod
-    def _pad_and_average(scores: np.ndarray, n: int, sent_len: int) -> np.ndarray:
-        """Edge-pad by repeating first/last score (n-1 times each side),
-        then mean over sliding windows of size n — detector.py:452-456."""
-        padded = np.concatenate((
-            np.repeat(scores[0], n - 1),
-            scores,
-            np.repeat(scores[-1], n - 1),
-        ))
-        # windows i..i+n-1 for i in range(sent_len); all full by construction
-        csum = np.concatenate(([0.0], np.cumsum(padded)))
-        return (csum[n:n + sent_len] - csum[:sent_len]) / float(n)
+    def _pad_and_average(scores: np.ndarray, n: int, starts, lens) -> np.ndarray:
+        """Edge-pad each sentence's n-gram scores by repeating its first/last
+        score (n-1 times each side), then mean over sliding windows of size
+        n — detector.py:452-456. Sentence k's scores are
+        ``scores[starts[k]:starts[k]+lens[k]-n+1]``; row k of the result
+        holds its lens[k] means first (the rest of the row is filler)."""
+        n_win = lens - n + 1
+        width = int(n_win.max()) + 2 * (n - 1)
+        # edge padding = clamping each row's gather index into its windows
+        j = np.arange(width) - (n - 1)
+        take = starts[:, None] + np.clip(j[None, :], 0, (n_win - 1)[:, None])
+        csum = np.zeros((len(starts), width + 1))
+        np.cumsum(scores[take], axis=1, out=csum[:, 1:])
+        L = int(lens.max())
+        return (csum[:, n:n + L] - csum[:, :L]) / float(n)
 
 
 def mad_outlier_indices(scores: np.ndarray, ratio: float = 0.6745, threshold: float = 2.0):

@@ -146,15 +146,29 @@ class Detector:
 
     def _detect(self, sentence: str, start_idx: int = 0):
         """Return [[word, begin, end, type], ...] for one fragment."""
-        return self._detect_with_proper(sentence, start_idx)[0]
+        return self._detect_fragments([(sentence, start_idx)])[0][0]
 
-    def _detect_with_proper(self, sentence: str, start_idx: int = 0):
+    def _detect_fragments(self, frags):
+        """_detect_with_proper of every (fragment, start) pair, with the LM
+        windows of all fragments scored in one probe pass (the reference
+        path, detect() and correct(), passes one fragment at a time)."""
+        if self.enable_char_error:
+            scores = self.lm.window_avg_scores_batch([s for s, _ in frags])
+        else:
+            scores = [None] * len(frags)
+        return [
+            self._detect_with_proper(s, i, sc) for (s, i), sc in zip(frags, scores)
+        ]
+
+    def _detect_with_proper(self, sentence: str, start_idx: int, sent_scores):
         """([[word, begin, end, type], ...], {(word, begin): correction})
-        for one fragment.
+        for one fragment; ``sent_scores`` is its ``lm.window_avg_scores``
+        (None when char errors are off).
 
-        Stage order and containment dedup mirror detector.py:396-478; the
-        proper_details map mirrors the (cur, correct, begin) triples the
-        reference corrector consumes (detector.py:419-424).
+        A pure function of (sentence, start_idx). Stage order and
+        containment dedup mirror detector.py:396-478; the proper_details
+        map mirrors the (cur, correct, begin) triples the reference
+        corrector consumes (detector.py:419-424).
         """
         maybe_errors = []
         proper_details = {}
@@ -193,16 +207,14 @@ class Detector:
                 _add_maybe_error_item([token, b + start_idx, e + start_idx, ErrorType.word], maybe_errors)
 
         # 4. LM char outliers (2/3-gram window average + MAD)
-        if self.enable_char_error:
-            sent_scores = self.lm.window_avg_scores(sentence)
-            if sent_scores is not None:
-                for i in mad_outlier_indices(sent_scores):
-                    token = sentence[i]
-                    if is_filter_token(token):
-                        continue
-                    if token in self.stopwords:
-                        continue
-                    _add_maybe_error_item([token, i + start_idx, i + start_idx + 1, ErrorType.char], maybe_errors)
+        if sent_scores is not None:
+            for i in mad_outlier_indices(sent_scores):
+                token = sentence[i]
+                if is_filter_token(token):
+                    continue
+                if token in self.stopwords:
+                    continue
+                _add_maybe_error_item([token, i + start_idx, i + start_idx + 1, ErrorType.char], maybe_errors)
 
         return sorted(maybe_errors, key=lambda k: k[1]), proper_details
 
@@ -380,14 +392,44 @@ class Corrector(Detector):
         return result
 
     def correct(self, sentence: str, include_symbol: bool = True, num_fragment: int = 1, threshold: float = None):
-        if threshold is None:
-            threshold = self.PPL_THRESHOLD
         """Full correction; NOTE: no uniform() here (reference asymmetry,
         corrector.py:285 vs detector.py:490)."""
+        frags = split_sentences_by_symbol(sentence, include_symbol=include_symbol)
+        found = [self._detect_fragments([f])[0] for f in frags]
+        return self._correct_fragments(sentence, frags, found, num_fragment, threshold)
+
+    def detect_and_correct(self, text: str):
+        """``(detect(text), correct(text))`` with one detection per fragment.
+
+        correct() detects the fragments of ``text`` and detect() those of
+        ``uniform(text)``. _detect_with_proper is pure in (fragment, start),
+        so the detect side reuses the correct side's result wherever the
+        pair is unchanged and only detects the fragments uniform() changed
+        (full-width forms, uppercase Latin, a length-changing lower()).
+        Each side's LM windows are scored in one probe pass.
+        """
+        frags = split_sentences_by_symbol(text)
+        detected = self._detect_fragments(frags)
+        res = self._correct_fragments(text, frags, detected, 1, None)
+        found = dict(zip(frags, detected))
+        dets = []
+        if text.strip():
+            ufrags = split_sentences_by_symbol(uniform(text))
+            todo = [f for f in ufrags if f not in found]
+            found.update(zip(todo, self._detect_fragments(todo)))
+            for f in ufrags:
+                dets += found[f][0]
+        return dets, res
+
+    def _correct_fragments(self, sentence: str, frags, found, num_fragment: int, threshold: float):
+        """Candidate generation + LM re-rank + splice over the (fragment,
+        start) split of ``sentence``; ``found`` holds each fragment's
+        _detect_with_proper result (corrector.py:285-318)."""
+        if threshold is None:
+            threshold = self.PPL_THRESHOLD
         corrected_sentence = ""
         details = []
-        for sent, idx in split_sentences_by_symbol(sentence, include_symbol=include_symbol):
-            maybe_errors, proper_details = self._detect_with_proper(sent, idx)
+        for (sent, idx), (maybe_errors, proper_details) in zip(frags, found):
             for cur_item, begin_idx, end_idx, err_type in maybe_errors:
                 before_sent = sent[: (begin_idx - idx)]
                 after_sent = sent[(end_idx - idx):]

@@ -292,25 +292,64 @@ def test_word_ngram_hash_count(text, n):
     assert len(set(grams)) <= max(1, expect)
 
 
-@given(
-    st.lists(st.floats(min_value=-1.0, max_value=1.0, allow_nan=False,
-                       width=32),
-             min_size=1, max_size=400),
-    st.sampled_from([1, 2]),
-    st.sampled_from([8000, 16000, 44100]),
-)
-@settings(max_examples=60, deadline=None)
-def test_wav_roundtrip_property(vals, ch, rate):
-    """Any float signal in [-1,1] survives encode_wav/decode_wav to
-    within PCM16 quantization, preserving shape and rate."""
-    from pycorrector_spark.operators.multimodal import decode_wav, encode_wav
+# ---------------------------------------------------------------------------
+# batched LM window scorer vs the one-sentence scorer
+# ---------------------------------------------------------------------------
 
-    n = max(1, len(vals) // ch)
-    flat = (vals * (ch * n))[: n * ch]  # tile the draw out to n*ch values
-    s = np.asarray(flat, dtype=np.float64).reshape(n, ch)
-    out, r = decode_wav(encode_wav(s, rate))
-    assert r == rate and out.shape == (n, ch)
-    assert np.abs(out - s).max() <= 2.0 / 32768
+
+def _window_avg_scores_one(lm, sentence):
+    """Reference one-sentence window scorer (detector.py:441-461): its own
+    probes, a 1-D edge pad + cumsum per n, and np.average over the n's."""
+    def pad_and_average(scores, n, sent_len):
+        padded = np.concatenate((
+            np.repeat(scores[0], n - 1),
+            scores,
+            np.repeat(scores[-1], n - 1),
+        ))
+        csum = np.concatenate(([0.0], np.cumsum(padded)))
+        return (csum[n:n + sent_len] - csum[:sent_len]) / float(n)
+
+    ids = lm.encode(sentence)
+    L = len(ids)
+    per_n = []
+    if L >= 2:
+        u = lm.uni(ids)
+        c2 = lm.cond2(ids[:-1], ids[1:])
+        w2 = u[:-1] + c2
+        per_n.append(pad_and_average(w2, 2, L))
+    if L >= 3:
+        c3 = lm.cond3(ids[:-2], ids[1:-1], ids[2:])
+        w3 = u[:-2] + c2[:-1] + c3
+        per_n.append(pad_and_average(w3, 3, L))
+    if not per_n:
+        return None
+    return np.average(np.array(per_n), axis=0)
+
+
+# in-vocabulary CJK, ASCII and punctuation, plus chars the LM has never
+# seen (runes, an emoji, a rare CJK extension char)
+WINDOW_CHARS = list("少先队员因该为老人让座一只小渔船浮在平静的河面上") + list("ab1 ，。") + [
+    "ᚠ", "ᚢ", "😀", "𠀀",
+]
+FRAGMENT = st.one_of(
+    st.text(alphabet=st.sampled_from(WINDOW_CHARS), max_size=3),
+    st.text(alphabet=st.sampled_from(WINDOW_CHARS), max_size=40),
+)
+
+
+@given(st.lists(FRAGMENT, max_size=12))
+@settings(max_examples=300, deadline=None)
+def test_window_avg_scores_batch_bitwise_matches_one_sentence(frags):
+    lm = _score_workers()[0].lm
+    got = lm.window_avg_scores_batch(frags)
+    assert len(got) == len(frags)
+    for frag, g in zip(frags, got):
+        want = _window_avg_scores_one(lm, frag)
+        if want is None:
+            assert g is None and len(frag) < 2
+        else:
+            assert g.dtype == want.dtype and g.shape == want.shape
+            assert g.tobytes() == want.tobytes(), frag
 
 
 # ---------------------------------------------------------------------------

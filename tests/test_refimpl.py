@@ -96,6 +96,36 @@ def test_correct_no_uniform_asymmetry(zh):
     assert res["target"].startswith("ＡＢＣ")
 
 
+DETECT_AND_CORRECT_TEXTS = [
+    "你好，少先队员因该为老人让座！（化学成份）测量。",   # full-width ，！（）
+    "ＡＢ１少先队员因该为老人让座",                        # full-width letters/digits
+    "少先队员USB因该为老人让座，GPU测量",                  # uppercase Latin
+    "İ少先队员因该为老人让座",                              # lower() changes length
+    "少先队员İ因该为老人让座。İİ一只小渔船浮在平净的河面上",
+    "",
+    " \t\n ",
+    "，。！？@#%",
+]
+
+
+def _zh_texts_of_make_docs():
+    from pycorrector_spark.fixtures import make_docs
+
+    docs = make_docs(200)
+    return docs.loc[docs["lang"] == "zh", "text"].tolist()
+
+
+@pytest.mark.parametrize("workers", ["zh", "full_workers"])
+def test_detect_and_correct_matches_separate_calls(workers, request):
+    zh = request.getfixturevalue(workers)
+    if workers == "full_workers":
+        zh = zh[0]
+    texts = DETECT_AND_CORRECT_TEXTS + _zh_texts_of_make_docs()
+    assert len(texts) > 100
+    for t in texts:
+        assert zh.detect_and_correct(t) == (zh.detect(t), zh.correct(t)), t
+
+
 # -- forced confusion corrector --
 
 def test_confusion_corrector_forced_replace():
