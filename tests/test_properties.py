@@ -292,6 +292,27 @@ def test_word_ngram_hash_count(text, n):
     assert len(set(grams)) <= max(1, expect)
 
 
+@given(
+    st.lists(st.floats(min_value=-1.0, max_value=1.0, allow_nan=False,
+                       width=32),
+             min_size=1, max_size=400),
+    st.sampled_from([1, 2]),
+    st.sampled_from([8000, 16000, 44100]),
+)
+@settings(max_examples=60, deadline=None)
+def test_wav_roundtrip_property(vals, ch, rate):
+    """Any float signal in [-1,1] survives encode_wav/decode_wav to
+    within PCM16 quantization, preserving shape and rate."""
+    from pycorrector_spark.operators.multimodal import decode_wav, encode_wav
+
+    n = max(1, len(vals) // ch)
+    flat = (vals * (ch * n))[: n * ch]  # tile the draw out to n*ch values
+    s = np.asarray(flat, dtype=np.float64).reshape(n, ch)
+    out, r = decode_wav(encode_wav(s, rate))
+    assert r == rate and out.shape == (n, ch)
+    assert np.abs(out - s).max() <= 2.0 / 32768
+
+
 # ---------------------------------------------------------------------------
 # batched LM window scorer vs the one-sentence scorer
 # ---------------------------------------------------------------------------
