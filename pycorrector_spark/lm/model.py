@@ -353,15 +353,46 @@ def mad_outlier_indices(scores: np.ndarray, ratio: float = 0.6745, threshold: fl
 
     Flags i where ratio*|s_i - median|/MAD > threshold AND s_i < median.
     """
-    scores = np.asarray(scores, dtype=np.float64)
-    median = np.median(scores)
-    margin = np.abs(scores - median)
-    mad = np.median(margin)
-    if mad == 0:
-        return []
-    y = ratio * margin / mad
-    idx = np.where((y > threshold) & (scores < median))[0]
-    return [int(i) for i in idx]
+    return mad_outlier_indices_batch([scores], ratio, threshold)[0]
+
+
+def _row_medians(sorted_rows: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """Median of the first n[k] entries of each ascending row k (n >= 1):
+    the middle element for odd n, the mean of the two middle ones for even
+    n — the elements and the arithmetic np.median uses, so bitwise equal."""
+    rows = np.arange(len(n))
+    lo = sorted_rows[rows, (n - 1) // 2]
+    hi = sorted_rows[rows, n // 2]
+    return np.where(n % 2 == 1, lo, (lo + hi) / 2.0)
+
+
+def mad_outlier_indices_batch(rows, ratio: float = 0.6745, threshold: float = 2.0):
+    """``mad_outlier_indices`` of every row of finite scores, in one pass.
+
+    Rows are padded with +inf to a matrix and sorted once for the medians
+    and once for the MAD; padding sorts last, so the middle elements of a
+    row's first n entries are its own. A None or empty row has no
+    outliers, as has a row whose MAD is 0.
+    """
+    out = [[] for _ in rows]
+    live = [k for k, r in enumerate(rows) if r is not None and len(r)]
+    if not live:
+        return out
+    n = np.array([len(rows[k]) for k in live], dtype=np.int64)
+    scores = np.full((len(live), int(n.max())), np.inf)
+    for j, k in enumerate(live):
+        scores[j, : n[j]] = rows[k]
+    median = _row_medians(np.sort(scores, axis=1), n)
+    margin = np.abs(scores - median[:, None])
+    mad = _row_medians(np.sort(margin, axis=1), n)
+    ok = mad != 0
+    y = ratio * margin / np.where(ok, mad, 1.0)[:, None]
+    inside = np.arange(scores.shape[1])[None, :] < n[:, None]
+    flag = (y > threshold) & (scores < median[:, None]) & inside & ok[:, None]
+    rr, cc = np.nonzero(flag)
+    for j, i in zip(rr.tolist(), cc.tolist()):
+        out[live[j]].append(i)
+    return out
 
 
 def stddev_outlier_indices(scores: np.ndarray, n_sigma: float = 2.0):

@@ -8,9 +8,14 @@ per-Python-worker singleton before the first batch (the reference's lazy
 executors). Document ppl is one flat LM probe pass over the batch. A zh
 document runs detection once per fragment (``Corrector.detect_and_correct``
 shares it between the detect and correct outputs), with the LM windows of
-all its fragments scored in one probe pass; only candidate generation and
-splicing stay per-row Python. The keep/drop decision is one vectorized
-``np.select`` over the batch.
+all its fragments scored in one probe pass and their MAD outlier tests run
+in one more; only candidate generation and splicing stay per-row Python.
+The keep/drop decision is one vectorized ``np.select`` over the batch.
+
+Task end: the stage drops the worker's cached zipimporters when a task
+finishes, so the next task's ``importlib.invalidate_caches()`` (pyspark
+worker setup) does not re-read pyspark.zip and the spark-core jar once per
+cached finder (``_release_zip_finders``).
 
 Cheap-gate pushdown: rows that already failed the codegen'd heuristics
 (len/symbol/repetition/lang) skip the LM + correction entirely — the
@@ -20,7 +25,9 @@ document is dropped by an earlier rule, so the expensive signals are null
 
 from __future__ import annotations
 
+import sys
 import warnings
+import zipimport
 
 import numpy as np
 import pandas as pd
@@ -381,9 +388,30 @@ def make_score_stage(bc, input_fields):
 
     def fn(iterator):
         art, zh, en = _get_workers(bc)
-        for pdf in iterator:
-            if dropped:
-                pdf = pdf.drop(columns=dropped, errors="ignore")
-            yield process_batch(pdf, zh, en, art.cfg)
+        try:
+            for pdf in iterator:
+                if dropped:
+                    pdf = pdf.drop(columns=dropped, errors="ignore")
+                yield process_batch(pdf, zh, en, art.cfg)
+        finally:
+            _release_zip_finders()
 
     return fn, schema
+
+
+def _release_zip_finders():
+    """Drop every zipimporter from ``sys.path_importer_cache``.
+
+    A reused Python worker starts each task with
+    ``importlib.invalidate_caches()`` (pyspark ``setup_spark_files``). On
+    CPython < 3.13 that re-reads the whole archive directory once per
+    cached zipimporter, eagerly: each worker caches ~16 of them (pyspark.zip,
+    the spark-core jar, py4j), 0.2-0.4 s per task. With none cached, the
+    next task's call has nothing to re-read. A later import from a zip
+    builds a fresh finder from ``zipimport._zip_directory_cache``, which is
+    left alone, so the rebuild does not read the archive either.
+    """
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)

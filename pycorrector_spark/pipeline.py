@@ -8,13 +8,18 @@
          detect / correct, scrub, keep/drop + drop_reason
       -> sinks: docs_out parquet, audit parquet (resume)
 
-Task count: every Python task pays pyspark's per-task worker setup
-(``worker_util.setup_spark_files`` re-scans pyspark.zip once per cached
-zipimporter) before it scores a row: about 0.27 core-seconds per task on
-a 4-vCPU Xeon host. The score stage therefore runs one task per core
-(``defaultParallelism``). At 32 tasks on those 4 cores that setup was
-most of the job; at 4 tasks perfbench's end-to-end docs/s rose 2.6x on
-web_en and 2.2x on zh_crawl.
+Task count: every Python task pays pyspark's per-task worker setup before
+it scores a row. Its cost is ``importlib.invalidate_caches()`` in
+``worker_util.setup_spark_files``: on CPython < 3.13 it re-reads the
+archive directory of every cached zipimporter, eagerly, and a reused
+worker caches ~16 (12 on pyspark.zip at ~11 ms each, 2 on the spark-core
+jar at ~47 ms each, 2 on py4j), 0.18-0.38 s per task on a 4-vCPU Xeon
+host. The score stage runs one task per core (``defaultParallelism``): at
+32 tasks on those 4 cores that setup was most of the job, and at 4 tasks
+perfbench's end-to-end docs/s rose 2.6x on web_en and 2.2x on zh_crawl.
+It also drops the cached zipimporters when a task ends
+(``operators.score._release_zip_finders``), so the next task on that
+worker has no archive to re-read.
 
 Scale notes (100 TB / 1000 executors):
 - The pipeline is stateless per document: the only shuffle is the initial

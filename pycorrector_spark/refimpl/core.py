@@ -70,7 +70,7 @@ from ..textops import (
     split_sentences_by_symbol,
     uniform,
 )
-from ..lm.model import CharNgramLM, mad_outlier_indices
+from ..lm.model import CharNgramLM, mad_outlier_indices_batch
 
 
 class ErrorType:
@@ -150,20 +150,23 @@ class Detector:
 
     def _detect_fragments(self, frags):
         """_detect_with_proper of every (fragment, start) pair, with the LM
-        windows of all fragments scored in one probe pass (the reference
-        path, detect() and correct(), passes one fragment at a time)."""
+        windows of all fragments scored in one probe pass and their MAD
+        outlier tests run in one pass (the reference path, detect() and
+        correct(), passes one fragment at a time)."""
         if self.enable_char_error:
-            scores = self.lm.window_avg_scores_batch([s for s, _ in frags])
+            outliers = mad_outlier_indices_batch(
+                self.lm.window_avg_scores_batch([s for s, _ in frags])
+            )
         else:
-            scores = [None] * len(frags)
+            outliers = [[]] * len(frags)
         return [
-            self._detect_with_proper(s, i, sc) for (s, i), sc in zip(frags, scores)
+            self._detect_with_proper(s, i, out) for (s, i), out in zip(frags, outliers)
         ]
 
-    def _detect_with_proper(self, sentence: str, start_idx: int, sent_scores):
+    def _detect_with_proper(self, sentence: str, start_idx: int, outliers):
         """([[word, begin, end, type], ...], {(word, begin): correction})
-        for one fragment; ``sent_scores`` is its ``lm.window_avg_scores``
-        (None when char errors are off).
+        for one fragment; ``outliers`` are the positions the MAD test flags
+        in its ``lm.window_avg_scores`` (empty when char errors are off).
 
         A pure function of (sentence, start_idx). Stage order and
         containment dedup mirror detector.py:396-478; the proper_details
@@ -207,14 +210,13 @@ class Detector:
                 _add_maybe_error_item([token, b + start_idx, e + start_idx, ErrorType.word], maybe_errors)
 
         # 4. LM char outliers (2/3-gram window average + MAD)
-        if sent_scores is not None:
-            for i in mad_outlier_indices(sent_scores):
-                token = sentence[i]
-                if is_filter_token(token):
-                    continue
-                if token in self.stopwords:
-                    continue
-                _add_maybe_error_item([token, i + start_idx, i + start_idx + 1, ErrorType.char], maybe_errors)
+        for i in outliers:
+            token = sentence[i]
+            if is_filter_token(token):
+                continue
+            if token in self.stopwords:
+                continue
+            _add_maybe_error_item([token, i + start_idx, i + start_idx + 1, ErrorType.char], maybe_errors)
 
         return sorted(maybe_errors, key=lambda k: k[1]), proper_details
 

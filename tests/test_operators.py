@@ -517,3 +517,57 @@ def test_connected_components_nonconvergence_raises(spark):
     # and with the default budget the same graph converges fine
     got = {r["node"]: r["rep"] for r in connected_components(df).collect()}
     assert set(got.values()) == {0}
+
+
+def test_release_zip_finders_stops_archive_rereads(tmp_path, monkeypatch):
+    """After a score task releases the cached zipimporters,
+    importlib.invalidate_caches() reads no archive directory, and a later
+    import from the zip still works without reading it either."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from pycorrector_spark.operators.score import _release_zip_finders
+
+    archive = str(tmp_path / "zpkg.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("zpkg/__init__.py", "")
+        zf.writestr("zpkg/a.py", "A = 1\n")
+        zf.writestr("zpkg/b.py", "B = 2\n")
+
+    reads = []
+    real_read = zipimport._read_directory
+
+    def counting_read(path):
+        reads.append(path)
+        return real_read(path)
+
+    sys.path.insert(0, archive)
+    try:
+        import zpkg.a
+
+        assert zpkg.a.A == 1
+        monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+        importlib.invalidate_caches()
+        assert len(reads) >= 1
+
+        _release_zip_finders()
+        assert not any(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()
+        )
+        reads.clear()
+        importlib.invalidate_caches()
+        assert reads == []
+
+        import zpkg.b
+
+        assert zpkg.b.B == 2
+        assert reads == []
+    finally:
+        sys.path.remove(archive)
+        for name in ("zpkg", "zpkg.a", "zpkg.b"):
+            sys.modules.pop(name, None)
+        for path in [p for p in sys.path_importer_cache if p.startswith(archive)]:
+            del sys.path_importer_cache[path]

@@ -292,25 +292,55 @@ def test_word_ngram_hash_count(text, n):
     assert len(set(grams)) <= max(1, expect)
 
 
-@given(
-    st.lists(st.floats(min_value=-1.0, max_value=1.0, allow_nan=False,
-                       width=32),
-             min_size=1, max_size=400),
-    st.sampled_from([1, 2]),
-    st.sampled_from([8000, 16000, 44100]),
-)
-@settings(max_examples=60, deadline=None)
-def test_wav_roundtrip_property(vals, ch, rate):
-    """Any float signal in [-1,1] survives encode_wav/decode_wav to
-    within PCM16 quantization, preserving shape and rate."""
-    from pycorrector_spark.operators.multimodal import decode_wav, encode_wav
+# ---------------------------------------------------------------------------
+# batched MAD outlier test vs the one-row test
+# ---------------------------------------------------------------------------
 
-    n = max(1, len(vals) // ch)
-    flat = (vals * (ch * n))[: n * ch]  # tile the draw out to n*ch values
-    s = np.asarray(flat, dtype=np.float64).reshape(n, ch)
-    out, r = decode_wav(encode_wav(s, rate))
-    assert r == rate and out.shape == (n, ch)
-    assert np.abs(out - s).max() <= 2.0 / 32768
+
+def _mad_outlier_indices_one(scores, ratio=0.6745, threshold=2.0):
+    """Reference one-row MAD test (detector.py:330-355), two np.median
+    calls per row; a None row (too short to score) has no outliers."""
+    if scores is None:
+        return []
+    scores = np.asarray(scores, dtype=np.float64)
+    median = np.median(scores)
+    margin = np.abs(scores - median)
+    mad = np.median(margin)
+    if mad == 0:
+        return []
+    y = ratio * margin / mad
+    idx = np.where((y > threshold) & (scores < median))[0]
+    return [int(i) for i in idx]
+
+
+# few distinct values, so ties and constant rows are common, plus
+# LOG10_EPS and arbitrary finite floats
+MAD_VALUE = st.one_of(
+    st.sampled_from([-99.0, -5.0, -4.5, -4.0, -3.0, -2.5, 0.0]),
+    st.floats(min_value=-100.0, max_value=100.0, allow_nan=False),
+)
+MAD_ROW = st.one_of(
+    st.none(),
+    st.lists(MAD_VALUE, max_size=2),
+    st.lists(MAD_VALUE, max_size=40),
+    st.builds(lambda v, n: [v] * n, MAD_VALUE, st.integers(0, 40)),
+)
+
+
+@given(st.lists(MAD_ROW, max_size=12))
+@settings(max_examples=400, deadline=None)
+def test_mad_outlier_indices_batch_matches_one_row(rows):
+    import warnings
+
+    from pycorrector_spark.lm.model import mad_outlier_indices_batch
+
+    with warnings.catch_warnings():
+        # np.median of an empty row warns and returns nan; a subnormal MAD
+        # overflows y to inf (on both sides alike)
+        warnings.simplefilter("ignore", RuntimeWarning)
+        got = mad_outlier_indices_batch([None if r is None else np.array(r) for r in rows])
+        want = [_mad_outlier_indices_one(r) for r in rows]
+    assert got == want, rows
 
 
 # ---------------------------------------------------------------------------
