@@ -460,9 +460,8 @@ def q_dedup_minhash(spark, sf_dir):
     exact). Docs with < k words have no signature and are dropped — the
     oracle's inner join mirrors the drop. The banded LSH candidate join +
     exact-Jaccard verify built on these signatures (minhash_dedup_pairs)
-    is exercised in tests/test_operators.py and bench.py over the real
-    corpus (its band keys use Spark's xxhash64, which no SQL oracle can
-    recompute)."""
+    is exercised in tests/test_operators.py (its band keys use Spark's
+    xxhash64, which no SQL oracle can recompute)."""
     from pycorrector_spark.fixtures import MINHASH_POOL
     from pycorrector_spark.operators.dedup import minhash_signatures
 
@@ -810,7 +809,7 @@ def q_zh_t2s(spark, sf_dir):
     # table loaded DRIVER-side and broadcast (dictio invariant): executors
     # may not have the zh_wiki source file, and a worker-side load would
     # silently fall back to the toy table and diverge from the oracle
-    bc = _cached_bc(spark, "t2s_chars", lambda: t2s_full_chars()[0])
+    bc = _cached_bc(spark, "t2s_chars", t2s_full_chars)
 
     def fn(it):
         table = str.maketrans(bc.value)
@@ -866,7 +865,7 @@ def q_zh_s2t(spark, sf_dir):
     from pycorrector_spark.operators.dedup import ensure_parallelism
     from pycorrector_spark.textops import s2t_full_chars
 
-    bc = _cached_bc(spark, "s2t_chars", lambda: s2t_full_chars()[0])
+    bc = _cached_bc(spark, "s2t_chars", s2t_full_chars)
 
     def fn(it):
         table = str.maketrans(bc.value)
@@ -2035,7 +2034,7 @@ def q_nb_langid(spark, sf_dir):
         "doc_id", "nb_pred", F.round("nb_logp", 4).alias("nb_logp")
     )
     # dedup.release_cached(out) after the action unpersists the fit's
-    # gram relation (bench.py does this per rep)
+    # gram relation
     out._cached_deps = (model._cached,)
     return out
 
@@ -2925,7 +2924,7 @@ def _t2s_oracle_sql() -> str:
     from the loaded table so the oracle can never drift from it)."""
     from pycorrector_spark.textops import t2s_full_chars
 
-    table = t2s_full_chars()[0]
+    table = t2s_full_chars()
     src = "".join(table)
     dst = "".join(table.values())
     return (
@@ -2946,7 +2945,7 @@ def _s2t_oracle_sql() -> str:
     """translate() over the same merged full zh2Hant single-char table."""
     from pycorrector_spark.textops import s2t_full_chars
 
-    table = s2t_full_chars()[0]
+    table = s2t_full_chars()
     src = "".join(table)
     dst = "".join(table.values())
     return (

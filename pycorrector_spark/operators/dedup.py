@@ -43,7 +43,7 @@ def release_cached(df: DataFrame) -> None:
     NOTE: ``_cached_deps`` rides on the EXACT DataFrame object the
     operator returned — derived frames (.select/.filter/...) are new
     objects without the attribute, so release through the original
-    handle (bench.py's run_suite does)."""
+    handle."""
     for dep in getattr(df, "_cached_deps", ()):  # noqa: B009 — plain attr
         try:
             dep.unpersist()
@@ -104,33 +104,6 @@ def exact_dedup_keep(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 # ---------------------------------------------------------------------------
 # word shingles (shared by jaccard + minhash)
 # ---------------------------------------------------------------------------
-
-
-def _words_col(text_col: str):
-    return F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT), lambda x: x != F.lit("")
-    )
-
-
-def with_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """Add `shingles`: distinct k-word shingles (space-joined, lowercase).
-
-    Kept for oracle parity / debugging (string shingles). The hot paths use
-    ``with_shingle_hashes``: Spark higher-order functions are interpreted
-    per element (no codegen), so building shingle strings JVM-side costs
-    ~50µs/shingle vs <1µs in an Arrow-batched Python pass.
-    """
-    w = _words_col(text_col)
-    shingles = F.when(
-        F.size(w) >= k,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - k + 1),
-                lambda i: F.concat_ws(" ", F.slice(w, i, k)),
-            )
-        ),
-    ).otherwise(F.array())
-    return df.select(F.col(id_col), shingles.alias("shingles"))
 
 
 def _shingle_pos_mult(k: int) -> np.ndarray:

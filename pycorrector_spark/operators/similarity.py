@@ -38,13 +38,6 @@ def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    """cosine(a, b) over two array<double> columns, left-to-right fold
-    (same accumulation order as DuckDB's list reduction -> oracle-safe)."""
-    ca, cb = F.col(a), F.col(b)
-    return df.withColumn(out, _dot(ca, cb) / (_norm(ca) * _norm(cb)))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -79,17 +79,9 @@ def is_cjk_string(s: str) -> bool:
     return bool(s) and _CJK_FULL_RE.match(s) is not None
 
 
-def is_alpha_char(ch: str) -> bool:
-    return ("a" <= ch <= "z") or ("A" <= ch <= "Z")
-
-
 def is_alpha_string(s: str) -> bool:
     # ascii+alpha == [A-Za-z]+ exactly, at C speed (vs per-char Python)
     return bool(s) and s.isascii() and s.isalpha()
-
-
-def is_digit_string(s: str) -> bool:
-    return s.isdigit()
 
 
 def is_filter_token(token: str) -> bool:
@@ -503,16 +495,6 @@ def segment_pos(sentence: str, word_freq: dict, total: int = None,
     ]
 
 
-def char_ngrams(s: str, n: int):
-    """All contiguous char n-grams of s (len(s)-n+1 of them)."""
-    return [s[i: i + n] for i in range(len(s) - n + 1)]
-
-
-def word_shingles(tokens, k: int):
-    """k-word shingles joined by a single space."""
-    return [" ".join(tokens[i: i + k]) for i in range(len(tokens) - k + 1)]
-
-
 # --------------------------------------------------------------------------
 # Multi-pattern scanning (replaces pyahocorasick for small confusion sets).
 # --------------------------------------------------------------------------
@@ -820,8 +802,8 @@ def longest_match_rewrite(text: str, table: dict, max_len: int = None) -> str:
 
 
 @functools.lru_cache(maxsize=None)
-def t2s_full_chars() -> tuple:
-    """(char_table dict, translate map) for the FULL traditional->simplified
+def t2s_full_chars() -> dict:
+    """The char table for the FULL traditional->simplified
     single-char conversion: the embedded toy table merged with the public
     zh_wiki zh2Hans single-char rows (~2.7k chars; dictio.load_zh_wiki).
     Falls back to the embedded table alone when the file is absent."""
@@ -829,7 +811,7 @@ def t2s_full_chars() -> tuple:
 
     table = dict(T2S_CHARS)
     table.update(load_zh_wiki()["t2s_chars"])
-    return table, str.maketrans(table)
+    return table
 
 
 @functools.lru_cache(maxsize=None)
@@ -840,7 +822,7 @@ def t2s_full_rewriter() -> LongestMatchRewriter:
     from .dictio import load_zh_wiki
 
     w = load_zh_wiki()
-    table = dict(t2s_full_chars()[0])
+    table = dict(t2s_full_chars())
     table.update(w["t2s_phrases"])
     return LongestMatchRewriter(table)
 
@@ -850,15 +832,9 @@ def t2s_full(text: str) -> str:
     return t2s_full_rewriter()(text)
 
 
-def t2s_full_series(s: pd.Series) -> pd.Series:
-    """Vectorized full single-char t2s (phrase-free translate path — the
-    oracle-mirrorable projection; use t2s_full for phrase rewrites)."""
-    return s.fillna("").str.translate(t2s_full_chars()[1])
-
-
 @functools.lru_cache(maxsize=None)
-def s2t_full_chars() -> tuple:
-    """(char_table dict, translate map) for the FULL simplified->traditional
+def s2t_full_chars() -> dict:
+    """The char table for the FULL simplified->traditional
     single-char conversion: the embedded inverse toy table merged with the
     public zh_wiki zh2Hant single-char rows (~2.5k chars) — the reference's
     ``simplified2traditional`` direction (pycorrector/__init__.py exports +
@@ -868,7 +844,7 @@ def s2t_full_chars() -> tuple:
 
     table = dict(_S2T_CHARS)
     table.update(load_zh_wiki()["s2t_chars"])
-    return table, str.maketrans(table)
+    return table
 
 
 @functools.lru_cache(maxsize=None)
@@ -879,7 +855,7 @@ def s2t_full_rewriter() -> "LongestMatchRewriter":
     from .dictio import load_zh_wiki
 
     w = load_zh_wiki()
-    table = dict(s2t_full_chars()[0])
+    table = dict(s2t_full_chars())
     table.update(w["s2t_phrases"])
     return LongestMatchRewriter(table)
 
@@ -887,11 +863,6 @@ def s2t_full_rewriter() -> "LongestMatchRewriter":
 def s2t_full(text: str) -> str:
     """Simplified -> traditional with phrase awareness (full tables)."""
     return s2t_full_rewriter()(text)
-
-
-def s2t_full_series(s: pd.Series) -> pd.Series:
-    """Vectorized full single-char s2t (phrase-free translate path)."""
-    return s.fillna("").str.translate(s2t_full_chars()[1])
 
 
 def word_ngrams(tokens, mode: str = "12"):

@@ -1,13 +1,16 @@
-"""bench._task_histogram over a synthetic Spark event log: job-group
-scoping, and a loud error when the requested group never ran."""
+"""perfbench.sparkmetrics.task_metrics over a synthetic Spark event log:
+job-group scoping, and a loud error when the requested group never ran."""
 
 from __future__ import annotations
 
 import json
 
+import numpy as np
 import pytest
 
-from bench import _task_histogram
+from perfbench.sparkmetrics import task_metrics
+
+APP_ID = "local-1"
 
 
 def _job_start(job_id, stage_ids, group=None):
@@ -25,12 +28,14 @@ def _task_end(stage_id, dur_ms):
         "Event": "SparkListenerTaskEnd",
         "Stage ID": stage_id,
         "Task Info": {"Launch Time": 1000, "Finish Time": 1000 + dur_ms},
+        "Task End Reason": {"Reason": "Success"},
     }
 
 
 def _write_log(evdir, events):
-    evdir.mkdir()
-    with open(evdir / "local-1700000000000", "w") as f:
+    logdir = evdir / f"eventlog_v2_{APP_ID}"
+    logdir.mkdir(parents=True)
+    with open(logdir / f"events_1_{APP_ID}", "w") as f:
         for ev in events:
             f.write(json.dumps(ev, separators=(",", ":")) + "\n")
     return str(evdir)
@@ -47,14 +52,18 @@ def _events():
     ]
 
 
-def test_histogram_scoped_to_job_group(tmp_path):
+def test_task_metrics_scoped_to_job_group(tmp_path):
     evdir = _write_log(tmp_path / "ev", _events())
-    hist = _task_histogram(evdir, job_group="measured")
-    assert hist == {"p50": 120, "max": 400, "n_tasks": 4}
-    assert not (tmp_path / "ev").exists()
+    m = task_metrics(evdir, APP_ID, job_group="measured")
+    p50 = float(np.median([0.1, 0.11, 0.12, 0.4]))
+    assert p50 == pytest.approx(0.115)
+    assert m["task_count"] == 4
+    assert m["task_s_p50"] == p50
+    assert m["task_skew"] == 0.4 / p50
+    assert m["tasks_failed"] == 0
 
 
-def test_histogram_missing_job_group_raises(tmp_path):
+def test_task_metrics_missing_job_group_raises(tmp_path):
     evdir = _write_log(tmp_path / "ev", _events())
-    with pytest.raises(ValueError, match="'absent'"):
-        _task_histogram(evdir, job_group="absent")
+    with pytest.raises(RuntimeError, match="'absent'"):
+        task_metrics(evdir, APP_ID, job_group="absent")
