@@ -114,6 +114,144 @@ def _cached_bc(spark: SparkSession, key: str, build):
     return _BC_CACHE[k]
 
 
+def _doc_map(df: DataFrame, ddl: str, make) -> DataFrame:
+    """(doc_id, computed columns) over ``df``'s doc_id/text in one Python
+    stage, one partition per core at least. ``make()`` runs once per task
+    on the worker (broadcast reads, per-task tables) and returns
+    ``texts -> {col: values}``; null text arrives as ""."""
+    import pandas as pd
+
+    from pycorrector_spark.stage import ensure_parallelism, python_stage
+
+    def fn(it):
+        cols = make()
+        for pdf in it:
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], **cols(pdf["text"].fillna(""))})
+
+    return python_stage(ensure_parallelism(df.select("doc_id", "text")), fn, ddl)
+
+
+def _ppl_map(spark: SparkSession, sf_dir: str, lm_of, bins: bool = False) -> DataFrame:
+    """(doc_id, ppl[, bin]) over the sf-scaled PPL pool: one ``ppl_batch``
+    probe per batch of uniform()ed text, with the LM ``lm_of()`` returns on
+    the worker; ``bins`` adds curation.ppl_bin's log-space integer bins
+    from the same batch."""
+    from pycorrector_spark.fixtures import PPL_POOL
+
+    def make():
+        from pycorrector_spark.operators.curation import ppl_bin
+        from pycorrector_spark.textops import uniform
+
+        lm = lm_of()
+
+        def cols(texts):
+            ppl = lm.ppl_batch([uniform(t) for t in texts])
+            return {"ppl": ppl, "bin": ppl_bin(ppl)} if bins else {"ppl": ppl}
+
+        return cols
+
+    ddl = "doc_id long, ppl double" + (", bin long" if bins else "")
+    return _doc_map(_pool_docs(spark, sf_dir, PPL_POOL), ddl, make)
+
+
+def _translate_map(spark: SparkSession, sf_dir: str, key: str, build, col: str) -> DataFrame:
+    """(doc_id, col): vectorized str.translate of the documents through the
+    char table ``build()`` returns, built driver-side and broadcast once."""
+    bc = _cached_bc(spark, key, build)
+
+    def make():
+        table = str.maketrans(bc.value)
+        return lambda texts: {col: texts.str.translate(table)}
+
+    return _doc_map(_docs(spark, sf_dir), f"doc_id long, {col} string", make)
+
+
+def _rewrite_map(spark: SparkSession, sf_dir: str, pool, key: str, build, col: str) -> DataFrame:
+    """(doc_id, col) over a sentence pool through the phrase rewriter
+    ``build()`` returns, built driver-side and broadcast once."""
+    bc = _cached_bc(spark, key, build)
+
+    def make():
+        rw = bc.value
+        return lambda texts: {col: [rw(t) for t in texts]}
+
+    return _doc_map(_pool_docs(spark, sf_dir, pool), f"doc_id long, {col} string", make)
+
+
+def _en_spell_map(spark: SparkSession, sf_dir: str, full: bool) -> DataFrame:
+    """(doc_id, corrected_text, n_fixes) over the sf-scaled English typo
+    pool with the toy (``full=False``) or reference-scale en dict."""
+    from pycorrector_spark.fixtures import EN_POOL
+    from pycorrector_spark.operators.score import _get_workers
+
+    bc = _artifacts_bc(spark, full=full)
+
+    def make():
+        _, _, en = _get_workers(bc)
+
+        def cols(texts):
+            res = [en.correct(t) for t in texts]
+            return {
+                "corrected_text": [r["target"] for r in res],
+                "n_fixes": [len(r["errors"]) for r in res],
+            }
+
+        return cols
+
+    ddl = "doc_id long, corrected_text string, n_fixes int"
+    return _doc_map(_pool_docs(spark, sf_dir, EN_POOL), ddl, make)
+
+
+def _segment_map(spark: SparkSession, sf_dir: str, hmm: bool) -> DataFrame:
+    """(doc_id, tokens) over the sf-scaled CJK pool: jieba's cut(HMM=hmm)
+    over the broadcast frequency dict, tokens pipe-joined."""
+    from pycorrector_spark.fixtures import ZH_POOL
+
+    bc = _artifacts_bc(spark, full=True)
+
+    def make():
+        from pycorrector_spark.fixtures import fmt_tokens
+        from pycorrector_spark.textops import (dag_hmm_tokens, dag_max_prob_tokens,
+                                               hmm_tables_from_freq)
+
+        wf = bc.value.word_freq
+        total = sum(wf.values())
+        tables = hmm_tables_from_freq(wf) if hmm else None  # deterministic; once per task
+
+        def tokens(t):
+            if hmm:
+                return dag_hmm_tokens(t, wf, total, tables=tables)
+            return dag_max_prob_tokens(t, wf, total)
+
+        return lambda texts: {"tokens": [fmt_tokens(tokens(t)) for t in texts]}
+
+    return _doc_map(_pool_docs(spark, sf_dir, ZH_POOL), "doc_id long, tokens string", make)
+
+
+def _correct_map(spark: SparkSession, sf_dir: str, corrector_of, errors_col=None) -> DataFrame:
+    """(doc_id, target[, errors_col]) over the sf-scaled CJK pool, corrected
+    by the corrector ``corrector_of()`` returns on the worker; corrections
+    pipe-joined into ``errors_col`` when one is named."""
+    from pycorrector_spark.fixtures import ZH_POOL
+
+    def make():
+        from pycorrector_spark.fixtures import fmt_corrections
+
+        corrector = corrector_of()
+
+        def cols(texts):
+            res = [corrector.correct(t) for t in texts]
+            out = {"target": [r["target"] for r in res]}
+            if errors_col:
+                out[errors_col] = [fmt_corrections(r["errors"]) for r in res]
+            return out
+
+        return cols
+
+    ddl = "doc_id long, target string" + (f", {errors_col} string" if errors_col else "")
+    return _doc_map(_pool_docs(spark, sf_dir, ZH_POOL), ddl, make)
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: langid + heuristics + LM ppl + detect/correct + scrub +
     keep/drop over the sf0.001 documents table — FULL reference-scale
@@ -297,39 +435,22 @@ def q_sent_split_len(spark, sf_dir):
 def q_b2q(spark, sf_dir):
     """Halfwidth -> fullwidth folding (P4 B2Q — inverse of the uniform
     normalizer's Q2B), vectorized str.translate."""
-    import pandas as pd
-    from pycorrector_spark.operators.dedup import ensure_parallelism
     from pycorrector_spark.textops import string_b2q
 
-    def fn(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "wide_text": [string_b2q(t) for t in pdf["text"].fillna("")],
-                }
-            )
-
-    return ensure_parallelism(_docs(spark, sf_dir).select("doc_id", "text")).mapInPandas(
-        fn, "doc_id long, wide_text string"
+    return _doc_map(
+        _docs(spark, sf_dir), "doc_id long, wide_text string",
+        lambda: lambda texts: {"wide_text": [string_b2q(t) for t in texts]},
     )
 
 
 def q_uniform(spark, sf_dir):
     """Q2B width folding + lowercase (P4/P5 — the detect-path normalizer),
     vectorized str.translate over Arrow batches."""
-    import pandas as pd
-    from pycorrector_spark.operators.dedup import ensure_parallelism
     from pycorrector_spark.textops import uniform_series
 
-    def fn(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "norm_text": uniform_series(pdf["text"].fillna(""))}
-            )
-
-    return ensure_parallelism(_docs(spark, sf_dir).select("doc_id", "text")).mapInPandas(
-        fn, "doc_id long, norm_text string"
+    return _doc_map(
+        _docs(spark, sf_dir), "doc_id long, norm_text string",
+        lambda: lambda texts: {"norm_text": uniform_series(texts)},
     )
 
 
@@ -355,32 +476,7 @@ def q_zh_segment(spark, sf_dir):
     sf-scaled CJK pool; tokens emitted as a pipe-joined scalar so the
     checker canonicalizer can hash them. Oracle: per-pool-index expected
     encodings from the same pure tokenizer, joined on doc_id % pool size."""
-    import pandas as pd
-    from pycorrector_spark.fixtures import ZH_POOL
-
-    df = _pool_docs(spark, sf_dir, ZH_POOL)
-    bc = _artifacts_bc(spark, full=True)
-
-    def fn(it):
-        from pycorrector_spark.fixtures import fmt_tokens
-        from pycorrector_spark.textops import dag_max_prob_tokens
-
-        wf = bc.value.word_freq
-        total = sum(wf.values())
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "tokens": [
-                        fmt_tokens(dag_max_prob_tokens(t, wf, total))
-                        for t in pdf["text"]
-                    ],
-                }
-            )
-
-    from pycorrector_spark.operators.dedup import ensure_parallelism
-
-    return ensure_parallelism(df).mapInPandas(fn, "doc_id long, tokens string")
+    return _segment_map(spark, sf_dir, hmm=False)
 
 
 def q_zh_segment_hmm(spark, sf_dir):
@@ -389,33 +485,7 @@ def q_zh_segment_hmm(spark, sf_dir):
     out-of-vocabulary single-char runs re-cut by the BMES viterbi so
     unseen words join; textops.dag_hmm_tokens, tables derived from the
     same broadcast dict). Pool oracle from the identical tokenizer."""
-    import pandas as pd
-    from pycorrector_spark.fixtures import ZH_POOL
-
-    df = _pool_docs(spark, sf_dir, ZH_POOL)
-    bc = _artifacts_bc(spark, full=True)
-
-    def fn(it):
-        from pycorrector_spark.fixtures import fmt_tokens
-        from pycorrector_spark.textops import dag_hmm_tokens, hmm_tables_from_freq
-
-        wf = bc.value.word_freq
-        total = sum(wf.values())
-        tables = hmm_tables_from_freq(wf)  # deterministic; once per task
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "tokens": [
-                        fmt_tokens(dag_hmm_tokens(t, wf, total, tables=tables))
-                        for t in pdf["text"]
-                    ],
-                }
-            )
-
-    from pycorrector_spark.operators.dedup import ensure_parallelism
-
-    return ensure_parallelism(df).mapInPandas(fn, "doc_id long, tokens string")
+    return _segment_map(spark, sf_dir, hmm=True)
 
 
 def q_token_counts(spark, sf_dir):
@@ -567,25 +637,10 @@ def q_lm_ppl(spark, sf_dir):
     by the same vectorized scorer (exact frexp-encoded double literals, so
     the floats are bit-identical — ppl_batch's per-row reduceat makes the
     value independent of batch composition)."""
-    import pandas as pd
-    from pycorrector_spark.fixtures import PPL_POOL
-    from pycorrector_spark.operators.dedup import ensure_parallelism
-
     # full flavor (LM is identical in both; sharing the broadcast keeps a
     # single artifact generation alive across the driver-gate run)
     bc = _artifacts_bc(spark, full=True)
-
-    def fn(it):
-        from pycorrector_spark.textops import uniform
-
-        lm = bc.value.lm
-        for pdf in it:
-            ppl = lm.ppl_batch([uniform(t) for t in pdf["text"].fillna("")])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "ppl": ppl})
-
-    return ensure_parallelism(_pool_docs(spark, sf_dir, PPL_POOL)).mapInPandas(
-        fn, "doc_id long, ppl double"
-    )
+    return _ppl_map(spark, sf_dir, lambda: bc.value.lm)
 
 
 def q_ccnet_buckets(spark, sf_dir):
@@ -597,28 +652,10 @@ def q_ccnet_buckets(spark, sf_dir):
     tercile cutoffs come from a tiny bin histogram, not a global sort.
     The oracle precomputes (ppl, bin) per pool index and mirrors the
     cutoff rule with an integer window cumsum."""
-    import pandas as pd
-
-    from pycorrector_spark.fixtures import PPL_POOL
-    from pycorrector_spark.operators.curation import ccnet_buckets, ppl_bin
-    from pycorrector_spark.operators.dedup import ensure_parallelism
+    from pycorrector_spark.operators.curation import ccnet_buckets
 
     bc = _artifacts_bc(spark, full=True)
-
-    def fn(it):
-        from pycorrector_spark.textops import uniform
-
-        lm = bc.value.lm
-        for pdf in it:
-            ppl = lm.ppl_batch([uniform(t) for t in pdf["text"].fillna("")])
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "ppl": ppl, "bin": ppl_bin(ppl)}
-            )
-
-    scored = ensure_parallelism(_pool_docs(spark, sf_dir, PPL_POOL)).mapInPandas(
-        fn, "doc_id long, ppl double, bin long"
-    )
-    bucketed = ccnet_buckets(scored)
+    bucketed = ccnet_buckets(_ppl_map(spark, sf_dir, lambda: bc.value.lm, bins=True))
     out = bucketed.select("doc_id", "ppl", "ppl_bucket")
     out._cached_deps = getattr(bucketed, "_cached_deps", ())
     return out
@@ -632,10 +669,6 @@ def q_lm_ppl_binary(spark, sf_dir):
     qf_lm_ppl. The oracle is qf_lm_ppl's frexp-literal table: binary
     round-trip + hash probing must reproduce the sorted-array scores
     bit-for-bit, which this hash check proves end-to-end."""
-    import pandas as pd
-    from pycorrector_spark.fixtures import PPL_POOL
-    from pycorrector_spark.operators.dedup import ensure_parallelism
-
     def build():
         import os
         import tempfile
@@ -651,18 +684,7 @@ def q_lm_ppl_binary(spark, sf_dir):
             os.unlink(path)
 
     bc = _cached_bc(spark, "lm_binary", build)
-
-    def fn(it):
-        from pycorrector_spark.textops import uniform
-
-        lm = bc.value
-        for pdf in it:
-            ppl = lm.ppl_batch([uniform(t) for t in pdf["text"].fillna("")])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "ppl": ppl})
-
-    return ensure_parallelism(_pool_docs(spark, sf_dir, PPL_POOL)).mapInPandas(
-        fn, "doc_id long, ppl double"
-    )
+    return _ppl_map(spark, sf_dir, lambda: bc.value)
 
 
 @functools.lru_cache(maxsize=None)
@@ -699,23 +721,8 @@ def q_lm_ppl_klm(spark, sf_dir):
     pool as qf_lm_ppl. Oracle = frexp literals from the serial scorer on
     the same decoded model, so the driver hash check proves the binary
     decode + distributed scoring end-to-end."""
-    import pandas as pd
-    from pycorrector_spark.fixtures import PPL_POOL
-    from pycorrector_spark.operators.dedup import ensure_parallelism
-
     bc = _cached_bc(spark, "lm_klm", _klm_model_cached)
-
-    def fn(it):
-        from pycorrector_spark.textops import uniform
-
-        lm = bc.value
-        for pdf in it:
-            ppl = lm.ppl_batch([uniform(t) for t in pdf["text"].fillna("")])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "ppl": ppl})
-
-    return ensure_parallelism(_pool_docs(spark, sf_dir, PPL_POOL)).mapInPandas(
-        fn, "doc_id long, ppl double"
-    )
+    return _ppl_map(spark, sf_dir, lambda: bc.value)
 
 
 def q_pipeline_full(spark, sf_dir):
@@ -746,8 +753,8 @@ def q_pipeline_pool(spark, sf_dir):
     reference-scale dims the production pipeline defaults to.
     qf_pipeline_full remains the real-corpus (rows-only) variant."""
     from pycorrector_spark.fixtures import PPL_POOL
-    from pycorrector_spark.operators.dedup import ensure_parallelism
     from pycorrector_spark.pipeline import run_quality_pipeline
+    from pycorrector_spark.stage import ensure_parallelism
 
     d = ensure_parallelism(_pool_docs(spark, sf_dir, PPL_POOL))
     bc = _artifacts_bc(spark, full=True)
@@ -802,28 +809,12 @@ def q_zh_t2s(spark, sf_dir):
     table (embedded toys merged with the public zh_wiki zh2Hans rows,
     ~2.7k chars) — vectorized str.translate in one Arrow pass; the oracle
     is a translate() generated from the same merged table."""
-    import pandas as pd
-    from pycorrector_spark.operators.dedup import ensure_parallelism
     from pycorrector_spark.textops import t2s_full_chars
 
     # table loaded DRIVER-side and broadcast (dictio invariant): executors
     # may not have the zh_wiki source file, and a worker-side load would
     # silently fall back to the toy table and diverge from the oracle
-    bc = _cached_bc(spark, "t2s_chars", t2s_full_chars)
-
-    def fn(it):
-        table = str.maketrans(bc.value)
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "simp_text": pdf["text"].fillna("").str.translate(table),
-                }
-            )
-
-    return ensure_parallelism(_docs(spark, sf_dir).select("doc_id", "text")).mapInPandas(
-        fn, "doc_id long, simp_text string"
-    )
+    return _translate_map(spark, sf_dir, "t2s_chars", t2s_full_chars, "simp_text")
 
 
 def q_zh_t2s_phrase(spark, sf_dir):
@@ -832,27 +823,13 @@ def q_zh_t2s_phrase(spark, sf_dir):
     precedence over char-by-char mapping) over the sf-scaled traditional
     pool. Oracle: per-pool-index expected conversions from the identical
     prebuilt rewriter."""
-    import pandas as pd
     from pycorrector_spark.fixtures import ZHT_POOL
-    from pycorrector_spark.operators.dedup import ensure_parallelism
     from pycorrector_spark.textops import t2s_full_rewriter
 
     # rewriter built DRIVER-side (loads zh_wiki once) and broadcast — the
     # prebuilt first-char index pickles as plain dicts
-    bc = _cached_bc(spark, "t2s_rewriter", t2s_full_rewriter)
-
-    def fn(it):
-        rw = bc.value
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "simp_text": [rw(t) for t in pdf["text"]],
-                }
-            )
-
-    return ensure_parallelism(_pool_docs(spark, sf_dir, ZHT_POOL)).mapInPandas(
-        fn, "doc_id long, simp_text string"
+    return _rewrite_map(
+        spark, sf_dir, ZHT_POOL, "t2s_rewriter", t2s_full_rewriter, "simp_text"
     )
 
 
@@ -861,25 +838,9 @@ def q_zh_s2t(spark, sf_dir):
     reference's exported ``simplified2traditional``) over the FULL
     single-char zh2Hant table (~2.5k chars) — vectorized str.translate in
     one Arrow pass; oracle = translate() generated from the same table."""
-    import pandas as pd
-    from pycorrector_spark.operators.dedup import ensure_parallelism
     from pycorrector_spark.textops import s2t_full_chars
 
-    bc = _cached_bc(spark, "s2t_chars", s2t_full_chars)
-
-    def fn(it):
-        table = str.maketrans(bc.value)
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "trad_text": pdf["text"].fillna("").str.translate(table),
-                }
-            )
-
-    return ensure_parallelism(_docs(spark, sf_dir).select("doc_id", "text")).mapInPandas(
-        fn, "doc_id long, trad_text string"
-    )
+    return _translate_map(spark, sf_dir, "s2t_chars", s2t_full_chars, "trad_text")
 
 
 def q_zh_s2t_phrase(spark, sf_dir):
@@ -887,25 +848,11 @@ def q_zh_s2t_phrase(spark, sf_dir):
     over zh2Hant: 打印机->印表機, 一只->一隻 take precedence over the
     char map) over the sf-scaled simplified pool; oracle = per-pool-index
     expected conversions from the identical prebuilt rewriter."""
-    import pandas as pd
     from pycorrector_spark.fixtures import ZHS_POOL
-    from pycorrector_spark.operators.dedup import ensure_parallelism
     from pycorrector_spark.textops import s2t_full_rewriter
 
-    bc = _cached_bc(spark, "s2t_rewriter", s2t_full_rewriter)
-
-    def fn(it):
-        rw = bc.value
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "trad_text": [rw(t) for t in pdf["text"]],
-                }
-            )
-
-    return ensure_parallelism(_pool_docs(spark, sf_dir, ZHS_POOL)).mapInPandas(
-        fn, "doc_id long, trad_text string"
+    return _rewrite_map(
+        spark, sf_dir, ZHS_POOL, "s2t_rewriter", s2t_full_rewriter, "trad_text"
     )
 
 
@@ -931,10 +878,20 @@ def q_homophones(spark, sf_dir):
 @functools.lru_cache(maxsize=None)
 def _pinyin_line_rows() -> tuple:
     """(line_id, distinct chars of the reading group) per same_pinyin.txt
-    row — the dimension shared by q_homophones_full and its oracle."""
+    row — the dimension shared by q_homophones_full and its oracle. A
+    missing file raises: an empty dimension would be a silent 0-row answer."""
+    import os
+
     from pycorrector_spark.dictio import _p, load_same_pinyin_lines
 
-    lines = load_same_pinyin_lines(_p("same_pinyin.txt"))
+    path = _p("same_pinyin.txt")
+    if path is None or not os.path.exists(path):
+        raise FileNotFoundError(
+            f"zh_homophones_full needs same_pinyin.txt, not found "
+            f"({path or 'no reference data dir'}); set PYCORRECTOR_SPARK_DATA_DIR "
+            "to the directory holding it"
+        )
+    lines = load_same_pinyin_lines(path)
     return tuple(
         (i, "".join(dict.fromkeys(h + s + d))) for i, (h, s, d) in enumerate(lines)
     )
@@ -967,7 +924,11 @@ def q_homophones_full(spark, sf_dir):
 
 
 def _homophones_full_oracle_sql() -> str:
-    values = ", ".join(f"({i}, {_sq(chars)})" for i, chars in _pinyin_line_rows())
+    try:
+        rows = _pinyin_line_rows()
+    except FileNotFoundError as e:
+        return f"SELECT error({_sq(str(e))})"  # fails when run, like the query
+    values = ", ".join(f"({i}, {_sq(chars)})" for i, chars in rows)
     return f"""
         WITH l(line_id, chars) AS (VALUES {values}),
         c AS (SELECT line_id,
@@ -997,23 +958,21 @@ def q_langid_ft(spark, sf_dir):
     (label, softmax prob) from the identical model — probabilities as
     exact frexp literals, so the hash check proves the distributed
     scoring is bit-identical to the serial model."""
-    import pandas as pd
     from pycorrector_spark.fixtures import PPL_POOL
-    from pycorrector_spark.operators.dedup import ensure_parallelism
 
     bc = _cached_bc(spark, "langid_ft", _langid_ft_model)
 
-    def fn(it):
+    def make():
         model = bc.value
-        for pdf in it:
-            labels, probs = model.predict_batch(pdf["text"].fillna(""))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "lang_ft": labels, "prob": probs}
-            )
 
-    return ensure_parallelism(_pool_docs(spark, sf_dir, PPL_POOL)).mapInPandas(
-        fn, "doc_id long, lang_ft string, prob double"
-    )
+        def cols(texts):
+            labels, probs = model.predict_batch(texts)
+            return {"lang_ft": labels, "prob": probs}
+
+        return cols
+
+    ddl = "doc_id long, lang_ft string, prob double"
+    return _doc_map(_pool_docs(spark, sf_dir, PPL_POOL), ddl, make)
 
 
 @functools.lru_cache(maxsize=None)
@@ -1044,28 +1003,7 @@ def q_en_spell(spark, sf_dir):
     """English spell correction (C8, Norvig semantics backed by the
     SymSpell deletes index) over the sf-scaled English typo pool; oracle =
     per-pool-index corrections precomputed by the identical corrector."""
-    import pandas as pd
-    from pycorrector_spark.fixtures import EN_POOL
-    from pycorrector_spark.operators.dedup import ensure_parallelism
-    from pycorrector_spark.operators.score import _get_workers
-
-    bc = _artifacts_bc(spark)
-
-    def fn(it):
-        _, _, en = _get_workers(bc)
-        for pdf in it:
-            res = [en.correct(t) for t in pdf["text"].fillna("")]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "corrected_text": [r["target"] for r in res],
-                    "n_fixes": [len(r["errors"]) for r in res],
-                }
-            )
-
-    return ensure_parallelism(_pool_docs(spark, sf_dir, EN_POOL)).mapInPandas(
-        fn, "doc_id long, corrected_text string, n_fixes int"
-    )
+    return _en_spell_map(spark, sf_dir, full=False)
 
 
 def q_detect(spark, sf_dir):
@@ -1074,62 +1012,39 @@ def q_detect(spark, sf_dir):
     Detections emitted as a pipe-joined scalar; oracle = per-pool-index
     expected detections from the identical deterministic Detector built
     from the same FULL reference-scale dims (production default)."""
-    import pandas as pd
     from pycorrector_spark.fixtures import ZH_POOL
-    from pycorrector_spark.operators.dedup import ensure_parallelism
     from pycorrector_spark.operators.score import _get_workers
 
     bc = _artifacts_bc(spark, full=True)
 
-    def fn(it):
+    def make():
+        import pandas as pd
         from pycorrector_spark.fixtures import fmt_detections
 
         _, zh, _ = _get_workers(bc)
-        for pdf in it:
-            dets = [zh.detect(t) for t in pdf["text"].fillna("")]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "errors": [fmt_detections(d) for d in dets],
-                    "n_errors": pd.Series([len(d) for d in dets], dtype="int32"),
-                }
-            )
 
-    return ensure_parallelism(_pool_docs(spark, sf_dir, ZH_POOL)).mapInPandas(
-        fn, "doc_id long, errors string, n_errors int"
-    )
+        def cols(texts):
+            dets = [zh.detect(t) for t in texts]
+            return {
+                "errors": [fmt_detections(d) for d in dets],
+                "n_errors": pd.Series([len(d) for d in dets], dtype="int32"),
+            }
+
+        return cols
+
+    ddl = "doc_id long, errors string, n_errors int"
+    return _doc_map(_pool_docs(spark, sf_dir, ZH_POOL), ddl, make)
 
 
 def q_proper(spark, sf_dir):
     """Proper-noun correction (C5-C7: positional inverted-index recall +
     stroke/pinyin similarity) over the sf-scaled CJK pool (which embeds
     the proper-noun error sentences); corrections pipe-joined scalar."""
-    import pandas as pd
     from pycorrector_spark.dicts import PROPER_NAMES
-    from pycorrector_spark.fixtures import ZH_POOL
-    from pycorrector_spark.operators.dedup import ensure_parallelism
     from pycorrector_spark.refimpl.proper import ProperCorrector
 
-    df = _pool_docs(spark, sf_dir, ZH_POOL)
     bc = _cached_bc(spark, "proper", lambda: ProperCorrector(PROPER_NAMES))
-
-    def fn(it):
-        from pycorrector_spark.fixtures import fmt_corrections
-
-        pc = bc.value
-        for pdf in it:
-            res = [pc.correct(t) for t in pdf["text"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "target": [r["target"] for r in res],
-                    "errors": [fmt_corrections(r["errors"]) for r in res],
-                }
-            )
-
-    return ensure_parallelism(df).mapInPandas(
-        fn, "doc_id long, target string, errors string"
-    )
+    return _correct_map(spark, sf_dir, lambda: bc.value, "errors")
 
 
 def q_confusion(spark, sf_dir):
@@ -1138,26 +1053,11 @@ def q_confusion(spark, sf_dir):
     Oracle = per-pool-index targets precomputed by the identical serial
     corrector (replaces round 1's chained-replace() oracle, which was only
     valid while fixture sentences avoided overlapping variant occurrences)."""
-    import pandas as pd
     from pycorrector_spark.dicts import CONFUSION_DICT
-    from pycorrector_spark.fixtures import ZH_POOL
-    from pycorrector_spark.operators.dedup import ensure_parallelism
     from pycorrector_spark.refimpl.core import ConfusionCorrector
 
-    df = _pool_docs(spark, sf_dir, ZH_POOL)
     bc = _cached_bc(spark, "confusion", lambda: ConfusionCorrector(dict(CONFUSION_DICT)))
-
-    def fn(it):
-        cc = bc.value
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "target": [cc.correct(t)["target"] for t in pdf["text"]],
-                }
-            )
-
-    return ensure_parallelism(df).mapInPandas(fn, "doc_id long, target string")
+    return _correct_map(spark, sf_dir, lambda: bc.value)
 
 
 def q_eval_f1(spark, sf_dir):
@@ -1232,19 +1132,16 @@ def q_zh_segment_pos(spark, sf_dir):
     default — textops.pos_of_token documents the tag-dim divergence)
     over the sf-scaled CJK pool; oracle = per-pool-index expected rows
     from the identical serial function."""
-    import pandas as pd
+    from pycorrector_spark.dictio import full_dims
     from pycorrector_spark.fixtures import ZH_POOL
 
-    df = _pool_docs(spark, sf_dir, ZH_POOL)
     bc = _artifacts_bc(spark, full=True)
-    from pycorrector_spark.dictio import full_dims
-
     dims = full_dims()
     bc_names = spark.sparkContext.broadcast(
         (set(dims["person_names"]), set(dims["place_names"]))
     )
 
-    def fn(it):
+    def make():
         from pycorrector_spark.fixtures import fmt_detections
         from pycorrector_spark.textops import hmm_tables_from_freq, segment_pos
 
@@ -1252,21 +1149,17 @@ def q_zh_segment_pos(spark, sf_dir):
         total = sum(wf.values())
         tables = hmm_tables_from_freq(wf)
         person, place = bc_names.value
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "tagged": [
-                        fmt_detections(
-                            segment_pos(t, wf, total, tables=tables,
-                                        person_names=person, place_names=place)
-                        )
-                        for t in pdf["text"]
-                    ],
-                }
-            )
+        return lambda texts: {
+            "tagged": [
+                fmt_detections(
+                    segment_pos(t, wf, total, tables=tables,
+                                person_names=person, place_names=place)
+                )
+                for t in texts
+            ]
+        }
 
-    return df.mapInPandas(fn, "doc_id long, tagged string")
+    return _doc_map(_pool_docs(spark, sf_dir, ZH_POOL), "doc_id long, tagged string", make)
 
 
 @functools.lru_cache(maxsize=None)
@@ -1618,58 +1511,17 @@ def q_zh_correct_full(spark, sf_dir):
     person/place/proper names with the 12k-char stroke dict — over the
     sf-scaled CJK pool. Oracle: per-pool-index (target, corrections)
     precomputed by the identical full-dim corrector."""
-    import pandas as pd
-    from pycorrector_spark.fixtures import ZH_POOL
-    from pycorrector_spark.operators.dedup import ensure_parallelism
     from pycorrector_spark.operators.score import _get_workers
 
     bc = _artifacts_bc(spark, full=True)
-
-    def fn(it):
-        from pycorrector_spark.fixtures import fmt_corrections
-
-        _, zh, _ = _get_workers(bc)
-        for pdf in it:
-            res = [zh.correct(t) for t in pdf["text"].fillna("")]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "target": [r["target"] for r in res],
-                    "corrections": [fmt_corrections(r["errors"]) for r in res],
-                }
-            )
-
-    return ensure_parallelism(_pool_docs(spark, sf_dir, ZH_POOL)).mapInPandas(
-        fn, "doc_id long, target string, corrections string"
-    )
+    return _correct_map(spark, sf_dir, lambda: _get_workers(bc)[1], "corrections")
 
 
 def q_en_spell_full(spark, sf_dir):
     """English spell correction against the real 30k-word en.json.gz dict
     (S9 gzip-JSON loader, freq>400 filter) + SymSpell deletes index, over
     the sf-scaled English typo pool."""
-    import pandas as pd
-    from pycorrector_spark.fixtures import EN_POOL
-    from pycorrector_spark.operators.dedup import ensure_parallelism
-    from pycorrector_spark.operators.score import _get_workers
-
-    bc = _artifacts_bc(spark, full=True)
-
-    def fn(it):
-        _, _, en = _get_workers(bc)
-        for pdf in it:
-            res = [en.correct(t) for t in pdf["text"].fillna("")]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "corrected_text": [r["target"] for r in res],
-                    "n_fixes": [len(r["errors"]) for r in res],
-                }
-            )
-
-    return ensure_parallelism(_pool_docs(spark, sf_dir, EN_POOL)).mapInPandas(
-        fn, "doc_id long, corrected_text string, n_fixes int"
-    )
+    return _en_spell_map(spark, sf_dir, full=True)
 
 
 def q_rel_pricing_summary(spark, sf_dir):

@@ -24,8 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.dedup import ensure_parallelism
 from .operators.score import _get_workers, build_artifacts
+from .stage import ensure_parallelism, python_stage
 
 
 def corrected_frame(
@@ -48,9 +48,8 @@ def corrected_frame(
                 {"src": src, "tgt": pdf[tgt_col].fillna(""), "corrected": corrected}
             )
 
-    return ensure_parallelism(pairs.select(src_col, tgt_col)).mapInPandas(
-        fn, "src string, tgt string, corrected string"
-    )
+    staged = ensure_parallelism(pairs.select(src_col, tgt_col))
+    return python_stage(staged, fn, "src string, tgt string, corrected string")
 
 
 def eval_metrics(corrected: DataFrame) -> DataFrame:

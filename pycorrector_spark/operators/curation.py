@@ -39,6 +39,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..stage import python_stage
+
 __all__ = [
     "top_n_per_key",
     "select_token_budget",
@@ -127,7 +129,7 @@ def select_token_budget(
          across many partitions on the id tie-break and every partition
          holds ~n/P rows regardless of the score distribution;
       2. within-partition inclusive cumsum in one Arrow pass
-         (``mapInPandas`` with a carry across batches — zero shuffles);
+         (a ``python_stage`` with a carry across batches — zero shuffles);
       3. per-partition totals (P rows) to the driver → running offsets,
          partitions whose offset already exceeds the budget pruned
          (offset == budget survives: zero-token rows there have inclusive
@@ -179,7 +181,7 @@ def select_token_budget(
             pdf = pdf.assign(_pid=pid, _local_cum=cum.astype("int64"))
             yield pdf[cols]
 
-    cummed = ranged.mapInPandas(_local_cumsum, out_schema).persist()
+    cummed = python_stage(ranged, _local_cumsum, out_schema).persist()
     totals = {
         r["_pid"]: r["t"]
         for r in cummed.groupBy("_pid").agg(F.max("_local_cum").alias("t")).collect()
@@ -523,12 +525,8 @@ def build_bloom(
         if any_rows:
             yield pd.DataFrame({"bits": [bf.bits.tobytes()]})
 
-    parts = (
-        df.select(_h64_expr(F.col(text_col)).alias("h64"))
-        .where(F.col("h64").isNotNull())
-        .mapInPandas(partial, "bits binary")
-        .collect()
-    )
+    hashes = df.select(_h64_expr(F.col(text_col)).alias("h64")).where(F.col("h64").isNotNull())
+    parts = python_stage(hashes, partial, "bits binary").collect()
     out = BloomFilter(m_bits_, k_)
     for row in parts:
         out.bits |= np.frombuffer(row["bits"], dtype=np.uint64)

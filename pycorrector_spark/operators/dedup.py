@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..stage import ensure_parallelism, python_stage
 from ..textops import WORD_SPLIT_PATTERN as TOKEN_SPLIT  # single frozen splitter
 from ..textops import blake2b64 as _blake2b64
 from ..textops import md5_64 as _md5_64
@@ -58,19 +59,6 @@ def release_cached(df: DataFrame) -> None:
         except Exception:
             pass
 
-
-def ensure_parallelism(df: DataFrame, min_parts: int = None) -> DataFrame:
-    """Round-robin repartition when the scan produced too few partitions.
-
-    Small parquet inputs arrive as 1 split, which would serialize every
-    downstream Arrow/Python stage onto one core. At 100 TB the scan
-    yields thousands of splits and this is a no-op.
-    """
-    if min_parts is None:
-        min_parts = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min_parts:
-        return df.repartition(min_parts)
-    return df
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -175,9 +163,8 @@ def with_shingle_hashes(
                 }
             )
 
-    return ensure_parallelism(df.select(id_col, text_col)).mapInPandas(
-        fn, f"{id_col} long, shingle_hashes array<long>"
-    )
+    docs = ensure_parallelism(df.select(id_col, text_col))
+    return python_stage(docs, fn, f"{id_col} long, shingle_hashes array<long>")
 
 
 def ngram_jaccard_pairs(
@@ -343,7 +330,7 @@ def minhash_signatures(
             sigs = _minhash_batch(hash_lists, a, b)
             yield pd.DataFrame({id_col: pdf[id_col], "sig": list(sigs)})
 
-    return hashed.mapInPandas(fn, f"{id_col} long, sig array<long>")
+    return python_stage(hashed, fn, f"{id_col} long, sig array<long>")
 
 
 def minhash_lsh_candidates(
@@ -437,8 +424,9 @@ def minhash_dedup_pairs(
                 }
             )
 
-    sh = ensure_parallelism(df.select(id_col, text_col)).mapInPandas(
-        sig_fn, f"{id_col} long, shingle_hashes array<long>, sig array<long>"
+    docs = ensure_parallelism(df.select(id_col, text_col))
+    sh = python_stage(
+        docs, sig_fn, f"{id_col} long, shingle_hashes array<long>, sig array<long>"
     ).persist()
     if num_perm % bands != 0:
         raise ValueError(f"num_perm({num_perm}) must be divisible by bands({bands})")
@@ -513,9 +501,8 @@ def simhash64(
                 out[i] = sim.astype(np.int64)
             yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
 
-    return ensure_parallelism(df.select(id_col, text_col)).mapInPandas(
-        fn, f"{id_col} long, simhash long"
-    )
+    docs = ensure_parallelism(df.select(id_col, text_col))
+    return python_stage(docs, fn, f"{id_col} long, simhash long")
 
 
 def simhash_near_pairs(

@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import ensure_parallelism
+from ..stage import ensure_parallelism, python_stage
 
 
 def _dot(a, b):
@@ -153,7 +153,7 @@ def with_lsh_bucket(
     ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + f", {out} long"
-    return ensure_parallelism(df).mapInPandas(fn, ddl)
+    return python_stage(ensure_parallelism(df), fn, ddl)
 
 
 def lsh_topk(
@@ -249,7 +249,7 @@ def ivf_assign(
     ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + f", {out} long"
-    return ensure_parallelism(df).mapInPandas(fn, ddl)
+    return python_stage(ensure_parallelism(df), fn, ddl)
 
 
 def ivf_topk(
@@ -321,9 +321,8 @@ def ivf_topk(
                 rows.extend((qid, int(ids[t]), float(col[t])) for t in top)
             yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cosine"])
 
-    partial = ensure_parallelism(corpus.select(id_col, vec_col)).mapInPandas(
-        fn, "query_id long, neighbor_id long, cosine double"
-    )
+    vecs = ensure_parallelism(corpus.select(id_col, vec_col))
+    partial = python_stage(vecs, fn, "query_id long, neighbor_id long, cosine double")
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         partial.withColumn("rank", F.row_number().over(w))
@@ -405,9 +404,8 @@ def cosine_near_dup_pairs(
                 }
             )
 
-    return ensure_parallelism(df.select(id_col, vec_col)).mapInPandas(
-        fn, "id_a long, id_b long, cosine double"
-    )
+    vecs = ensure_parallelism(df.select(id_col, vec_col))
+    return python_stage(vecs, fn, "id_a long, id_b long, cosine double")
 
 
 def with_lsh_bands(
@@ -459,9 +457,8 @@ def with_lsh_bands(
                 }
             )
 
-    return ensure_parallelism(df.select(id_col, vec_col)).mapInPandas(
-        fn, f"{id_col} long, band long, band_bits long"
-    )
+    vecs = ensure_parallelism(df.select(id_col, vec_col))
+    return python_stage(vecs, fn, f"{id_col} long, band long, band_bits long")
 
 
 def cosine_near_dup_pairs_bucketed(
@@ -618,7 +615,7 @@ def ivf_probe(
                 rows.extend((qid, int(ids[t]), float(col[t])) for t in top)
             yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cosine"])
 
-    partial = corpus.mapInPandas(fn, "query_id long, neighbor_id long, cosine double")
+    partial = python_stage(corpus, fn, "query_id long, neighbor_id long, cosine double")
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         partial.withColumn("rank", F.row_number().over(w))
@@ -674,9 +671,8 @@ def matmul_topk(
                     rows.append((int(qids[qi]), int(ids[t]), float(col[t])))
             yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cosine"])
 
-    partial = ensure_parallelism(corpus.select(id_col, vec_col)).mapInPandas(
-        fn, "query_id long, neighbor_id long, cosine double"
-    )
+    vecs = ensure_parallelism(corpus.select(id_col, vec_col))
+    partial = python_stage(vecs, fn, "query_id long, neighbor_id long, cosine double")
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         partial.withColumn("rank", F.row_number().over(w))

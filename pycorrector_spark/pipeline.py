@@ -17,8 +17,8 @@ jar at ~47 ms each, 2 on py4j), 0.18-0.38 s per task on a 4-vCPU Xeon
 host. The score stage runs one task per core (``defaultParallelism``): at
 32 tasks on those 4 cores that setup was most of the job, and at 4 tasks
 perfbench's end-to-end docs/s rose 2.6x on web_en and 2.2x on zh_crawl.
-It also drops the cached zipimporters when a task ends
-(``operators.score._release_zip_finders``), so the next task on that
+Like every Python stage it runs through ``stage.python_stage``, which
+drops the cached zipimporters when a task ends, so the next task on that
 worker has no archive to re-read.
 
 Scale notes (100 TB / 1000 executors):
@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .operators.score import default_artifacts, make_score_stage
+from .stage import python_stage
 
 
 def repartition_by_url(
@@ -120,7 +121,7 @@ def run_quality_pipeline(
 
     staged, fields = stage_for_scoring(docs)
     fn, out_schema = make_score_stage(bc, fields)
-    return staged.mapInPandas(fn, out_schema)
+    return python_stage(staged, fn, out_schema)
 
 
 def stage_for_scoring(docs: DataFrame):

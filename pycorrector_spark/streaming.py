@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .operators.score import default_artifacts, make_score_stage
-from .pipeline import audit_frame
+from .pipeline import audit_frame, stage_for_scoring
+from .stage import python_stage
 
 
 def stream_quality_pipeline(
@@ -58,11 +59,9 @@ def stream_quality_pipeline(
     docs = reader.parquet(input_dir)
     # same pre-Arrow pruning as the batch path (html + computed-name
     # collisions dropped before every micro-batch's JVM->Python exchange)
-    from .pipeline import stage_for_scoring
-
     staged, fields = stage_for_scoring(docs)
     fn, out_schema = make_score_stage(bc, fields)
-    return staged.mapInPandas(fn, out_schema)
+    return python_stage(staged, fn, out_schema)
 
 
 def run_streaming_pipeline(

@@ -528,7 +528,7 @@ def test_release_zip_finders_stops_archive_rereads(tmp_path, monkeypatch):
     import zipfile
     import zipimport
 
-    from pycorrector_spark.operators.score import _release_zip_finders
+    from pycorrector_spark.stage import _release_zip_finders
 
     archive = str(tmp_path / "zpkg.zip")
     with zipfile.ZipFile(archive, "w") as zf:

@@ -8,6 +8,7 @@ import os
 import pytest
 
 from pycorrector_spark import pinyin_dim
+from pycorrector_spark.dictio import data_dir
 
 GLIBC_PRESENT = os.path.exists(pinyin_dim.GLIBC_PINYIN_COLLATION)
 
@@ -45,6 +46,8 @@ def test_all_anchor_syllables_survive_conflict_resolution():
 
 
 def test_held_out_readings():
+    if data_dir() is None:
+        pytest.skip("reference data dir absent")
     t = pinyin_dim.char_pinyin_table()
     wrong = {c: (exp, t.get(c)) for c, exp in HELD_OUT.items()
              if t.get(c) is not None and t.get(c) != exp}
@@ -70,6 +73,8 @@ def test_polyphone_canonical_collapse_matches_lazy_pinyin():
     """Cross-syllable polyphones collapse to the most-common reading —
     the same collapse pypinyin's lazy_pinyin makes (长->chang not zhang,
     重->zhong not chong, 会->hui not kuai)."""
+    if data_dir() is None:
+        pytest.skip("reference data dir absent")
     t = pinyin_dim.char_pinyin_table()
     for c, exp in [("长", "chang"), ("重", "zhong"), ("会", "hui"),
                    ("还", "hai"), ("乐", "le"), ("行", "xing")]:
