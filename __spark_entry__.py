@@ -212,16 +212,17 @@ def _segment_map(spark: SparkSession, sf_dir: str, hmm: bool) -> DataFrame:
     def make():
         from pycorrector_spark.fixtures import fmt_tokens
         from pycorrector_spark.textops import (dag_hmm_tokens, dag_max_prob_tokens,
-                                               hmm_tables_from_freq)
+                                               hmm_tables_from_freq, log_prob_table)
 
         wf = bc.value.word_freq
-        total = sum(wf.values())
-        tables = hmm_tables_from_freq(wf) if hmm else None  # deterministic; once per task
+        # deterministic; once per task
+        logp = log_prob_table(wf)
+        tables = hmm_tables_from_freq(wf) if hmm else None
 
         def tokens(t):
             if hmm:
-                return dag_hmm_tokens(t, wf, total, tables=tables)
-            return dag_max_prob_tokens(t, wf, total)
+                return dag_hmm_tokens(t, wf, tables=tables, logp_table=logp)
+            return dag_max_prob_tokens(t, wf, logp_table=logp)
 
         return lambda texts: {"tokens": [fmt_tokens(tokens(t)) for t in texts]}
 
@@ -1143,16 +1144,17 @@ def q_zh_segment_pos(spark, sf_dir):
 
     def make():
         from pycorrector_spark.fixtures import fmt_detections
-        from pycorrector_spark.textops import hmm_tables_from_freq, segment_pos
+        from pycorrector_spark.textops import (hmm_tables_from_freq, log_prob_table,
+                                               segment_pos)
 
         wf = bc.value.word_freq
-        total = sum(wf.values())
         tables = hmm_tables_from_freq(wf)
+        logp = log_prob_table(wf)
         person, place = bc_names.value
         return lambda texts: {
             "tagged": [
                 fmt_detections(
-                    segment_pos(t, wf, total, tables=tables,
+                    segment_pos(t, wf, tables=tables, logp_table=logp,
                                 person_names=person, place_names=place)
                 )
                 for t in texts
@@ -1166,16 +1168,16 @@ def q_zh_segment_pos(spark, sf_dir):
 def _zh_segment_pos_oracle_sql() -> str:
     from pycorrector_spark.dictio import full_dims
     from pycorrector_spark.fixtures import ZH_POOL, fmt_detections
-    from pycorrector_spark.textops import hmm_tables_from_freq, segment_pos
+    from pycorrector_spark.textops import hmm_tables_from_freq, log_prob_table, segment_pos
 
     wf = dict(_full_artifacts_cached().word_freq)
-    total = sum(wf.values())
     tables = hmm_tables_from_freq(wf)
+    logp = log_prob_table(wf)
     dims = full_dims()
     person, place = set(dims["person_names"]), set(dims["place_names"])
     rows = [
         (i, (fmt_detections(
-            segment_pos(s, wf, total, tables=tables,
+            segment_pos(s, wf, tables=tables, logp_table=logp,
                         person_names=person, place_names=place)),))
         for i, s in enumerate(ZH_POOL)
     ]
@@ -2268,12 +2270,12 @@ def _workers_cached():
 @functools.lru_cache(maxsize=None)
 def _zh_segment_oracle_sql() -> str:
     from pycorrector_spark.fixtures import ZH_POOL, fmt_tokens
-    from pycorrector_spark.textops import dag_max_prob_tokens
+    from pycorrector_spark.textops import dag_max_prob_tokens, log_prob_table
 
     wf = dict(_full_artifacts_cached().word_freq)
-    total = sum(wf.values())
+    logp = log_prob_table(wf)
     rows = [
-        (i, (fmt_tokens(dag_max_prob_tokens(s, wf, total)),))
+        (i, (fmt_tokens(dag_max_prob_tokens(s, wf, logp_table=logp)),))
         for i, s in enumerate(ZH_POOL)
     ]
     return _pool_oracle_sql(len(ZH_POOL), ["tokens"], rows)
@@ -2282,13 +2284,13 @@ def _zh_segment_oracle_sql() -> str:
 @functools.lru_cache(maxsize=None)
 def _zh_segment_hmm_oracle_sql() -> str:
     from pycorrector_spark.fixtures import ZH_POOL, fmt_tokens
-    from pycorrector_spark.textops import dag_hmm_tokens, hmm_tables_from_freq
+    from pycorrector_spark.textops import dag_hmm_tokens, hmm_tables_from_freq, log_prob_table
 
     wf = dict(_full_artifacts_cached().word_freq)
-    total = sum(wf.values())
     tables = hmm_tables_from_freq(wf)
+    logp = log_prob_table(wf)
     rows = [
-        (i, (fmt_tokens(dag_hmm_tokens(s, wf, total, tables=tables)),))
+        (i, (fmt_tokens(dag_hmm_tokens(s, wf, tables=tables, logp_table=logp)),))
         for i, s in enumerate(ZH_POOL)
     ]
     return _pool_oracle_sql(len(ZH_POOL), ["tokens"], rows)

@@ -5,11 +5,13 @@ Executor pattern: the model + dictionaries are built ONCE on the driver
 (deterministic), shipped as a broadcast, and materialized into a
 per-Python-worker singleton before the first batch (the reference's lazy
 ``check_detector_initialized`` — detector.py:152-154 — re-expressed for
-executors). Document ppl is one flat LM probe pass over the batch. A zh
-document runs detection once per fragment (``Corrector.detect_and_correct``
-shares it between the detect and correct outputs), with the LM windows of
-all its fragments scored in one probe pass and their MAD outlier tests run
-in one more; only candidate generation and splicing stay per-row Python.
+executors). Document ppl is one flat LM probe pass over the batch. The
+batch's zh documents are detected and corrected in one
+``Corrector.detect_and_correct_batch`` call: one LM-window and MAD pass
+per side (correct, then the fragments ``uniform()`` changes for detect)
+over every fragment of the batch, and the candidate re-rank in rounds, one
+flat LM probe per round. The serial oracle (``golden.golden_row``) runs
+the one-fragment ``detect``/``correct`` path instead; both agree bitwise.
 The keep/drop decision is one vectorized ``np.select`` over the batch.
 
 Task end: callers run the stage through ``stage.python_stage``, which
@@ -319,13 +321,14 @@ def process_batch(pdf: pd.DataFrame, zh: Corrector, en: EnSpellCorrector,
         uni_texts = [uniform(text.iat[i]) for i in idx_pass]
         ppl[idx_pass] = zh.lm.ppl_batch(uni_texts)
 
-    for i in idx_pass:
-        t = text.iat[i]
-        if lang.iat[i] == "zh":
-            dets, res = zh.detect_and_correct(t)
-        else:
-            res = en.correct(t)
-            dets = [[w, p, p + len(w), "en_spell"] for (w, c, p) in res["errors"]]
+    is_zh = lang.to_numpy()[idx_pass] == "zh"
+    zh_rows, en_rows = idx_pass[is_zh], idx_pass[~is_zh]
+    outs = zh.detect_and_correct_batch([text.iat[i] for i in zh_rows])
+    for i in en_rows:
+        res = en.correct(text.iat[i])
+        outs.append(([[w, p, p + len(w), "en_spell"] for (w, c, p) in res["errors"]], res))
+
+    for i, (dets, res) in zip(np.concatenate([zh_rows, en_rows]), outs):
         errors_col[i] = [
             {"word": w, "begin": int(b), "end": int(e), "type": ty}
             for (w, b, e, ty) in dets

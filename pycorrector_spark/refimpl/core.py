@@ -49,10 +49,20 @@ choices so they agree with EACH OTHER exactly):
    probability argmax (the reference iterates an unordered set, which is
    hash-seed dependent — we pin determinism).
 
-This module is deliberately row-at-a-time: it defines the labels the
-distributed pipeline must reproduce. The vectorized numpy primitives it
-calls (LM window scorer, MAD) are THE SAME functions the Spark pandas-UDF
-stages call, so oracle and pipeline agree bitwise.
+Two paths run the zh detector and corrector:
+
+- the oracle path, ``Detector.detect`` and ``Corrector.correct`` (and
+  ``golden.golden_row`` on top of them), goes one document and one
+  fragment at a time. It defines the labels the distributed pipeline must
+  reproduce;
+- the batch kernel, ``Corrector.detect_and_correct_batch``, which the
+  score stage calls once per Arrow batch, detects every fragment of the
+  batch with one LM-window pass per side and re-ranks the candidates of
+  all errors in rounds, one flat LM probe per round.
+
+Both call THE SAME vectorized numpy primitives (LM window scorer, MAD,
+``ppl_batch``), the segmentation DP over the same log-prob table, and the
+same re-rank selection (``pick_lm_item``), so they agree bitwise.
 """
 
 from __future__ import annotations
@@ -66,6 +76,7 @@ from ..textops import (
     dag_max_prob_tokens,
     is_cjk_string,
     is_filter_token,
+    log_prob_table,
     max_match_tokens,
     split_sentences_by_symbol,
     uniform,
@@ -96,6 +107,27 @@ def _check_contain_error(maybe_err, maybe_errors):
 def _add_maybe_error_item(maybe_err, maybe_errors):
     if maybe_err not in maybe_errors and not _check_contain_error(maybe_err, maybe_errors):
         maybe_errors.append(maybe_err)
+
+
+def pick_lm_item(cur_item, candidates, ppls, threshold):
+    """Keep cur_item if its ppl is within ``threshold`` of the best
+    candidate; else take the best (corrector.py:223-257). ``ppls[i]`` is
+    the ppl of the sentence with ``candidates[i]`` spliced in, and
+    cur_item is one of the candidates."""
+    order = sorted(range(len(candidates)), key=lambda i: ppls[i])
+    top_items = []
+    top_score = 0.0
+    for rank, i in enumerate(order):
+        if rank == 0:
+            top_score = float(ppls[i])
+            top_items.append(candidates[i])
+        elif float(ppls[i]) < top_score + threshold:
+            top_items.append(candidates[i])
+        else:
+            break
+    if cur_item not in top_items:
+        return top_items[0]
+    return cur_item
 
 
 class Detector:
@@ -129,7 +161,7 @@ class Detector:
             raise ValueError(f"unknown segment_mode {segment_mode!r}")
         self.segment_mode = segment_mode
         self._word_set = set(word_freq)
-        self._wf_total = sum(word_freq.values())  # O(dict) once, not per call
+        self._logp_table = log_prob_table(word_freq)  # O(dict) once, not per call
 
     # -- kenlm-equivalent helpers (detector.py:268-284) --
 
@@ -199,13 +231,16 @@ class Detector:
         # the base segmentation flags the identical set)
         if self.enable_word_error:
             if self.segment_mode == "dp":
-                tokens = dag_max_prob_tokens(sentence, self.word_freq, self._wf_total)
+                tokens = dag_max_prob_tokens(sentence, self.word_freq,
+                                             logp_table=self._logp_table)
             else:
                 tokens = max_match_tokens(sentence, self._word_set)
             for token, b, e in tokens:
-                if is_filter_token(token):
-                    continue
+                # both tests only skip; the dict test is cheaper and hits
+                # most tokens
                 if token in self.word_freq:
+                    continue
+                if is_filter_token(token):
                     continue
                 _add_maybe_error_item([token, b + start_idx, e + start_idx, ErrorType.word], maybe_errors)
 
@@ -229,6 +264,24 @@ class Detector:
         for sent, idx in split_sentences_by_symbol(sentence):
             maybe_errors += self._detect(sent, idx)
         return maybe_errors
+
+
+class _Fragment:
+    """One fragment's correction state in Corrector._correct_rounds."""
+
+    __slots__ = ("sent", "idx", "errors", "proper", "details")
+
+    def __init__(self, sent, idx, errors, proper):
+        self.sent = sent          # current text, earlier corrections spliced in
+        self.idx = idx            # start offset in the document
+        self.errors = errors      # _detect_with_proper's errors, by begin
+        self.proper = proper      # {(word, begin): forced proper correction}
+        self.details = []         # (error, correction, begin) triples
+
+    def splice(self, cur_item, corrected_item, begin_idx, before_sent, after_sent):
+        if corrected_item != cur_item:
+            self.sent = before_sent + corrected_item + after_sent
+            self.details.append((cur_item, corrected_item, begin_idx))
 
 
 class Corrector(Detector):
@@ -369,29 +422,14 @@ class Corrector(Detector):
         return pool[: len(pool) // fragment + 1]
 
     def get_lm_correct_item(self, cur_item, candidates, before_sent, after_sent, threshold=None):
-        if threshold is None:
-            threshold = self.PPL_THRESHOLD
         """Keep cur_item if its ppl is within `threshold` of the best
         candidate; else take the best (corrector.py:223-257)."""
-        result = cur_item
+        if threshold is None:
+            threshold = self.PPL_THRESHOLD
         if cur_item not in candidates:
             candidates = candidates + [cur_item]
-        texts = [before_sent + c + after_sent for c in candidates]
-        ppls = self.lm.ppl_batch(texts)
-        order = sorted(range(len(candidates)), key=lambda i: ppls[i])
-        top_items = []
-        top_score = 0.0
-        for rank, i in enumerate(order):
-            if rank == 0:
-                top_score = float(ppls[i])
-                top_items.append(candidates[i])
-            elif float(ppls[i]) < top_score + threshold:
-                top_items.append(candidates[i])
-            else:
-                break
-        if cur_item not in top_items:
-            result = top_items[0]
-        return result
+        ppls = self.lm.ppl_batch([before_sent + c + after_sent for c in candidates])
+        return pick_lm_item(cur_item, candidates, ppls, threshold)
 
     def correct(self, sentence: str, include_symbol: bool = True, num_fragment: int = 1, threshold: float = None):
         """Full correction; NOTE: no uniform() here (reference asymmetry,
@@ -400,28 +438,85 @@ class Corrector(Detector):
         found = [self._detect_fragments([f])[0] for f in frags]
         return self._correct_fragments(sentence, frags, found, num_fragment, threshold)
 
-    def detect_and_correct(self, text: str):
-        """``(detect(text), correct(text))`` with one detection per fragment.
+    def detect_and_correct_batch(self, texts):
+        """``[(detect(t), correct(t)) for t in texts]``, a whole batch at once.
 
-        correct() detects the fragments of ``text`` and detect() those of
-        ``uniform(text)``. _detect_with_proper is pure in (fragment, start),
-        so the detect side reuses the correct side's result wherever the
-        pair is unchanged and only detects the fragments uniform() changed
-        (full-width forms, uppercase Latin, a length-changing lower()).
-        Each side's LM windows are scored in one probe pass.
+        correct() detects the fragments of each text and detect() those of
+        ``uniform(text)``. _detect_with_proper is pure in (fragment, start)
+        and the LM windows are position-wise, so every fragment scores as
+        it would alone: the correct side's distinct pairs of the batch are
+        detected in one _detect_fragments call, and the detect side's
+        pairs not already found (the fragments uniform() changed:
+        full-width forms, uppercase Latin, a length-changing lower()) in
+        one more. The re-rank then runs in rounds (_correct_rounds).
         """
-        frags = split_sentences_by_symbol(text)
-        detected = self._detect_fragments(frags)
-        res = self._correct_fragments(text, frags, detected, 1, None)
-        found = dict(zip(frags, detected))
-        dets = []
-        if text.strip():
-            ufrags = split_sentences_by_symbol(uniform(text))
-            todo = [f for f in ufrags if f not in found]
-            found.update(zip(todo, self._detect_fragments(todo)))
-            for f in ufrags:
-                dets += found[f][0]
-        return dets, res
+        splits = [split_sentences_by_symbol(t) for t in texts]
+        pairs = list(dict.fromkeys(f for frags in splits for f in frags))
+        found = dict(zip(pairs, self._detect_fragments(pairs)))
+        results = self._correct_rounds(texts, splits, found)
+        usplits = [split_sentences_by_symbol(uniform(t)) if t.strip() else [] for t in texts]
+        todo = [f for f in dict.fromkeys(f for frags in usplits for f in frags) if f not in found]
+        found.update(zip(todo, self._detect_fragments(todo)))
+        return [
+            ([err for f in frags for err in found[f][0]], res)
+            for frags, res in zip(usplits, results)
+        ]
+
+    def _correct_rounds(self, texts, splits, found):
+        """_correct_fragments(text, split, ...) of every document, with the
+        LM re-rank run in rounds: round k takes the k-th error of every
+        fragment that has one, and the candidate sentences of all of them
+        go into one flat ppl_batch. Each fragment's k-th error is picked
+        and spliced against that fragment's current text, with its
+        original offsets, exactly as _correct_fragments does; errors of
+        different fragments are independent.
+        """
+        docs = [[_Fragment(sent, idx, *found[(sent, idx)]) for sent, idx in frags]
+                for frags in splits]
+        live = [f for doc in docs for f in doc if f.errors]
+        k = 0
+        while live:
+            probes = []
+            for f in live:
+                cur_item, begin_idx, end_idx, err_type = f.errors[k]
+                before_sent = f.sent[: (begin_idx - f.idx)]
+                after_sent = f.sent[(end_idx - f.idx):]
+                if err_type == ErrorType.confusion:
+                    corrected_item = self.custom_confusion[cur_item]
+                elif err_type == ErrorType.proper:
+                    corrected_item = f.proper.get((cur_item, begin_idx), cur_item)
+                else:
+                    candidates = self.generate_items(cur_item)
+                    if candidates:
+                        if cur_item not in candidates:
+                            candidates = candidates + [cur_item]
+                        probes.append((f, cur_item, begin_idx, before_sent, after_sent, candidates))
+                    continue
+                f.splice(cur_item, corrected_item, begin_idx, before_sent, after_sent)
+            if probes:
+                ppls = self.lm.ppl_batch([
+                    before_sent + c + after_sent
+                    for _, _, _, before_sent, after_sent, candidates in probes
+                    for c in candidates
+                ])
+                o = 0
+                for f, cur_item, begin_idx, before_sent, after_sent, candidates in probes:
+                    n = len(candidates)
+                    corrected_item = pick_lm_item(
+                        cur_item, candidates, ppls[o:o + n], self.PPL_THRESHOLD
+                    )
+                    o += n
+                    f.splice(cur_item, corrected_item, begin_idx, before_sent, after_sent)
+            k += 1
+            live = [f for f in live if len(f.errors) > k]
+        return [
+            {
+                "source": text,
+                "target": "".join(f.sent for f in doc),
+                "errors": sorted((d for f in doc for d in f.details), key=lambda d: d[2]),
+            }
+            for text, doc in zip(texts, docs)
+        ]
 
     def _correct_fragments(self, sentence: str, frags, found, num_fragment: int, threshold: float):
         """Candidate generation + LM re-rank + splice over the (fragment,

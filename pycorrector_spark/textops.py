@@ -20,7 +20,9 @@ from __future__ import annotations
 
 import functools
 import hashlib
+import math
 import re
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -174,52 +176,65 @@ def max_match_tokens(sentence: str, words: set, max_len: int = 8):
 # N-grams
 # --------------------------------------------------------------------------
 
+class LogProbTable(NamedTuple):
+    """The scores the segmentation DP reads, built once per word dict."""
+
+    logp: dict      # word -> log(freq) - log(total), freq > 0 words only
+    unk: float      # score of a char outside ``logp``: -log(total)
+    longest: int    # longest word in ``logp``
+
+
+def log_prob_table(word_freq: dict, total: int = None) -> LogProbTable:
+    """O(dict): build it once and pass it to every segmentation call."""
+    if total is None:
+        total = sum(word_freq.values())
+    log_total = math.log(total or 1)
+    logp = {w: math.log(f) - log_total for w, f in word_freq.items() if f > 0}
+    return LogProbTable(logp, -log_total, max(map(len, logp), default=0))
+
+
 def dag_max_prob_tokens(sentence: str, word_freq: dict, total: int = None,
-                        max_word_len: int = 16):
+                        max_word_len: int = 16, logp_table: LogProbTable = None):
     """[(token, begin, end)] by the max-probability DAG route — the public
     jieba ``cut(HMM=False)`` dynamic program (reference utils/tokenizer.py
-    delegates to jieba, absent in this sandbox): build the DAG of dict
-    words starting at each position, then choose the segmentation
-    maximizing sum(log(freq/total)) right-to-left; ties break toward the
+    delegates to jieba, absent in this sandbox): the dict words starting
+    at each position are the DAG's edges, and the segmentation maximizing
+    sum(log(freq/total)) is chosen right-to-left; ties break toward the
     LONGER word (jieba's max() over (score, end) tuples). Given the same
     frequency dict this reproduces jieba's no-HMM segmentation exactly —
     the residual divergence vs the reference is dict CONTENT (jieba's
     350k-entry dict.txt is not shipped), which tests quantify against the
-    greedy max-match stand-in."""
-    import math as _math
+    greedy max-match stand-in.
 
+    ``logp_table`` is ``log_prob_table(word_freq, total)``; callers that
+    segment in a loop pass it, since building it is O(dict)."""
     n = len(sentence)
     if n == 0:
         return []
-    if total is None:
-        total = sum(word_freq.values())
-    log_total = _math.log(total or 1)
-    # DAG: ends[i] = candidate token END indexes (inclusive) starting at i
-    dag = []
-    for i in range(n):
-        ends = [i]  # a single char is always a segment candidate
-        upper = min(n, i + max_word_len)
-        for j in range(i + 2, upper + 1):
-            # jieba's get_DAG adds an edge only for freq > 0 entries
-            # (zero-frequency rows exist in the dict format purely as
-            # prefix markers and must not become segment candidates)
-            if word_freq.get(sentence[i:j]):
-                ends.append(j - 1)
-        dag.append(ends)
-    route = [(0.0, 0)] * (n + 1)
+    if logp_table is None:
+        logp_table = log_prob_table(word_freq, total)
+    logp, unk, longest = logp_table
+    get = logp.get
+    cap = min(max_word_len, longest)
+    # score[i] / end[i]: best route of sentence[i:] and its first word's end
+    score = [0.0] * (n + 1)
+    end = [0] * n
     for i in range(n - 1, -1, -1):
-        route[i] = max(
-            (
-                _math.log(word_freq.get(sentence[i: j + 1]) or 1) - log_total
-                + route[j + 1][0],
-                j,
-            )
-            for j in dag[i]
-        )
+        # a single char is always a candidate; longer ones are DAG edges
+        # only for freq > 0 words (jieba's get_DAG: zero-frequency rows
+        # are prefix markers, never segment candidates)
+        best = (get(sentence[i], unk) + score[i + 1], i + 1)
+        for j in range(i + 2, min(n, i + cap) + 1):
+            lp = get(sentence[i:j])
+            if lp is not None:
+                cand = (lp + score[j], j)
+                if cand > best:
+                    best = cand
+        score[i], end[i] = best
     out = []
     i = 0
     while i < n:
-        j = route[i][1] + 1
+        j = end[i]
         out.append((sentence[i:j], i, j))
         i = j
     return out
@@ -254,8 +269,6 @@ def hmm_tables_from_freq(word_freq: dict):
     the single-vs-multi-char word mass ratio (the dict carries no word
     ORDER, so the cross-word bigram is approximated by the unigram
     start-state mass — divergence documented above)."""
-    import math
-
     emit_counts = {s: {} for s in "BMES"}
     trans_counts = {"B": {"M": 0.0, "E": 0.0}, "M": {"M": 0.0, "E": 0.0}}
     single_mass = 0.0
@@ -375,17 +388,17 @@ def hmm_cut_spans(block: str, tables) -> list:
 
 
 def dag_hmm_tokens(sentence: str, word_freq: dict, total: int = None,
-                   tables=None):
+                   tables=None, logp_table: LogProbTable = None):
     """[(token, begin, end)] by jieba's ``cut(HMM=True)`` dataflow: the
     max-prob DAG route first, then consecutive single-char pieces are
     buffered and — when the buffer is not itself a dict word — re-cut by
     the BMES viterbi so out-of-vocabulary spans (unseen names, new words)
     join into multi-char tokens (jieba __cut_DAG; reference
-    tokenizer.py:100-127). Tables default to hmm_tables_from_freq over
-    the same dict."""
+    tokenizer.py:100-127). Tables default to hmm_tables_from_freq and
+    log_prob_table over the same dict."""
     if tables is None:
         tables = hmm_tables_from_freq(word_freq)
-    base = dag_max_prob_tokens(sentence, word_freq, total)
+    base = dag_max_prob_tokens(sentence, word_freq, total, logp_table=logp_table)
     out = []
     buf = []  # [(char, pos)] run of consecutive 1-char pieces
 
@@ -416,13 +429,14 @@ def dag_hmm_tokens(sentence: str, word_freq: dict, total: int = None,
     return out
 
 
-def search_mode_tokens(sentence: str, word_freq: dict, total: int = None):
+def search_mode_tokens(sentence: str, word_freq: dict, total: int = None,
+                       logp_table: LogProbTable = None):
     """jieba search-mode token stream (``tokenize(..., 'search')``): the
     base max-prob segmentation plus every in-dict 2-gram / 3-gram sub-word
     of longer tokens, sub-words emitted before their parent token — the
     stream the reference's OOV scan iterates (detector.py:427-438)."""
     out = []
-    for w, b, e in dag_max_prob_tokens(sentence, word_freq, total):
+    for w, b, e in dag_max_prob_tokens(sentence, word_freq, total, logp_table=logp_table):
         if len(w) > 2:
             for k in range(len(w) - 1):
                 g = w[k: k + 2]
@@ -478,7 +492,7 @@ def pos_of_token(token: str, word_freq: dict,
 
 def segment_pos(sentence: str, word_freq: dict, total: int = None,
                 tables=None, person_names=None, place_names=None,
-                cut_type: str = "word"):
+                cut_type: str = "word", logp_table: LogProbTable = None):
     """[(token, begin, end, flag)] — the reference's
     ``segment(sentence, cut_type, pos=True)`` dataflow
     (tokenizer.py:100-127): word mode runs the jieba-equivalent
@@ -488,7 +502,8 @@ def segment_pos(sentence: str, word_freq: dict, total: int = None,
     if cut_type == "char":
         toks = [(ch, i, i + 1) for i, ch in enumerate(sentence)]
     else:
-        toks = dag_hmm_tokens(sentence, word_freq, total, tables=tables)
+        toks = dag_hmm_tokens(sentence, word_freq, total, tables=tables,
+                              logp_table=logp_table)
     return [
         (t, b, e, pos_of_token(t, word_freq, person_names, place_names))
         for t, b, e in toks

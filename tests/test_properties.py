@@ -16,6 +16,7 @@ from hypothesis import strategies as st
 
 from pycorrector_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pycorrector_spark.dicts import SIMILAR_CHARS
+from pycorrector_spark.fixtures import _CORRUPT_CONFUSION, _CORRUPT_SIMCHAR, CLEAN_ZH, PROPER_SENTS
 from pycorrector_spark.refimpl.proper import levenshtein
 from pycorrector_spark.textops import (
     longest_match_rewrite,
@@ -469,3 +470,164 @@ SCORE_DOC = st.one_of(st.text(max_size=60), st.just(""), SCORE_TEXT, MIN_LEN_DOC
 @settings(max_examples=200, deadline=None)
 def test_process_batch_matches_golden(texts, cfg):
     _assert_batch_matches_golden(texts, cfg)
+
+
+# ---------------------------------------------------------------------------
+# segmentation over the log-prob table vs the per-hit-log DP
+# ---------------------------------------------------------------------------
+
+
+def _dag_max_prob_tokens_ref(sentence, word_freq, total=None, max_word_len=16):
+    """Reference max-prob DAG route (jieba cut(HMM=False)): a DAG of
+    freq > 0 dict words per position, then a right-to-left DP taking
+    math.log of every hit, max() over (score, end) tuples."""
+    import math as _math
+
+    n = len(sentence)
+    if n == 0:
+        return []
+    if total is None:
+        total = sum(word_freq.values())
+    log_total = _math.log(total or 1)
+    dag = []
+    for i in range(n):
+        ends = [i]
+        upper = min(n, i + max_word_len)
+        for j in range(i + 2, upper + 1):
+            if word_freq.get(sentence[i:j]):
+                ends.append(j - 1)
+        dag.append(ends)
+    route = [(0.0, 0)] * (n + 1)
+    for i in range(n - 1, -1, -1):
+        route[i] = max(
+            (
+                _math.log(word_freq.get(sentence[i: j + 1]) or 1) - log_total
+                + route[j + 1][0],
+                j,
+            )
+            for j in dag[i]
+        )
+    out = []
+    i = 0
+    while i < n:
+        j = route[i][1] + 1
+        out.append((sentence[i:j], i, j))
+        i = j
+    return out
+
+
+SEG_ALPHABET = "甲乙丙丁戊"
+
+
+@st.composite
+def _seg_dict(draw):
+    """Words up to 7 chars over a 5-char alphabet with few distinct
+    frequencies (equal-score routes are common), some of them 0, plus
+    zero-freq prefix entries of drawn words (jieba's prefix markers)."""
+    freq = st.one_of(st.sampled_from([0, 1, 2, 4, 8]), st.integers(0, 10_000),
+                     st.sampled_from([0.5, 2.5]))
+    wf = draw(st.dictionaries(st.text(alphabet=SEG_ALPHABET, min_size=1, max_size=7),
+                              freq, max_size=25))
+    if draw(st.booleans()):
+        for w in list(wf):
+            for k in range(1, len(w)):
+                wf.setdefault(w[:k], 0)
+    return wf
+
+
+@given(st.text(alphabet=SEG_ALPHABET + "的a1，", max_size=40), _seg_dict(),
+       st.integers(1, 9), st.one_of(st.none(), st.integers(0, 10 ** 6)))
+@settings(max_examples=500, deadline=None)
+def test_dag_table_dp_matches_per_hit_log_dp(sentence, wf, max_word_len, total):
+    from pycorrector_spark.textops import dag_max_prob_tokens, log_prob_table
+
+    want = _dag_max_prob_tokens_ref(sentence, wf, total, max_word_len)
+    assert dag_max_prob_tokens(sentence, wf, total, max_word_len) == want
+    table = log_prob_table(wf, total)
+    assert dag_max_prob_tokens(sentence, wf, max_word_len=max_word_len,
+                               logp_table=table) == want
+
+
+# ---------------------------------------------------------------------------
+# batch detect/correct kernel vs the one-document oracle path
+# ---------------------------------------------------------------------------
+
+# length-changing confusion entries, so a fragment's later errors splice
+# against shifted text: "让坐" maps to 3 chars instead of 2, "心工作" to 2
+# instead of 3
+KERNEL_CONFUSION = {"让坐": "让座位", "心工作": "新工"}
+
+
+@functools.lru_cache(maxsize=None)
+def _kernel_corrector():
+    from pycorrector_spark.operators.score import build_artifacts
+    from pycorrector_spark.refimpl.core import Corrector
+
+    art = build_artifacts()
+    return Corrector(
+        lm=art.lm, word_freq=art.word_freq,
+        confusion_dict={**art.confusion, **KERNEL_CONFUSION},
+        stopwords=art.stopwords, similar_chars=art.similar,
+        ppl_threshold=art.cfg.ppl_rerank_threshold,
+    )
+
+
+@st.composite
+def _kernel_sentence(draw):
+    """A fixture sentence with injected errors: corruption rules, then
+    similar-char swaps (several per fragment, so re-rank runs several
+    rounds), then an optional full-width form and a Latin insert
+    (uniform() changes those fragments)."""
+    s = draw(st.sampled_from(CLEAN_ZH + PROPER_SENTS))
+    for a, b in draw(st.lists(st.sampled_from(_CORRUPT_CONFUSION + _CORRUPT_SIMCHAR), max_size=3)):
+        s = s.replace(a, b, 1)
+    chars = list(s)
+    swappable = [i for i, c in enumerate(chars) if c in SIMILAR_CHARS]
+    if swappable:
+        for i in draw(st.lists(st.sampled_from(swappable), max_size=4)):
+            chars[i] = draw(st.sampled_from(sorted(SIMILAR_CHARS[chars[i]])))
+    s = "".join(chars)
+    s = draw(st.sampled_from([s, string_b2q(s)]))
+    latin = draw(st.sampled_from(["", "USB", "Gpu", "ＡＢ１", "İ", "abc"]))
+    k = draw(st.integers(0, len(s)))
+    return s[:k] + latin + s[k:]
+
+
+KERNEL_DOC = st.one_of(
+    st.builds("".join, st.lists(_kernel_sentence(), max_size=4)),
+    st.sampled_from(["", " ", " \t\n ", "，。！？"]),
+)
+
+
+@given(st.lists(KERNEL_DOC, max_size=6), st.booleans())
+@settings(max_examples=200, deadline=None)
+def test_detect_and_correct_batch_matches_oracle(texts, repeat):
+    zh = _kernel_corrector()
+    if repeat and texts:
+        texts = texts + [texts[0]]  # the same doc twice in one batch
+    assert zh.detect_and_correct_batch(texts) == [(zh.detect(t), zh.correct(t)) for t in texts]
+
+
+def test_detect_and_correct_batch_cases():
+    """The cases the property above must reach, pinned as one batch."""
+    zh = _kernel_corrector()
+    # one fragment: a length-changing confusion splice, then 4 errors
+    # re-ranked in later rounds at the original offsets
+    many = "老人让坐数据处理系统需要高笑绿得氛析能力"
+    texts = [
+        many,
+        "我听说，你找到心工作，我很高兴。",       # 3 chars -> 2
+        string_b2q("少先队员因该为老人让坐") + "USB",  # full-width + uppercase
+        "", " \t\n ",
+        many,
+    ]
+    want = [(zh.detect(t), zh.correct(t)) for t in texts]
+    assert zh.detect_and_correct_batch(texts) == want
+    assert len(want[0][0]) >= 4 and len(want[0][1]["errors"]) >= 3
+    assert len(want[1][1]["target"]) != len(texts[1])
+    assert uniform(texts[2]) != texts[2] and want[2][0]
+    clean = [t for t in CLEAN_ZH if not zh.detect(t) and not zh.correct(t)["errors"]]
+    assert clean
+    assert zh.detect_and_correct_batch(clean) == [
+        ([], {"source": t, "target": t, "errors": []}) for t in clean
+    ]

@@ -122,8 +122,10 @@ def test_detect_and_correct_matches_separate_calls(workers, request):
         zh = zh[0]
     texts = DETECT_AND_CORRECT_TEXTS + _zh_texts_of_make_docs()
     assert len(texts) > 100
-    for t in texts:
-        assert zh.detect_and_correct(t) == (zh.detect(t), zh.correct(t)), t
+    got = zh.detect_and_correct_batch(texts)
+    assert len(got) == len(texts)
+    for t, pair in zip(texts, got):
+        assert pair == (zh.detect(t), zh.correct(t)), t
 
 
 # -- forced confusion corrector --
