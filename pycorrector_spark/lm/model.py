@@ -232,34 +232,33 @@ class CharNgramLM:
         """Vectorized perplexity over many strings (one flat probe pass
         per context-length group and order level).
 
-        Bitwise-identical to ``perplexity_chars`` per row: the per-position
-        conditionals are computed by the same probe functions and summed
-        per sentence with np.add.reduceat (same pairwise order as the
-        np.sum over one sentence's positions).
+        Each row's float is bitwise the same in any batch (a row's
+        per-position conditionals do not depend on its neighbours, and
+        np.add.reduceat sums each row's segment alone), so
+        ``perplexity_chars`` equals the batched value. It is NOT bitwise
+        ``score_ids``/``score_chars``: their np.sum adds the same terms in
+        another order, which differs in the last bits.
         """
         if len(texts) == 0:
             return np.empty(0, dtype=np.float64)
-        encs = [self.encode(t) for t in texts]
-        lens = np.array([len(e) for e in encs], dtype=np.int64)
-        # build flat sequence [bos] ids [eos] per sentence
-        parts = []
-        for e in encs:
-            parts.append(np.concatenate(([self.bos_id], e, [self.eos_id])))
-        flat = np.concatenate(parts)
+        lens = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))
+        ids = self.encode("".join(texts))
+        # flat sequence [bos] ids [eos] per sentence: char k of row r sits
+        # at k + 2r + 1
         seq_lens = lens + 2
-        starts = np.concatenate(([0], np.cumsum(seq_lens)[:-1]))
+        starts = np.cumsum(seq_lens) - seq_lens
+        row_of_char = np.repeat(np.arange(len(lens)), lens)
+        flat = np.empty(int(seq_lens.sum()), dtype=np.int64)
+        flat[starts] = self.bos_id
+        flat[starts + seq_lens - 1] = self.eos_id
+        flat[np.arange(len(ids)) + 2 * row_of_char + 1] = ids
         # positions to score: all except the bos at each start
-        total_pos = int(np.sum(seq_lens - 1))
-        pos = np.empty(total_pos, dtype=np.int64)
-        row = np.empty(total_pos, dtype=np.int64)
-        o = 0
-        for r, (s, L) in enumerate(zip(starts, seq_lens)):
-            k = L - 1
-            pos[o: o + k] = np.arange(s + 1, s + L)
-            row[o: o + k] = r
-            o += k
+        total_pos = len(flat) - len(lens)
+        row = np.repeat(np.arange(len(lens)), seq_lens - 1)
+        row_starts = np.cumsum(seq_lens - 1) - (seq_lens - 1)
+        local = np.arange(total_pos) - row_starts[row] + 1  # context to the left
+        pos = starts[row] + local
         w = flat[pos]
-        local = pos - starts[row]       # how much context exists to the left
         avail = np.minimum(local, self.order - 1)
         out = np.empty(total_pos, dtype=np.float64)
         # m=0 included: for an order-1 model every position is context-free
@@ -273,7 +272,6 @@ class CharNgramLM:
             ctx = [flat[pm - (m - j)] for j in range(m)]
             out[mask] = self.cond(ctx, w[mask])
         # reduce per row
-        row_starts = np.concatenate(([0], np.cumsum(seq_lens - 1)[:-1]))
         sums = np.add.reduceat(out, row_starts)
         return 10.0 ** (-sums / (lens + 1))
 

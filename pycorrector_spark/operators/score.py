@@ -5,8 +5,12 @@ Executor pattern: the model + dictionaries are built ONCE on the driver
 (deterministic), shipped as a broadcast, and materialized into a
 per-Python-worker singleton before the first batch (the reference's lazy
 ``check_detector_initialized`` — detector.py:152-154 — re-expressed for
-executors). Document ppl is one flat LM probe pass over the batch. The
-batch's zh documents are detected and corrected in one
+executors). The cheap layers read the batch as one codepoint buffer:
+``signals_frame`` takes the char-class counts, stripped length and word
+count from class masks and prefix sums, ``scrub_series`` runs each PII
+rule only on the texts that hold its trigger, and ``ppl_batch`` encodes
+the joined texts once for one flat LM probe pass. The batch's zh
+documents are detected and corrected in one
 ``Corrector.detect_and_correct_batch`` call: one LM-window and MAD pass
 per side (correct, then the fragments ``uniform()`` changes for detect)
 over every fragment of the batch, and the candidate re-rank in rounds, one
@@ -285,10 +289,11 @@ def process_batch(pdf: pd.DataFrame, zh: Corrector, en: EnSpellCorrector,
     batch. Expects a `text` column; everything else passes through.
 
     The cheap signals (length/symbol/repetition/langid) are computed here
-    too — vectorized pandas/numpy with the same `re` patterns as the
-    scalar oracle. They were originally JVM column expressions, but
-    java.util.regex anti-scales under thread parallelism in this
-    environment (see BENCH/BASELINE.md) while this path scales linearly.
+    too, by ``signals_frame`` over the batch's codepoint buffer; the
+    property tests hold them equal to the scalar oracle's regex counts.
+    They were originally JVM column expressions, but java.util.regex
+    anti-scales under thread parallelism in this environment (see
+    BENCH/BASELINE.md) while this path scales linearly.
     """
     from ..textops import signals_frame
 

@@ -556,9 +556,9 @@ class MultiPatternScanner:
 
 # --------------------------------------------------------------------------
 # PII / junk scrubbing — the regex-normalization stage of the pipeline.
-# One source of truth for the patterns; applied identically in the serial
-# oracle (re.sub chain) and the Spark stage (pandas .str.replace chain,
-# same Python `re` engine -> byte-identical output).
+# One source of truth for the patterns: the serial oracle runs the whole
+# re.sub chain per text; the Spark stage runs the same compiled rules, each
+# only on the texts that hold its trigger (same Python `re` engine).
 # --------------------------------------------------------------------------
 
 # Patterns are written in the common subset of Python re / Java regex /
@@ -584,6 +584,15 @@ SCRUB_RULES = [(n, re.compile(p, re.ASCII), r) for n, p, r in SCRUB_PATTERNS]
 
 SCRUB_STRIP_CHARS = " \t\n\r"
 
+# Trigger gates (scrub_series): a rule can only change a text that holds
+# its trigger — email an "@", url "://" or "www.", ip/phone/idnum an ASCII
+# digit, ws_collapse a tab or two adjacent spaces (a lone space is replaced
+# by itself). The gates are read once, on the ORIGINAL text, which is sound
+# because no rule can create a trigger for a later one: every replacement
+# token is non-empty, holds no space and none of the trigger chars, so a
+# trigger in a rewritten text lies wholly outside the tokens, made of
+# original chars that were already adjacent.
+
 
 def scrub_text(s: str) -> str:
     """Apply PII scrub rules then strip — frozen scrub semantics."""
@@ -592,11 +601,59 @@ def scrub_text(s: str) -> str:
     return s.strip(SCRUB_STRIP_CHARS)
 
 
+def _codepoints(texts: list) -> tuple:
+    """(cps, starts, ends): the texts as one uint32 codepoint array and
+    each text's [start, end) in it. ``surrogatepass`` keeps a lone
+    surrogate as one codepoint, as ``len`` counts it."""
+    lens = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))
+    ends = np.cumsum(lens)
+    cps = np.frombuffer("".join(texts).encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
+    return cps, ends - lens, ends
+
+
+def _doc_any(mask: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """Per text: does ``mask`` hold a True in [start, end)?"""
+    hits = np.flatnonzero(mask)
+    return np.searchsorted(hits, ends) > np.searchsorted(hits, starts)
+
+
+def _seq_at(cps: np.ndarray, seq: str) -> np.ndarray:
+    """True at every position where ``seq`` starts (a match may run into
+    the next text: a false gate, never a missed one)."""
+    k = len(cps) - len(seq) + 1
+    out = np.zeros(len(cps), dtype=bool)
+    if k > 0:
+        hit = cps[:k] == ord(seq[0])
+        for j, ch in enumerate(seq[1:], 1):
+            hit &= cps[j: j + k] == ord(ch)
+        out[:k] = hit
+    return out
+
+
 def scrub_series(s: pd.Series) -> pd.Series:
-    """Vectorized scrub over a string Series (same `re` engine as scalar)."""
-    for _name, pat, repl in SCRUB_RULES:
-        s = s.str.replace(pat, repl, regex=True)
-    return s.str.strip(SCRUB_STRIP_CHARS)
+    """``scrub_text`` over a Series; nulls stay null.
+
+    Each rule's ``pat.sub`` runs only on the texts that hold its trigger
+    (see the gate note above SCRUB_RULES), read from one codepoint buffer
+    of the batch; the final strip runs on every text. Agreement with
+    ``scrub_text`` is checked by the property tests, not by construction.
+    """
+    vals = s.tolist()
+    cps, starts, ends = _codepoints([v if isinstance(v, str) else "" for v in vals])
+    digit = _doc_any((cps >= ord("0")) & (cps <= ord("9")), starts, ends)
+    gates = {
+        "email": _doc_any(cps == ord("@"), starts, ends),
+        "url": _doc_any(_seq_at(cps, "://") | _seq_at(cps, "www."), starts, ends),
+        "ip": digit,
+        "phone": digit,
+        "idnum": digit,
+        "ws_collapse": _doc_any((cps == ord("\t")) | _seq_at(cps, "  "), starts, ends),
+    }
+    for name, pat, repl in SCRUB_RULES:
+        for i in np.flatnonzero(gates[name]):
+            vals[i] = pat.sub(repl, vals[i])
+    out = [v.strip(SCRUB_STRIP_CHARS) if isinstance(v, str) else v for v in vals]
+    return pd.Series(out, index=s.index, dtype=object)
 
 
 # --------------------------------------------------------------------------
@@ -651,32 +708,66 @@ def quality_signals(text: str, min_len: int = MIN_LEN, max_len: int = MAX_LEN) -
     }
 
 
-def signals_frame(texts: pd.Series, min_len: int = MIN_LEN, max_len: int = MAX_LEN) -> pd.DataFrame:
-    """Vectorized quality + langid signals for an Arrow batch.
+# codepoint classes of the frozen patterns above; NON_ALNUM is OTHER plus
+# SPLIT_WS, the str.split() whitespace outside WS_CHARS (\x0b, \xa0, U+3000,
+# ...; none lies above U+3000). The table's last entry classes every
+# codepoint above 龥.
+_CLS_OTHER, _CLS_SPLIT_WS, _CLS_WS, _CLS_CJK, _CLS_LATIN, _CLS_DIGIT = range(6)
+_CLASS_TABLE = np.full(ord("龥") + 2, _CLS_OTHER, dtype=np.int8)
+_CLASS_TABLE[[c for c in range(0x3001) if chr(c).isspace()]] = _CLS_SPLIT_WS
+_CLASS_TABLE[[ord(c) for c in WS_CHARS]] = _CLS_WS
+_CLASS_TABLE[ord("一"): ord("龥") + 1] = _CLS_CJK
+_CLASS_TABLE[ord("A"): ord("Z") + 1] = _CLS_LATIN
+_CLASS_TABLE[ord("a"): ord("z") + 1] = _CLS_LATIN
+_CLASS_TABLE[ord("0"): ord("9") + 1] = _CLS_DIGIT
 
-    Same regexes, same Python `re` engine as the scalar forms above, so
-    values agree bitwise with quality_signals()/lang_id() by construction.
+
+def signals_frame(texts: pd.Series, min_len: int = MIN_LEN, max_len: int = MAX_LEN) -> pd.DataFrame:
+    """Vectorized quality + langid signals for an Arrow batch; a null text
+    gets the signals of "".
+
+    The batch is decoded once into a codepoint buffer: the char-class
+    counts, the stripped length and the word count come from class masks
+    and prefix sums at the texts' offsets; only the distinct-word count
+    splits each text. Agreement with quality_signals()/lang_id() is
+    checked by the property tests, not by construction.
     (The JVM column variants in operators/quality.py compute the same
     frozen definitions for the SQL oracle; java.util.regex turned out to
     anti-scale under thread parallelism in this environment — see
     BENCH/BASELINE.md — so the pipeline hot path uses this form.)
     """
-    t = texts.fillna("")
-    n_chars = t.str.len().to_numpy()
-    stripped = t.str.strip(WS_CHARS)
-    n_stripped = stripped.str.len().to_numpy()
-    n_sym = t.str.count(NON_ALNUM_RE).to_numpy()
-    n_ws = t.str.count(WS_RE).to_numpy()
-    n_cjk = t.str.count(CJK_RE).to_numpy()
-    n_latin = t.str.count(LATIN_RE).to_numpy()
+    docs = texts.fillna("").tolist()
+    n = len(docs)
+    cps, starts, ends = _codepoints(docs)
+    n_chars = ends - starts
+    row = np.repeat(np.arange(n), n_chars)
+    cls = _CLASS_TABLE[np.minimum(cps, len(_CLASS_TABLE) - 1)]
+    counts = np.bincount(row * 6 + cls, minlength=6 * n).reshape(n, 6)
+    n_sym = counts[:, _CLS_OTHER] + counts[:, _CLS_SPLIT_WS]
+    n_ws = counts[:, _CLS_WS]
+    n_cjk = counts[:, _CLS_CJK]
+    n_latin = counts[:, _CLS_LATIN]
 
-    words = stripped.str.split(WORD_SPLIT_RE)
-    n_words = np.empty(len(t), dtype=np.int64)
-    n_distinct = np.empty(len(t), dtype=np.int64)
-    for i, w in enumerate(words):
-        w = [x for x in w if x] if w else []
-        n_words[i] = len(w)
-        n_distinct[i] = len(set(w))
+    ws = cls == _CLS_WS
+    # stripped length: first to last non-WS char of each text
+    solid = np.flatnonzero(~ws)
+    n_stripped = np.zeros(n, dtype=np.int64)
+    has = n_chars > n_ws
+    if has.any():
+        first = solid[np.searchsorted(solid, starts[has])]
+        last = solid[np.searchsorted(solid, ends[has]) - 1]
+        n_stripped[has] = last - first + 1
+    # words: non-WS chars at a text's start or after a WS char
+    after_ws = np.ones(len(cps), dtype=bool)
+    after_ws[1:] = ws[:-1]
+    after_ws[starts[n_chars > 0]] = True
+    n_words = np.bincount(row[~ws & after_ws], minlength=n)
+    # str.split() agrees with WORD_SPLIT_RE unless a text holds SPLIT_WS
+    n_distinct = np.array(
+        [len({w for w in WORD_SPLIT_RE.split(d) if w}) if odd else len(set(d.split()))
+         for d, odd in zip(docs, counts[:, _CLS_SPLIT_WS] > 0)],
+        dtype=np.int64,
+    )
 
     symbol_ratio = np.where(n_chars > 0, n_sym / np.maximum(n_chars, 1), 1.0)
     rep_ratio = np.where(n_words > 0, 1.0 - n_distinct / np.maximum(n_words, 1), 1.0)

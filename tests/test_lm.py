@@ -4,6 +4,8 @@
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from pycorrector_spark.fixtures import lm_corpus
 from pycorrector_spark.lm.model import mad_outlier_indices, train_char_lm
@@ -48,6 +50,64 @@ def test_ppl_batch_bitwise_matches_scalar(lm):
     batch = lm.ppl_batch(texts)
     for t, b in zip(texts, batch):
         assert float(b) == lm.perplexity_chars(t)
+
+
+def _ppl_batch_per_text(lm, texts):
+    """ppl_batch as it was built before the one-encode builder: one
+    encode, concatenate and arange per text. Kept as the bitwise oracle."""
+    if len(texts) == 0:
+        return np.empty(0, dtype=np.float64)
+    encs = [lm.encode(t) for t in texts]
+    lens = np.array([len(e) for e in encs], dtype=np.int64)
+    parts = []
+    for e in encs:
+        parts.append(np.concatenate(([lm.bos_id], e, [lm.eos_id])))
+    flat = np.concatenate(parts)
+    seq_lens = lens + 2
+    starts = np.concatenate(([0], np.cumsum(seq_lens)[:-1]))
+    total_pos = int(np.sum(seq_lens - 1))
+    pos = np.empty(total_pos, dtype=np.int64)
+    row = np.empty(total_pos, dtype=np.int64)
+    o = 0
+    for r, (s, L) in enumerate(zip(starts, seq_lens)):
+        k = L - 1
+        pos[o: o + k] = np.arange(s + 1, s + L)
+        row[o: o + k] = r
+        o += k
+    w = flat[pos]
+    local = pos - starts[row]
+    avail = np.minimum(local, lm.order - 1)
+    out = np.empty(total_pos, dtype=np.float64)
+    for m in range(0, lm.order):
+        mask = avail == m
+        if not mask.any():
+            continue
+        pm = pos[mask]
+        ctx = [flat[pm - (m - j)] for j in range(m)]
+        out[mask] = lm.cond(ctx, w[mask])
+    row_starts = np.concatenate(([0], np.cumsum(seq_lens - 1)[:-1]))
+    sums = np.add.reduceat(out, row_starts)
+    return 10.0 ** (-sums / (lens + 1))
+
+
+# in-vocabulary CJK and ASCII, chars the LM has never seen (runes, an
+# emoji, a non-BMP CJK char); texts of 0-3 chars sit below the LM order
+_PPL_CHARS = list("少先队员应该为老人让座我的家乡ab1 ，。") + ["ᚠ", "ᚢ", "😀", "𠀀"]
+_PPL_TEXT = st.one_of(
+    st.just(""),
+    st.text(alphabet=st.sampled_from(_PPL_CHARS), max_size=3),
+    st.text(alphabet=st.sampled_from(_PPL_CHARS), max_size=40),
+)
+
+
+@given(st.one_of(st.lists(_PPL_TEXT, max_size=10), st.lists(st.just(""), min_size=1, max_size=4)))
+@settings(max_examples=300, deadline=None)
+def test_ppl_batch_rows_bitwise_stable_across_batchings(lm, texts):
+    got = lm.ppl_batch(texts)
+    want = _ppl_batch_per_text(lm, texts)
+    assert got.dtype == np.float64 and got.tobytes() == want.tobytes(), texts
+    for i, t in enumerate(texts):
+        assert got[i:i + 1].tobytes() == lm.ppl_batch([t]).tobytes(), t
 
 
 def test_clean_scores_lower_ppl_than_corrupted(lm):

@@ -436,12 +436,16 @@ def _assert_batch_matches_golden(texts, cfg):
     out = process_batch(pd.DataFrame({"text": texts}), zh, en, cfg)
     assert len(out) == len(texts)
     for i, t in enumerate(texts):
-        want = golden_row(t, zh, en, cfg)
+        # a null text: the signals of "" and a null scrubbed_text
+        want = golden_row("" if t is None else t, zh, en, cfg)
+        if t is None:
+            want["scrubbed_text"] = None
         for col, v in want.items():
             got = out[col].iat[i]
             if isinstance(got, np.generic):
                 got = got.item()
             assert _same(got, v), (t, col, got, v)
+    return out
 
 
 # SIMILAR_CHARS keys + ASCII + CJK punctuation: the corrector's home turf
@@ -458,7 +462,66 @@ MIN_LEN_DOC = st.builds(
     st.text(alphabet=st.sampled_from(SCORE_CHARS), min_size=7, max_size=9),
     st.sampled_from(["", " ", "\r\n"]),
 )
-SCORE_DOC = st.one_of(st.text(max_size=60), st.just(""), SCORE_TEXT, MIN_LEN_DOC)
+_DIGITS = st.text(alphabet="0123456789", min_size=1, max_size=6)
+# every scrub trigger on both sides of its gate, every signals char class
+# and its boundary codepoints: PII (emails, urls, dotted quads, 7-18-digit
+# runs with separators), fullwidth digits (unscrubbed under re.ASCII),
+# tabs and double spaces mid-text, str.split() whitespace outside
+# WS_CHARS, a non-BMP char, and PII glued to CJK
+PII_PIECE = st.one_of(
+    st.sampled_from(["john.doe@example.com", "a@b.io", "x@y", "@"]),
+    st.sampled_from(["http://x.example/p?q=1", "https://a.b", "www.site.org", "www.",
+                     "://", "http:/", "ftp://h"]),
+    st.sampled_from(["１２３４５６７８９０１２３４５", "１９２．１６８．１．１", "+86 ", "(010) ",
+                     "0.0.0.0", "999-9999"]),
+    st.builds(lambda a, b, c, d: f"{a}.{b}.{c}.{d}", *[st.integers(0, 999)] * 4),
+    st.builds(
+        lambda groups, sep: sep.join(groups),
+        st.lists(_DIGITS, min_size=1, max_size=4),
+        st.sampled_from(["-", ".", " ", ""]),
+    ),
+    st.text(alphabet="0123456789", min_size=7, max_size=18),
+)
+WS_PIECE = st.sampled_from(["\t", "  ", " ", "\n", "\r\n", "\x0b", "\xa0", "　", "\x1c", "\x85"])
+TEXT_PIECE = st.sampled_from(["𠀀", "电话", "邮箱", "的", "abc", "X"])
+PII_DOC = st.lists(st.one_of(PII_PIECE, WS_PIECE, TEXT_PIECE), max_size=8).map("".join)
+# each signals char class and the codepoints just outside it: 一/龥 close
+# the CJK range, ䷿/龦 flank it; @[`{/: flank the ASCII letters and digits
+CLASS_EDGE_DOC = st.text(
+    alphabet=st.sampled_from(list("一龥䷿龦AZaz09@[`{/: \t\n\r\x0b\xa0\x1c　𠀀")),
+    max_size=30,
+)
+SCORE_DOC = st.one_of(
+    st.text(max_size=60), st.just(""), SCORE_TEXT, MIN_LEN_DOC, PII_DOC, CLASS_EDGE_DOC,
+)
+
+
+# lone surrogates: Arrow cannot carry them, but the codepoint buffer
+# must still count one per char, as len() and the regexes do
+SURROGATE_DOC = st.text(alphabet=st.sampled_from(["\ud800", "\udfff", "a", " "]), max_size=6)
+
+
+@given(st.lists(st.one_of(PII_DOC, CLASS_EDGE_DOC, SURROGATE_DOC, st.none()), max_size=8))
+@settings(max_examples=500, deadline=None)
+def test_text_layers_match_scalar(texts):
+    """signals_frame and scrub_series row by row against the regex
+    oracles, many more examples than the score-stage property affords;
+    a null text gets the signals of "" and a null scrub."""
+    import pandas as pd
+
+    from pycorrector_spark.textops import lang_id, quality_signals, scrub_series, signals_frame
+
+    s = pd.Series(texts, dtype=object)
+    sig = signals_frame(s).to_dict("records")
+    for t, got, row in zip(texts, scrub_series(s), sig):
+        if t is None:
+            assert got is None
+            t = ""
+        else:
+            assert got == scrub_text(t), t
+        q = quality_signals(t)
+        assert {k: row[k] for k in q} == q, t
+        assert (row["lang_id"], row["lang_conf"]) == lang_id(t), t
 
 
 # DEFAULT_CONFIG.max_len (1e6 chars) is out of Hypothesis' reach; the small
@@ -470,6 +533,15 @@ SCORE_DOC = st.one_of(st.text(max_size=60), st.just(""), SCORE_TEXT, MIN_LEN_DOC
 @settings(max_examples=200, deadline=None)
 def test_process_batch_matches_golden(texts, cfg):
     _assert_batch_matches_golden(texts, cfg)
+
+
+def test_process_batch_null_rows():
+    """A null text gets the signals of "" and a null scrubbed_text; the
+    batch's other rows are untouched by it."""
+    pii = "邮箱john@example.com 电话 010-5555-1234\t网址 www.site.org  １２３"
+    out = _assert_batch_matches_golden([None, "", " \t", pii], DEFAULT_CONFIG)
+    assert out["scrubbed_text"].iat[0] is None
+    assert out["scrubbed_text"].iat[3] == "邮箱<EMAIL> 电话 <PHONE> 网址 <URL> １２３"
 
 
 # ---------------------------------------------------------------------------

@@ -165,6 +165,18 @@ def test_lang_id_rule():
     assert lang_id("")[0] == "und"
 
 
+def test_class_table_holds_every_split_whitespace():
+    """signals_frame switches a text to the WORD_SPLIT_RE split when it
+    holds str.split() whitespace outside WS_CHARS; every such codepoint
+    must be in the class table, which ends at U+3000 for that class."""
+    from pycorrector_spark.textops import _CLASS_TABLE, _CLS_SPLIT_WS, WS_CHARS
+
+    odd = [c for c in range(0x110000) if chr(c).isspace() and chr(c) not in WS_CHARS]
+    assert max(odd) < len(_CLASS_TABLE) - 1
+    assert (_CLASS_TABLE[odd] == _CLS_SPLIT_WS).all()
+    assert (_CLASS_TABLE == _CLS_SPLIT_WS).sum() == len(odd)
+
+
 def test_word_ngrams_modes():
     from pycorrector_spark.textops import word_ngrams
 
