@@ -273,7 +273,6 @@ HOST_CAP_N = 20           # per-domain quota (qf_host_cap)
 SAMPLE_RATE = 0.1         # deterministic md5-bucket sample rate (qf_sample)
 NB_MIN_COUNT = 2          # NB classifier vocabulary prune (nb_langid)
 TOKEN_BUDGET = 15_000     # corpus token budget (qf_token_budget)
-LSH_TOPK_PLANES = 6       # ann_lsh_topk hyperplanes
 EMB_LSH_PLANES = 64       # dedup_embedding banded LSH: total sign bits
 EMB_LSH_BANDS = 4         # ... 4 bands x 16 bits: 65k buckets/band, so the
                           # candidate join stays near-linear (4-bit bands
@@ -287,22 +286,23 @@ EMB_CLONES = 32           # scaled near-dup clones injected by dedup_embedding
 # old +1_000_000 offset collided at >=1M rows — round-2 ADVICE item)
 EMB_CLONE_OFFSET = 1 << 40
 
-# IVF index dirs created by q_ann_ivf in this process (reaped on next call;
-# the final survivor is removed at interpreter exit — round-2 ADVICE item)
-_IVF_DIRS: set = set()
+# bucketed-table dirs created by q_rel_bucketed_join in this process
+# (reaped on the next call; the final survivor is removed at interpreter
+# exit)
+_TMP_DIRS: set = set()
 
 
-def _reap_ivf_dirs():
+def _reap_tmp_dirs():
     import shutil
 
-    for old in list(_IVF_DIRS):
+    for old in list(_TMP_DIRS):
         shutil.rmtree(old, ignore_errors=True)
-        _IVF_DIRS.discard(old)
+        _TMP_DIRS.discard(old)
 
 
 import atexit  # noqa: E402
 
-atexit.register(_reap_ivf_dirs)
+atexit.register(_reap_tmp_dirs)
 
 
 # ---------------------------------------------------------------------------
@@ -547,89 +547,6 @@ def q_simhash(spark, sf_dir):
     return simhash64(_docs(spark, sf_dir))
 
 
-def q_ann_cosine(spark, sf_dir):
-    """Exact brute-force top-k. matmul_topk (per-partition numpy GEMM
-    against the collected query block, then a global top-k reduce) over
-    cosine_topk (crossJoin + interpreted HOF fold): ~5x at sf0.1, same
-    results — the query set is a tiny dimension, collecting it is the
-    broadcast."""
-    from pycorrector_spark.operators.similarity import matmul_topk
-
-    emb = _emb(spark, sf_dir)
-    queries_pdf = emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding").toPandas()
-    res = matmul_topk(emb, queries_pdf, k=5)
-    return res.select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
-    )
-
-
-def q_ann_lsh(spark, sf_dir):
-    """Sign-LSH bucketed top-k. SQL-verified end-to-end: dyadic
-    hyperplanes + left-fold dots make the bucket bits and cosines
-    bit-identical to the DuckDB list_reduce oracle."""
-    from pycorrector_spark.operators.similarity import lsh_topk
-
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 8)
-    res = lsh_topk(emb, queries, k=5, n_planes=LSH_TOPK_PLANES)
-    return res.select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
-    )
-
-
-IVF_K = 5
-IVF_NPROBE = 3
-IVF_CELLS = 8
-IVF_SAMPLE_MAX_ID = 2000
-
-
-def q_ann_ivf(spark, sf_dir):
-    """IVF-flat ANN with a REAL stored index: driver-trained coarse
-    quantizer on a deterministic sample, corpus written partitioned by
-    cell, probe reads ONLY the nprobe cell directories (partition pruning
-    — the scan never touches the full corpus).
-
-    Oracle-checked since round 3: the expected rows are precomputed by a
-    serial numpy replica of the identical math (same kmeans, same cell
-    assignment, same GEMM cosines rounded to 6, same (cosine desc, id asc)
-    tie-break) over the same parquet — so the hash check verifies that the
-    distributed build/prune/probe/top-k-reduce reproduces the serial
-    contract exactly."""
-    import tempfile
-
-    import numpy as np
-    from pycorrector_spark.operators.similarity import (
-        ivf_build,
-        ivf_probe,
-        kmeans_centroids,
-    )
-
-    emb = _emb(spark, sf_dir)
-    # deterministic training sample (limit() has no ordering guarantee;
-    # sorted so the kmeans init draw is independent of scan partitioning)
-    sample = (
-        emb.filter(F.col("vec_id") < IVF_SAMPLE_MAX_ID)
-        .select("vec_id", "embedding")
-        .toPandas()
-        .sort_values("vec_id", ignore_index=True)
-    )
-    vecs = np.stack(sample["embedding"].apply(np.asarray).values)
-    cents = kmeans_centroids(vecs, k=IVF_CELLS)
-    # unique dir per call (a fixed shared path would let a concurrent
-    # run's overwrite delete files under another run's in-flight scan);
-    # dirs from PRIOR calls in this process are reaped here so repeated
-    # bench/checker loops keep at most one live index copy on disk
-    _reap_ivf_dirs()
-    path = tempfile.mkdtemp(prefix="pycorrector_spark_ivf_")
-    _IVF_DIRS.add(path)
-    ivf_build(emb, cents, path)
-    queries_pdf = emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding").toPandas()
-    res = ivf_probe(spark, path, queries_pdf, cents, k=IVF_K, nprobe=IVF_NPROBE)
-    return res.select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
-    )
-
-
 def q_lm_ppl(spark, sf_dir):
     """LM perplexity (D4 machinery) over the sf-scaled mixed zh/en pool.
 
@@ -779,9 +696,8 @@ def _pipeline_pool_oracle_sql() -> str:
 def q_dedup_embedding(spark, sf_dir):
     """Embedding near-dup pairs via the scale-default path: banded
     sign-LSH candidates + exact JVM-fold cosine verify — NO driver-side
-    collect anywhere in the plan (the exact GEMM baseline stays available
-    behind cosine_near_dup's size guard). The oracle reproduces the same
-    bands, candidates and cosines bit-for-bit.
+    collect anywhere in the plan. The oracle reproduces the same bands,
+    candidates and cosines bit-for-bit.
 
     The synthetic embeddings table contains no true near-duplicates (max
     pairwise cosine ~0.51 — random directions), so the corpus is
@@ -1073,7 +989,7 @@ def q_eval_f1(spark, sf_dir):
 
 
 # source/checkpoint dirs created by q_stream_dedup in this process (same
-# reap discipline as the IVF index dirs)
+# reap discipline as _TMP_DIRS)
 _STREAM_DIRS: set = set()
 
 
@@ -1618,9 +1534,9 @@ def q_rel_bucketed_join(spark, sf_dir):
 
     from pycorrector_spark.storage import colocated_join, write_bucketed
 
-    _reap_ivf_dirs()
+    _reap_tmp_dirs()
     base = tempfile.mkdtemp(prefix="sgbucket_")
-    _IVF_DIRS.add(base)
+    _TMP_DIRS.add(base)
     cust = _tbl(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     orders = _tbl(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     write_bucketed(cust, "bt_customer", f"{base}/customer", key="c_custkey", buckets=8)
@@ -2155,9 +2071,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_pipeline": q_stream_pipeline,
         # --- (c) stable greens (proven in CORRECTNESS_r04) ----------------
         "en_spell_full": q_en_spell_full,
-        "ann_cosine_topk": q_ann_cosine,
-        "ann_lsh_topk": q_ann_lsh,
-        "ann_ivf_topk": q_ann_ivf,
         "rel_pricing_summary": q_rel_pricing_summary,
         "rel_top_nations": q_rel_top_nations,
         "rel_bucketed_join": q_rel_bucketed_join,
@@ -2565,32 +2478,6 @@ def _bucket_bits_sql(vec: str, planes, lo: int, hi: int, dim: int) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _ann_lsh_oracle_sql() -> str:
-    from pycorrector_spark.operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(EMB_DIM, LSH_TOPK_PLANES, seed=42)
-    bucket = _bucket_bits_sql("ev", planes, 0, LSH_TOPK_PLANES, EMB_DIM)
-    dot = _fold_dot_sql("q.ev", "c.ev", EMB_DIM)
-    nrm = f"sqrt({_fold_dot_sql('{0}.ev', '{0}.ev', EMB_DIM)})"
-    return f"""
-        WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS ev,
-                          {bucket} AS bucket
-                   FROM embeddings),
-        q AS (SELECT * FROM c WHERE vec_id < 8),
-        scored AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                 {dot} / ({nrm.format('q')} * {nrm.format('c')}) AS cos
-          FROM c JOIN q ON c.bucket = q.bucket AND c.vec_id <> q.vec_id),
-        ranked AS (
-          SELECT query_id, neighbor_id, cos,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cos DESC, neighbor_id) AS rank
-          FROM scored)
-        SELECT query_id, neighbor_id, round(cos, 6) AS cosine, rank
-        FROM ranked WHERE rank <= 5
-    """
-
-
 @functools.lru_cache(maxsize=None)
 def _pipeline_full_oracle_sql() -> str:
     """qf_pipeline_full expected rows: the serial golden oracle
@@ -2626,84 +2513,6 @@ def _pipeline_full_oracle_sql() -> str:
     return (
         "SELECT * FROM (VALUES " + ", ".join(values) +
         ") t(url, lang_id, keep, drop_reason, ppl, n_errors, scrubbed_text)"
-    )
-
-
-@functools.lru_cache(maxsize=None)
-def _ann_ivf_oracle_sql() -> str:
-    """ann_ivf_topk expected rows, precomputed by a SERIAL numpy replica
-    of the exact distributed math (kmeans -> cell assignment -> nprobe
-    pruning -> GEMM cosines -> (cosine desc, id asc) top-k), frozen into a
-    VALUES table. The hash compare then verifies the distributed plan —
-    cell-partitioned index write, partition-pruned probe, per-batch
-    partial top-k, global reduce — reproduces the serial contract.
-
-    The replica reads the same parquet the driver's correctness gate runs
-    against (sf0.01 by default; override with SPARK_GRAFT_ORACLE_SF_DIR).
-    Floats: cosines come from the same numpy GEMM on the same float32->
-    float64 widened values, and the final round(6) replicates Spark's
-    HALF_UP Round via Decimal quantize — bit-exact literals via _dlit."""
-    import decimal
-    import os
-
-    import numpy as np
-    import pandas as pd
-    from pycorrector_spark.operators.similarity import kmeans_centroids
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    pdf = pd.read_parquet(f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"])
-    pdf = pdf[pdf["embedding"].map(lambda v: v is not None)].reset_index(drop=True)
-
-    sample = pdf[pdf["vec_id"] < IVF_SAMPLE_MAX_ID].sort_values("vec_id", ignore_index=True)
-    svecs = np.stack(sample["embedding"].apply(np.asarray).values)
-    cents = kmeans_centroids(svecs, k=IVF_CELLS)
-    cb = np.asarray(cents, dtype=np.float64)
-    c_norm2 = (cb ** 2).sum(axis=1)
-
-    mat = np.stack(pdf["embedding"].apply(np.asarray).values).astype(np.float64)
-    ids = pdf["vec_id"].to_numpy()
-    cells = (c_norm2[None, :] - 2.0 * (mat @ cb.T)).argmin(axis=1)
-
-    qmask = pdf["vec_id"] < 8
-    qmat = mat[qmask.to_numpy()]
-    qids = ids[qmask.to_numpy()]
-    d = c_norm2[None, :] - 2.0 * (qmat @ cb.T)
-    probe_cells = np.argsort(d, axis=1, kind="stable")[:, :IVF_NPROBE]
-    probe_mask = np.zeros((len(qids), len(cb)), dtype=bool)
-    for qi in range(len(qids)):
-        probe_mask[qi, probe_cells[qi]] = True
-
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0] = np.inf
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = np.inf
-    sims = (mat @ qmat.T) / np.outer(norms, qnorm)
-
-    def spark_round6(x: float) -> float:
-        # Spark Round(double, 6) = BigDecimal(x).setScale(6, HALF_UP):
-        # exact binary expansion then decimal HALF_UP — Decimal(x) is the
-        # same exact expansion (Python's round() would banker's-round)
-        return float(
-            decimal.Decimal(x).quantize(
-                decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
-            )
-        )
-
-    values = []
-    for qi in range(len(qids)):
-        qid = int(qids[qi])
-        cand = np.where(probe_mask[qi, cells] & (ids != qid))[0]
-        if not len(cand):
-            continue
-        col = sims[:, qi]
-        order = np.lexsort((ids[cand], -col[cand]))
-        for rank, t in enumerate(cand[order[:IVF_K]], start=1):
-            values.append(
-                f"({qid}, {int(ids[t])}, {_dlit(spark_round6(float(col[t])))}, {rank})"
-            )
-    return (
-        "SELECT * FROM (VALUES " + ", ".join(values) +
-        ") t(query_id, neighbor_id, cosine, rank)"
     )
 
 
@@ -3601,8 +3410,6 @@ def oracle_sql() -> dict[str, str]:
         "qf_pipeline_full": _pipeline_full_oracle_sql(),
         "qf_curation_e2e": _curation_e2e_oracle_sql(),
         "eval_f1": _eval_f1_oracle_sql(),
-        "ann_lsh_topk": _ann_lsh_oracle_sql(),
-        "ann_ivf_topk": _ann_ivf_oracle_sql(),
         "zh_confusion": _zh_confusion_oracle_sql(),
         "qf_uniform": _uniform_oracle_sql(),
         "qf_b2q": _b2q_oracle_sql(),
@@ -3632,20 +3439,6 @@ def oracle_sql() -> dict[str, str]:
                    round(avg(s.lang_conf), 6) AS avg_conf
             FROM sig2 s JOIN documents d USING (doc_id)
             GROUP BY d.lang, s.lang_id
-        """,
-        "ann_cosine_topk": """
-            WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 8),
-            c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings),
-            scored AS (
-              SELECT query_id, neighbor_id,
-                     list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cos
-              FROM c CROSS JOIN q WHERE neighbor_id <> query_id),
-            ranked AS (
-              SELECT query_id, neighbor_id, cos,
-                     row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-              FROM scored)
-            SELECT query_id, neighbor_id, round(cos, 6) AS cosine, rank
-            FROM ranked WHERE rank <= 5
         """,
         "rel_pricing_summary": """
             SELECT l_returnflag, l_linestatus,

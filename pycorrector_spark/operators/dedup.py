@@ -50,14 +50,6 @@ def release_cached(df: DataFrame) -> None:
             dep.unpersist()
         except Exception:
             pass
-    # broadcasts pinned by an operator (e.g. cosine_near_dup_pairs' corpus
-    # matrix) are released the same way
-    for bc in getattr(df, "_cached_broadcasts", ()):
-        try:
-            bc.unpersist()
-            bc.destroy()
-        except Exception:
-            pass
 
 
 # ---------------------------------------------------------------------------

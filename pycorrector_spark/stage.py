@@ -6,9 +6,9 @@ stage pays live here once. Today that is the task-end zip-finder release
 re-reads pyspark.zip and the spark-core jar, 0.18-0.38 s per task.
 
 ``python_stage`` never repartitions: the url-hash score stage, the
-streaming stage, curation's range-partitioned cumsum and ``ivf_probe``'s
-cell-pruned scan mean something by their partitioning. Stages that only
-want every core busy call ``ensure_parallelism`` first.
+streaming stage and curation's range-partitioned cumsum mean something by
+their partitioning. Stages that only want every core busy call
+``ensure_parallelism`` first.
 """
 
 from __future__ import annotations

@@ -1,8 +1,10 @@
 """Driver-contract smoke tests over the real testdata parquet at sf0.001:
 entry() runs and returns rows with a stable schema; every queries() entry
-executes; oracle_sql() keys are a subset of queries() keys.
+executes; oracle_sql() keys are a subset of queries() keys; every plan
+the explain_plans tool captures names a real query.
 """
 
+import importlib.util
 import os
 
 import pytest
@@ -29,6 +31,15 @@ def test_oracle_keys_subset_of_queries():
     o = entry_mod.oracle_sql()
     # every query has an oracle, and every oracle a query
     assert set(o) == set(q)
+
+
+def test_explain_plans_queries_exist():
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "tools", "explain_plans.py")
+    spec = importlib.util.spec_from_file_location("explain_plans", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)  # module body only; main() starts Spark
+    assert set(tool.QUERIES) <= set(entry_mod.queries())
 
 
 @pytest.mark.parametrize("name", sorted(entry_mod.queries()))

@@ -5,9 +5,7 @@ differential-tested against brute-force pandas/numpy on small frames.
 import hashlib
 
 import numpy as np
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from pycorrector_spark.operators.dedup import (
     exact_dedup_groups,
@@ -19,7 +17,6 @@ from pycorrector_spark.operators.dedup import (
     simhash64,
     simhash_near_pairs,
 )
-from pycorrector_spark.operators.similarity import cosine_topk, lsh_topk, matmul_topk
 from pycorrector_spark.operators.textstats import (
     fingerprint_py,
     with_fingerprint,
@@ -127,63 +124,6 @@ def test_simhash_near_pairs(spark, dup_df):
     assert pairs.get((0, 1)) == 0
 
 
-# -- similarity search --
-
-@pytest.fixture(scope="module")
-def emb_df(spark):
-    rng = np.random.default_rng(7)
-    vecs = rng.standard_normal((40, 16)).astype(np.float64)
-    vecs[1] = 1.1 * vecs[0]   # same direction: cosine 1.0, identical LSH buckets
-    pdf = pd.DataFrame({"vec_id": range(40), "embedding": [list(map(float, v)) for v in vecs]})
-    return spark.createDataFrame(pdf), vecs
-
-
-def _brute_topk(vecs, qids, k):
-    norms = np.linalg.norm(vecs, axis=1)
-    want = {}
-    for q in qids:
-        sims = vecs @ vecs[q] / (norms * norms[q])
-        order = sorted(((-sims[i], i) for i in range(len(vecs)) if i != q))
-        want[q] = [(i, -s) for s, i in order[:k]]
-    return want
-
-
-def test_cosine_topk_exact(spark, emb_df):
-    df, vecs = emb_df
-    queries = df.filter(F.col("vec_id") < 4)
-    got = cosine_topk(df, queries, k=3).collect()
-    want = _brute_topk(vecs, range(4), 3)
-    for r in got:
-        wid, wcos = want[r["query_id"]][r["rank"] - 1]
-        assert r["neighbor_id"] == wid
-        assert r["cosine"] == pytest.approx(wcos, rel=1e-9)
-
-
-def test_matmul_topk_matches_exact(spark, emb_df):
-    df, vecs = emb_df
-    qpdf = pd.DataFrame({"vec_id": [0, 1, 2, 3],
-                         "embedding": [list(map(float, vecs[i])) for i in range(4)]})
-    got = matmul_topk(df, qpdf, k=3).collect()
-    want = _brute_topk(vecs, range(4), 3)
-    for r in got:
-        wid, wcos = want[r["query_id"]][r["rank"] - 1]
-        assert r["neighbor_id"] == wid
-        assert r["cosine"] == pytest.approx(wcos, rel=1e-9)
-
-
-def test_lsh_topk_is_subset_ranked_by_true_cosine(spark, emb_df):
-    df, vecs = emb_df
-    queries = df.filter(F.col("vec_id") < 4)
-    got = lsh_topk(df, queries, k=3, n_planes=4).collect()
-    norms = np.linalg.norm(vecs, axis=1)
-    for r in got:
-        true_cos = float(vecs[r["query_id"]] @ vecs[r["neighbor_id"]]
-                         / (norms[r["query_id"]] * norms[r["neighbor_id"]]))
-        assert r["cosine"] == pytest.approx(true_cos, rel=1e-9)
-    # the engineered near-twin (0,1) shares every bucket at this dimension
-    assert any(r["query_id"] == 0 and r["neighbor_id"] == 1 for r in got)
-
-
 # -- textstats --
 
 def test_token_counts(spark):
@@ -204,51 +144,6 @@ def test_fingerprint_matches_python(spark, docs_pdf):
     got = {r["doc_id"]: r["fingerprint"] for r in with_fingerprint(df).collect()}
     for i, t in enumerate(sample["text"]):
         assert got[i] == fingerprint_py(t)
-
-
-def test_ivf_topk_recall_vs_exact(spark):
-    import numpy as np
-
-    from pycorrector_spark.operators.similarity import (
-        ivf_topk,
-        kmeans_centroids,
-        matmul_topk,
-    )
-
-    rng = np.random.default_rng(11)
-    # 4 well-separated clusters so IVF recall is perfect with nprobe=2
-    centers = rng.standard_normal((4, 12)) * 8
-    vecs = np.vstack([c + 0.3 * rng.standard_normal((30, 12)) for c in centers])
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(len(vecs))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    import pandas as pd
-
-    qpdf = pd.DataFrame(
-        {"vec_id": [0, 35, 70], "embedding": [list(vecs[0]), list(vecs[35]), list(vecs[70])]}
-    )
-    cents = kmeans_centroids(vecs, k=4)
-    exact = matmul_topk(df, qpdf, k=3).collect()
-    approx = ivf_topk(df, qpdf, cents, k=3, nprobe=2).collect()
-    ex = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in exact}
-    ap = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in approx}
-    assert ex == ap  # same-cluster neighbors live in the probed cells
-
-
-def test_ivf_assign_deterministic(spark):
-    import numpy as np
-
-    from pycorrector_spark.operators.similarity import ivf_assign, kmeans_centroids
-
-    rng = np.random.default_rng(3)
-    vecs = rng.standard_normal((50, 8))
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(50)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = kmeans_centroids(vecs, k=5)
-    a = {r["vec_id"]: r["cell"] for r in ivf_assign(df, cents).collect()}
-    b = {r["vec_id"]: r["cell"] for r in ivf_assign(df, cents).collect()}
-    assert a == b
-    assert set(a.values()) <= set(range(5))
 
 
 def test_exact_dedup_null_text_not_collapsed(spark):
@@ -273,61 +168,6 @@ def test_minhash_banding_config_validated(spark):
     docs = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
     with pytest.raises(ValueError):
         minhash_dedup_pairs(docs, num_perm=64, bands=10).count()
-
-
-def test_ivf_build_probe_prunes_and_matches_ivf_topk(spark, tmp_path):
-    """The stored-index path: build writes cell-partitioned parquet, probe
-    reads ONLY the nprobe cell directories (plan shows a cell filter /
-    partition pruning) and returns the same neighbors as the in-flight
-    ivf_topk for identical centroids/nprobe."""
-    import numpy as np
-    import pandas as pd
-
-    from pycorrector_spark.operators.similarity import (
-        ivf_build,
-        ivf_probe,
-        ivf_topk,
-        kmeans_centroids,
-    )
-
-    rng = np.random.default_rng(11)
-    centers = rng.standard_normal((4, 12)) * 8
-    vecs = np.vstack([c + 0.3 * rng.standard_normal((30, 12)) for c in centers])
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(len(vecs))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    qpdf = pd.DataFrame(
-        {"vec_id": [0, 35], "embedding": [list(vecs[0]), list(vecs[35])]}
-    )
-    cents = kmeans_centroids(vecs, k=4)
-
-    path = str(tmp_path / "ivf")
-    ivf_build(df, cents, path)
-    # one directory per cell on disk (physical partition pruning substrate)
-    import os
-
-    cell_dirs = [d for d in os.listdir(path) if d.startswith("cell=")]
-    assert len(cell_dirs) == 4
-
-    probed = ivf_probe(spark, path, qpdf, cents, k=3, nprobe=2)
-    inflight = ivf_topk(df, qpdf, cents, k=3, nprobe=2).collect()
-    stored = probed.collect()
-    key = lambda rs: {(r["query_id"], r["rank"]): r["neighbor_id"] for r in rs}
-    assert key(stored) == key(inflight)
-
-    # pruning is real: reading with the same cell filter touches only the
-    # probed subset of rows
-    from pyspark.sql import functions as F
-
-    d = ((cents ** 2).sum(axis=1)[None, :]) - 2.0 * (
-        np.stack(qpdf["embedding"].apply(np.asarray).values) @ cents.T
-    )
-    probe_cells = sorted(
-        {int(c) for row in np.argsort(d, axis=1)[:, :2] for c in row}
-    )
-    pruned_rows = (
-        spark.read.parquet(path).filter(F.col("cell").isin(probe_cells)).count()
-    )
-    assert pruned_rows < len(vecs)
 
 
 def test_jaccard_max_df_caps_hot_shingle_blowup(spark):
@@ -359,16 +199,9 @@ def test_jaccard_max_df_caps_hot_shingle_blowup(spark):
 
 
 def test_similarity_kernels_survive_null_and_empty_inputs(spark):
-    """NULL embedding rows are dropped by every numpy kernel (a single
-    None row otherwise turns np.stack into a ragged-array crash), and
-    empty corpora/query sets return empty results instead of raising."""
-    import pandas as pd
-
-    from pycorrector_spark.operators.similarity import (
-        cosine_near_dup_pairs,
-        cosine_near_dup_pairs_bucketed,
-        matmul_topk,
-    )
+    """NULL embedding rows are dropped by the band-key kernel (a single
+    None row otherwise turns np.stack into a ragged-array crash)."""
+    from pycorrector_spark.operators.similarity import cosine_near_dup_pairs_bucketed
 
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
@@ -377,27 +210,8 @@ def test_similarity_kernels_survive_null_and_empty_inputs(spark):
         (3, [0.0, 1.0, 0.0, 0.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs = cosine_near_dup_pairs(df, threshold=0.9).collect()
-    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(0, 1)}
     pairs_b = cosine_near_dup_pairs_bucketed(df, threshold=0.9, n_planes=8, bands=2).collect()
     assert {(r["id_a"], r["id_b"]) for r in pairs_b} == {(0, 1)}
-
-    qpdf = pd.DataFrame({"vec_id": [0, 9], "embedding": [[1.0, 0.0, 0.0, 0.0], None]})
-    top = matmul_topk(df, qpdf, k=2).collect()
-    assert all(r["query_id"] == 0 for r in top)
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    assert cosine_near_dup_pairs(empty).collect() == []
-    assert matmul_topk(df, qpdf.iloc[:0], k=2).collect() == []
-
-    # round-4 verdict ask #9: the exact GEMM baseline collects the whole
-    # corpus to the driver, so direct callers must fail LOUDLY past the
-    # broadcast envelope instead of silently OOMing
-    with pytest.raises(ValueError, match="exact_limit"):
-        cosine_near_dup_pairs(df, exact_limit=3)
-    # a deliberate larger limit still works
-    assert {(r["id_a"], r["id_b"])
-            for r in cosine_near_dup_pairs(df, exact_limit=4).collect()} == {(0, 1)}
 
 
 def test_simhash_near_pairs_excludes_wordless_sentinel(spark):

@@ -57,11 +57,11 @@ def test_cosine_near_dup_pairs_matches_numpy(spark):
     rows = [(i, [float(x) for x in base[i]]) for i in range(len(base))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    from pycorrector_spark.operators.similarity import cosine_near_dup_pairs
+    from pycorrector_spark.operators.similarity import cosine_near_dup_pairs_bucketed
 
     got = {
         (r.id_a, r.id_b): r.cosine
-        for r in cosine_near_dup_pairs(df, threshold=0.95).collect()
+        for r in cosine_near_dup_pairs_bucketed(df, threshold=0.95).collect()
     }
     norms = np.linalg.norm(base, axis=1)
     sims = (base @ base.T) / np.outer(norms, norms)
@@ -71,7 +71,11 @@ def test_cosine_near_dup_pairs_matches_numpy(spark):
         for j in range(i + 1, 6)
         if sims[i, j] >= 0.95
     }
-    assert set(got) == want == {(0, 1), (2, 3)}
+    assert want == {(0, 1), (2, 3)}
+    # banded LSH only finds candidates that share a band key, so its pairs
+    # are a subset of the exact set; identical vectors share every band
+    assert set(got) <= want
+    assert (2, 3) in got
     for (i, j), c in got.items():
         assert c == pytest.approx(sims[i, j], abs=1e-6)
 

@@ -49,17 +49,7 @@ changes). What the plans show, and why each is the plan we want:
 - **dedup_embedding** — banded sign-LSH: one MapInPandas emits
   (id, band, 16-bit key) rows; candidates are an equi-join on
   (band, key); exact JVM-fold cosine verifies candidates only. No
-  driver-side collect anywhere in the plan (the GEMM-broadcast exact
-  baseline survives behind cosine_near_dup's size guard).
-- **ann_lsh_topk** — bucket keys from the same left-fold sign bits;
-  corpus-bucket x query-bucket equi-join, cosine + top-k window only
-  within matching buckets.
-- **ann_cosine_topk / ann_ivf_topk** — MapInPandas partial top-k ->
-  one Exchange for the per-query window over ~|queries|*k*partitions
-  rows, never the full score matrix; IVF builds a STORED index
-  (parquet partitioned by cell) and the probe plan shows
-  PartitionFilters on `cell` — the scan reads nprobe directories, not
-  the corpus.
+  driver-side collect anywhere in the plan.
 - **rel_top_nations** — both dimension joins BroadcastHashJoin;
   IsNotNull pushed into every scan, ReadSchema pruned to join/agg
   columns.
@@ -84,8 +74,7 @@ changes). What the plans show, and why each is the plan we want:
 
 QUERIES = [
     "qf_pipeline_full", "qf_keep_cheap", "ngram_counts", "dedup_exact",
-    "dedup_jaccard", "dedup_minhash", "dedup_embedding", "ann_cosine_topk",
-    "ann_lsh_topk", "ann_ivf_topk", "zh_correct_full",
+    "dedup_jaccard", "dedup_minhash", "dedup_embedding", "zh_correct_full",
     "rel_top_nations", "rel_sessionize",
     "qf_gopher_rules", "qf_web_pipeline", "qf_para_dedup", "dedup_substr",
     "nb_langid", "qf_decontaminate", "qf_corpus_rollup",
