@@ -190,7 +190,7 @@ def _en_spell_map(spark: SparkSession, sf_dir: str, full: bool) -> DataFrame:
         _, _, en = _get_workers(bc)
 
         def cols(texts):
-            res = [en.correct(t) for t in texts]
+            res = en.correct_batch(texts)
             return {
                 "corrected_text": [r["target"] for r in res],
                 "n_fixes": [len(r["errors"]) for r in res],

@@ -33,6 +33,12 @@ Storage: per-order flat sorted int64 key arrays (n-gram ids packed in
 base = |vocab|+3) + float64 probability/backoff arrays, probed with
 ``np.searchsorted`` — no per-row Python in the hot path; broadcast-
 friendly (a plain picklable object of numpy arrays).
+
+Document perplexity (``ppl_batch``) probes each distinct (context, char)
+gram of a batch once, keyed by the same packed ids, and scatters the
+values back: the backoff recursion is position-wise, so a gram scores the
+same in every slot, and the per-row sums see the same floats in the same
+order.
 """
 
 from __future__ import annotations
@@ -41,6 +47,7 @@ import math
 from collections import Counter
 
 import numpy as np
+import pandas as pd
 
 LOG10_EPS = -99.0  # ARPA convention for "effectively zero"
 DISCOUNT = 0.5     # absolute discount mass moved to backoff
@@ -229,50 +236,66 @@ class CharNgramLM:
         return float(self.ppl_batch(["".join(chars)])[0])
 
     def ppl_batch(self, texts) -> np.ndarray:
-        """Vectorized perplexity over many strings (one flat probe pass
-        per context-length group and order level).
+        """Vectorized perplexity over many strings.
+
+        The texts are encoded once, as one flat ``[bos] text [eos]``
+        sequence. Its slots are grouped by how many chars of context they
+        have: the full ``order - 1`` for all but the first few of each row.
+        In each group every distinct (context, char) gram is scored once by
+        ``cond`` and its value scattered back to every slot that holds it.
+        This is exact: ``cond``'s miss-only recursion is position-wise (a
+        slot's value reads only that slot's own ids), so a gram scores the
+        same wherever it occurs. Batches repeat grams heavily: the distinct
+        full-order grams are ~0.4% of a 2,000-doc web_en batch's slots,
+        12-14% of English prose and 54-58% of zh_crawl, and the zh
+        re-rank's candidate sentences differ from each other in one char.
 
         Each row's float is bitwise the same in any batch (a row's
-        per-position conditionals do not depend on its neighbours, and
-        np.add.reduceat sums each row's segment alone), so
-        ``perplexity_chars`` equals the batched value. It is NOT bitwise
-        ``score_ids``/``score_chars``: their np.sum adds the same terms in
-        another order, which differs in the last bits.
+        conditionals do not depend on its neighbours, and np.add.reduceat
+        sums exactly the row's own slots), so ``perplexity_chars`` equals
+        the batched value. It is NOT bitwise ``score_ids``/``score_chars``:
+        their np.sum adds the same terms in another order, which differs
+        in the last bits.
         """
         if len(texts) == 0:
             return np.empty(0, dtype=np.float64)
         lens = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))
-        ids = self.encode("".join(texts))
-        # flat sequence [bos] ids [eos] per sentence: char k of row r sits
-        # at k + 2r + 1
+        # one encode of [bos] text [eos] per row: the joined texts with a
+        # placeholder char in each bos/eos slot, overwritten below
+        flat = self.encode("\0" + "\0\0".join(texts) + "\0")
         seq_lens = lens + 2
         starts = np.cumsum(seq_lens) - seq_lens
-        row_of_char = np.repeat(np.arange(len(lens)), lens)
-        flat = np.empty(int(seq_lens.sum()), dtype=np.int64)
         flat[starts] = self.bos_id
         flat[starts + seq_lens - 1] = self.eos_id
-        flat[np.arange(len(ids)) + 2 * row_of_char + 1] = ids
-        # positions to score: all except the bos at each start
-        total_pos = len(flat) - len(lens)
-        row = np.repeat(np.arange(len(lens)), seq_lens - 1)
-        row_starts = np.cumsum(seq_lens - 1) - (seq_lens - 1)
-        local = np.arange(total_pos) - row_starts[row] + 1  # context to the left
-        pos = starts[row] + local
-        w = flat[pos]
-        avail = np.minimum(local, self.order - 1)
-        out = np.empty(total_pos, dtype=np.float64)
-        # m=0 included: for an order-1 model every position is context-free
-        # (avail==0) and must still be scored via the unigram table — a loop
-        # starting at 1 would leave `out` as uninitialized np.empty garbage
-        for m in range(0, self.order):
-            mask = avail == m
-            if not mask.any():
+        # chars of context to the left of each slot (0 at the bos slots,
+        # which are not scored)
+        local = np.arange(len(flat)) - np.repeat(starts, seq_lens)
+        top = self.order - 1
+        out = np.empty(len(flat))
+        # m=0 is a group only for an order-1 model, where every scored slot
+        # is context-free and is scored from the unigram table
+        for m in range(1 if top else 0, top + 1):
+            pos = np.flatnonzero(local >= max(m, 1) if m == top else local == m)
+            if not len(pos):
                 continue
-            pm = pos[mask]
-            ctx = [flat[pm - (m - j)] for j in range(m)]
-            out[mask] = self.cond(ctx, w[mask])
-        # reduce per row
-        sums = np.add.reduceat(out, row_starts)
+            if m == 0 or self.base ** (m + 1) >= 1 << 62:
+                out[pos] = self.cond([flat[pos - m + j] for j in range(m)], flat[pos])
+                continue
+            # score each distinct (context, char) gram once, then scatter
+            # back by code; the key packs the m+1 ids as _probe_ngram does,
+            # here for every window of the flat sequence at once
+            windows = [flat[j:len(flat) - m + j] for j in range(m + 1)]
+            codes, grams = pd.factorize(_pack_cols(windows, self.base)[pos - m])
+            cols = []
+            for _ in range(m + 1):
+                grams, col = np.divmod(grams, self.base)
+                cols.append(col)
+            cols.reverse()
+            out[pos] = self.cond(cols[:-1], cols[-1])[codes]
+        # reduce per row over exactly its scored slots: reduceat sums a
+        # segment pairwise, so a longer segment (even one holding an extra
+        # 0.0) would group the additions differently
+        sums = np.add.reduceat(np.delete(out, starts), starts - np.arange(len(starts)))
         return 10.0 ** (-sums / (lens + 1))
 
     # ---------------- detector window scoring ----------------

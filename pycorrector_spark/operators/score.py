@@ -9,14 +9,17 @@ executors). The cheap layers read the batch as one codepoint buffer:
 ``signals_frame`` takes the char-class counts, stripped length and word
 count from class masks and prefix sums, ``scrub_series`` runs each PII
 rule only on the texts that hold its trigger, and ``ppl_batch`` encodes
-the joined texts once for one flat LM probe pass. The batch's zh
-documents are detected and corrected in one
+the joined texts once and probes each distinct LM gram of the batch once.
+The batch's zh documents are detected and corrected in one
 ``Corrector.detect_and_correct_batch`` call: one LM-window and MAD pass
 per side (correct, then the fragments ``uniform()`` changes for detect)
 over every fragment of the batch, and the candidate re-rank in rounds, one
-flat LM probe per round. The serial oracle (``golden.golden_row``) runs
-the one-fragment ``detect``/``correct`` path instead; both agree bitwise.
-The keep/drop decision is one vectorized ``np.select`` over the batch.
+flat LM probe per round. Its other gate-passing documents are
+spell-corrected in one ``EnSpellCorrector.correct_batch`` call, which
+resolves each distinct English word of the batch once. The serial oracle
+(``golden.golden_row``) runs the one-document ``detect``/``correct``
+paths instead; both agree bitwise. The keep/drop decision is one
+vectorized ``np.select`` over the batch.
 
 Task end: callers run the stage through ``stage.python_stage``, which
 drops the worker's cached zipimporters when a task finishes, so the next
@@ -299,19 +302,20 @@ def process_batch(pdf: pd.DataFrame, zh: Corrector, en: EnSpellCorrector,
 
     n = len(pdf)
     text = pdf["text"].astype(object)
+    texts = text.tolist()
     sig = signals_frame(pdf["text"], cfg.min_len, cfg.max_len)
     # input tables may carry columns colliding with computed signal names
     # (e.g. an upstream n_chars); the computed values win — a duplicate
     # label would make pdf["n_chars"] a 2-column frame and break the
     # decision math below
     pdf = pd.concat([pdf.drop(columns=sig.columns, errors="ignore"), sig], axis=1)
-    lang = pdf["lang_id"].astype(object)
+    lang = pdf["lang_id"].to_numpy(dtype=object)
 
     cheap_pass = (
         pdf["len_ok"].to_numpy()
         & (pdf["symbol_ratio"].to_numpy() <= cfg.max_symbol_ratio)
         & (pdf["rep_ratio"].to_numpy() <= cfg.max_rep_ratio)
-        & np.isin(lang.to_numpy(), cfg.allowed_langs)
+        & np.isin(lang, cfg.allowed_langs)
     )
 
     ppl = np.full(n, np.nan)
@@ -323,14 +327,13 @@ def process_batch(pdf: pd.DataFrame, zh: Corrector, en: EnSpellCorrector,
     idx_pass = np.where(cheap_pass)[0]
     if len(idx_pass):
         # vectorized ppl over ALL passing docs in one flat probe pass
-        uni_texts = [uniform(text.iat[i]) for i in idx_pass]
+        uni_texts = [uniform(texts[i]) for i in idx_pass.tolist()]
         ppl[idx_pass] = zh.lm.ppl_batch(uni_texts)
 
-    is_zh = lang.to_numpy()[idx_pass] == "zh"
+    is_zh = lang[idx_pass] == "zh"
     zh_rows, en_rows = idx_pass[is_zh], idx_pass[~is_zh]
-    outs = zh.detect_and_correct_batch([text.iat[i] for i in zh_rows])
-    for i in en_rows:
-        res = en.correct(text.iat[i])
+    outs = zh.detect_and_correct_batch([texts[i] for i in zh_rows.tolist()])
+    for res in en.correct_batch([texts[i] for i in en_rows.tolist()]):
         outs.append(([[w, p, p + len(w), "en_spell"] for (w, c, p) in res["errors"]], res))
 
     for i, (dets, res) in zip(np.concatenate([zh_rows, en_rows]), outs):
@@ -354,7 +357,7 @@ def process_batch(pdf: pd.DataFrame, zh: Corrector, en: EnSpellCorrector,
 
     keep, reasons = keep_decisions(
         pdf["len_ok"].to_numpy(), pdf["symbol_ratio"].to_numpy(),
-        pdf["rep_ratio"].to_numpy(), lang.to_numpy(), ppl, density, cfg,
+        pdf["rep_ratio"].to_numpy(), lang, ppl, density, cfg,
     )
 
     out = pdf.copy()

@@ -63,6 +63,13 @@ Two paths run the zh detector and corrector:
 Both call THE SAME vectorized numpy primitives (LM window scorer, MAD,
 ``ppl_batch``), the segmentation DP over the same log-prob table, and the
 same re-rank selection (``pick_lm_item``), so they agree bitwise.
+
+English spell correction is split the same way. ``EnSpellCorrector.correct``
+(and ``golden_row``) is the oracle, one document at a time.
+``EnSpellCorrector.correct_batch`` is the kernel the score stage calls once
+per batch: it resolves each distinct ``[A-Za-z]+`` run of the batch once,
+then splices only the changed words, at the places where they are whole
+content fragments. A Hypothesis property holds it equal to ``correct``.
 """
 
 from __future__ import annotations
@@ -72,6 +79,7 @@ import re
 import numpy as np
 
 from ..textops import (
+    HAN_RUN_PATTERN,
     MultiPatternScanner,
     dag_max_prob_tokens,
     is_cjk_string,
@@ -693,6 +701,70 @@ class EnSpellCorrector:
             text_new += w
         details = sorted(details, key=lambda d: d[2])
         return {"source": sentence, "target": text_new, "errors": details}
+
+    # lookarounds that hold a match to a whole content fragment of
+    # split_sentences_by_symbol: no fragment char on either side
+    _NOT_AFTER_FRAGMENT = f"(?<!{HAN_RUN_PATTERN[:-1]})"
+    _NOT_BEFORE_FRAGMENT = f"(?!{HAN_RUN_PATTERN[:-1]})"
+
+    def correct_batch(self, texts):
+        """``[self.correct(t) for t in texts]`` from one pass over the batch.
+
+        Each distinct ``[A-Za-z]+`` run of the batch is resolved once
+        (``confusion`` first, then ``correct_word``). Every run lies inside
+        one whitespace token, so the runs are taken from the batch's
+        distinct tokens. Only the changed words are then searched for, by
+        one trie-shaped pattern, and a match counts only where it is a
+        whole content fragment. Those are exactly the fragments that
+        ``correct``'s slow path rewrites: an ASCII-alpha fragment is a
+        maximal ``[A-Za-z]`` run with no fragment char on either side.
+        Errors come in position order with the document's own offsets.
+        """
+        tokens = set(" ".join(texts).split())
+        fixes = {}
+        for w in set(self._ALPHA_RUN_RE.findall(" ".join(tokens))):
+            if len(w) > 1:
+                c = self.confusion[w] if w in self.confusion else self.correct_word(w)
+                if c != w:
+                    fixes[w] = c
+        out = [{"source": t, "target": t, "errors": []} for t in texts]
+        if not fixes:
+            return out
+        pat = re.compile(
+            self._NOT_AFTER_FRAGMENT + _trie_pattern(fixes) + self._NOT_BEFORE_FRAGMENT
+        )
+
+        def fix(m):
+            errors.append((m[0], fixes[m[0]], m.start()))
+            return fixes[m[0]]
+
+        for res in out:
+            errors = []  # the current doc's, appended to by fix
+            target = pat.sub(fix, res["source"])
+            if errors:
+                res["target"], res["errors"] = target, errors
+        return out
+
+
+def _trie_pattern(words):
+    """A regex matching exactly ``words``, nested as a prefix trie, so the
+    engine tries one branch per next char rather than every word in turn
+    (a flat alternation of k words costs O(k) per text position)."""
+    trie = {}
+    for w in words:
+        node = trie
+        for ch in w:
+            node = node.setdefault(ch, {})
+        node[""] = {}
+
+    def emit(node):
+        if not node:
+            return ""
+        # "" (a word ends here) sorts first, so reverse puts it last
+        alts = [re.escape(ch) + emit(sub) for ch, sub in sorted(node.items(), reverse=True)]
+        return alts[0] if len(alts) == 1 else "(?:" + "|".join(alts) + ")"
+
+    return emit(trie)
 
 
 DEFAULT_UNK_TOKENS = (" ", "“", "”", "‘", "’", "琊", "\n", "…", "擤", "\t", "玕", "")

@@ -110,6 +110,56 @@ def test_ppl_batch_rows_bitwise_stable_across_batchings(lm, texts):
         assert got[i:i + 1].tobytes() == lm.ppl_batch([t]).tobytes(), t
 
 
+@pytest.fixture(scope="module")
+def sharing_lms(lm):
+    """The fixture LM, an order-2 model, an ARPA-loaded copy whose <s>
+    and </s> ids are two real chars' ids (KenLM numbers them by their
+    place in the ARPA unigram list, so nothing may key on ids 1 and 2),
+    and a copy with its keys re-packed in a base so large that packed
+    5-grams need not fit an int64, which scores every slot on its own."""
+    import copy
+
+    from pycorrector_spark.lm.model import _pack_cols, _unpack, load_arpa, to_arpa_lines
+
+    arpa = load_arpa(to_arpa_lines(lm))
+    arpa.bos_id, arpa.eos_id = np.int64(arpa.base - 1), np.int64(3)
+    wide = copy.copy(lm)
+    wide.base = 1 << 13
+    wide.keys, wide.p, wide.ctx_bow = {}, {}, {}
+    for n, keys in lm.keys.items():
+        ids = np.array([_unpack(k, n, lm.base) for k in keys], dtype=np.int64)
+        order = np.argsort(_pack_cols(list(ids.T), wide.base))
+        wide.keys[n] = _pack_cols(list(ids.T), wide.base)[order]
+        wide.p[n] = lm.p[n][order]
+        if n in lm.ctx_bow:
+            wide.ctx_bow[n] = lm.ctx_bow[n][order]
+    return [lm, train_char_lm(lm_corpus(), order=2), arpa, wide]
+
+
+_SHARED_PIECE = st.sampled_from(["少先队员应该为老人让座", "老人让座", "我的家乡", "ab1 ", "😀", "，"])
+# many texts that repeat and overlap, so most grams recur across rows
+_SHARED_BATCH = st.lists(st.lists(_SHARED_PIECE, max_size=4).map("".join), max_size=12)
+# the zh re-rank's shape: one sentence with a different char at each position
+_RERANK_BATCH = st.builds(
+    lambda s, chars: [s[:i] + c + s[i + 1:] for i, c in enumerate(chars[: len(s)])],
+    st.text(alphabet=st.sampled_from(_PPL_CHARS), min_size=1, max_size=20),
+    st.lists(st.sampled_from(_PPL_CHARS), min_size=20, max_size=20),
+)
+
+
+@given(st.one_of(_SHARED_BATCH, _RERANK_BATCH), st.sampled_from([0, 1, 2, 3]))
+@settings(max_examples=200, deadline=None)
+def test_ppl_batch_shared_grams_bitwise(sharing_lms, texts, which):
+    """ppl_batch scores each distinct gram once and scatters it back; the
+    rows stay bitwise those of the per-position builder and of one-text
+    calls."""
+    lm = sharing_lms[which]
+    got = lm.ppl_batch(texts)
+    assert got.tobytes() == _ppl_batch_per_text(lm, texts).tobytes(), texts
+    for i, t in enumerate(texts):
+        assert got[i:i + 1].tobytes() == lm.ppl_batch([t]).tobytes(), t
+
+
 def test_clean_scores_lower_ppl_than_corrupted(lm):
     # reference detector_test.py:78-89 asserts exactly this ordering
     clean = "少先队员应该为老人让座"

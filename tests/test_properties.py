@@ -16,7 +16,15 @@ from hypothesis import strategies as st
 
 from pycorrector_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pycorrector_spark.dicts import SIMILAR_CHARS
-from pycorrector_spark.fixtures import _CORRUPT_CONFUSION, _CORRUPT_SIMCHAR, CLEAN_ZH, PROPER_SENTS
+from pycorrector_spark.fixtures import (
+    _CORRUPT_CONFUSION,
+    _CORRUPT_SIMCHAR,
+    CLEAN_EN,
+    CLEAN_ZH,
+    PROPER_SENTS,
+    corrupt_en,
+    word_freq_en,
+)
 from pycorrector_spark.refimpl.proper import levenshtein
 from pycorrector_spark.textops import (
     longest_match_rewrite,
@@ -491,8 +499,21 @@ CLASS_EDGE_DOC = st.text(
     alphabet=st.sampled_from(list("一龥䷿龦AZaz09@[`{/: \t\n\r\x0b\xa0\x1c　𠀀")),
     max_size=30,
 )
+# English: fixture vocabulary, corrupt_en's misspelt fixture sentences and
+# the confusion-dict hit; the pools are small, so one batch often holds
+# the same misspelling in several docs
+EN_VOCAB = sorted(word_freq_en())
+EN_MISSPELT = sorted({corrupt_en(s, np.random.default_rng(k))[0] for s in CLEAN_EN for k in range(4)})
+EN_DOC = st.builds(
+    lambda parts, sep: sep.join(parts),
+    st.lists(
+        st.one_of(st.sampled_from(EN_VOCAB), st.sampled_from(EN_MISSPELT), st.just("crossplatform")),
+        min_size=1, max_size=8,
+    ),
+    st.sampled_from([" ", ". ", "\n"]),
+)
 SCORE_DOC = st.one_of(
-    st.text(max_size=60), st.just(""), SCORE_TEXT, MIN_LEN_DOC, PII_DOC, CLASS_EDGE_DOC,
+    st.text(max_size=60), st.just(""), SCORE_TEXT, MIN_LEN_DOC, PII_DOC, CLASS_EDGE_DOC, EN_DOC,
 )
 
 
@@ -542,6 +563,47 @@ def test_process_batch_null_rows():
     out = _assert_batch_matches_golden([None, "", " \t", pii], DEFAULT_CONFIG)
     assert out["scrubbed_text"].iat[0] is None
     assert out["scrubbed_text"].iat[3] == "邮箱<EMAIL> 电话 <PHONE> 网址 <URL> １２３"
+
+
+# ---------------------------------------------------------------------------
+# English spell: correct_batch vs correct
+# ---------------------------------------------------------------------------
+
+# words the fixture dict keeps, misspellings it corrects (also in mixed
+# case), apostrophes, one-letter words (most are corrected to "a"), a
+# word glued to a digit, CJK or +#& (no longer a whole fragment), non-ASCII
+# letters (not fragment chars, so they split a word), and separators:
+# whitespace, "\0", punctuation and "" (which glues two pieces together)
+EN_SPELL_PIECE = st.one_of(
+    st.sampled_from(["the", "data", "spelling", "order", "crossplatform", "speling",
+                     "Speling", "SPELING", "sPeling", "ordr", "chek", "big", "agg",
+                     "lerning", "don't", "it's", "'speling'", "a", "z", "q", "I", "x"]),
+    st.sampled_from(["speling1", "1speling", "speling中", "中ordr", "c++", "ordr#", "&chek",
+                     "a+b", "spélíng", "ｆspeling", "spelingé", "ordr_"]),
+    st.sampled_from([" ", "  ", "\n", "\t", "\0", "", ".", "-", ",", "\u3000", "é"]),
+)
+EN_SPELL_DOC = st.lists(EN_SPELL_PIECE, max_size=12).map("".join)
+
+
+@functools.lru_cache(maxsize=None)
+def _en_spellers():
+    """The score stage's corrector, and one whose confusion dict also maps
+    a word to itself and a misspelling to a phrase."""
+    from pycorrector_spark.refimpl.core import EnSpellCorrector
+
+    en = _score_workers()[1]
+    extra = dict(en.confusion, speling="speling", ordr="in order")
+    return en, EnSpellCorrector(en.word_freq, extra, index=en.index)
+
+
+@given(
+    st.lists(EN_SPELL_DOC, max_size=6).map(lambda docs: docs + docs[:2]),
+    st.sampled_from([0, 1]),
+)
+@settings(max_examples=300, deadline=None)
+def test_en_correct_batch_matches_correct(texts, which):
+    en = _en_spellers()[which]
+    assert en.correct_batch(texts) == [en.correct(t) for t in texts], texts
 
 
 # ---------------------------------------------------------------------------
