@@ -3,10 +3,9 @@
 entry(spark)   — flagship: full quality-filter pipeline over sf0.001 docs.
 queries()      — one entry per implemented operator (SURVEY.md §2 + the
                  training-data ops); each callable (spark, sf_dir) -> DataFrame.
-oracle_sql()   — DuckDB-equivalent SQL per query where SQL-expressible;
-                 omitted for LM/minhash/simhash/pipeline ops (rows-only check;
-                 those are verified against the serial reference oracle in
-                 tests/ instead).
+oracle_sql()   — DuckDB SQL for every query; for LM/minhash/pipeline ops it
+                 is serial Python output (golden_row, the numpy MinHash
+                 kernel) frozen into VALUES.
 """
 
 from __future__ import annotations
@@ -27,10 +26,6 @@ SF_DEFAULT = "/root/testdata/sf0.001"
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -273,18 +268,6 @@ HOST_CAP_N = 20           # per-domain quota (qf_host_cap)
 SAMPLE_RATE = 0.1         # deterministic md5-bucket sample rate (qf_sample)
 NB_MIN_COUNT = 2          # NB classifier vocabulary prune (nb_langid)
 TOKEN_BUDGET = 15_000     # corpus token budget (qf_token_budget)
-EMB_LSH_PLANES = 64       # dedup_embedding banded LSH: total sign bits
-EMB_LSH_BANDS = 4         # ... 4 bands x 16 bits: 65k buckets/band, so the
-                          # candidate join stays near-linear (4-bit bands
-                          # measured 8x slower at sf0.1 — 16 buckets/band
-                          # made every band bucket quadratic)
-EMB_DIM = 64              # embeddings.parquet vector width
-EMB_CLONES = 32           # scaled near-dup clones injected by dedup_embedding
-
-# clone ids live in a disjoint high-bit namespace: vec_id + 2^40 can never
-# collide with real vec_ids even on a billion-row embeddings corpus (the
-# old +1_000_000 offset collided at >=1M rows — round-2 ADVICE item)
-EMB_CLONE_OFFSET = 1 << 40
 
 # bucketed-table dirs created by q_rel_bucketed_join in this process
 # (reaped on the next call; the final survivor is removed at interpreter
@@ -541,12 +524,6 @@ def q_dedup_minhash(spark, sf_dir):
     return sig.select("doc_id", F.array_join("sig", ",").alias("sig"))
 
 
-def q_simhash(spark, sf_dir):
-    from pycorrector_spark.operators.dedup import simhash64
-
-    return simhash64(_docs(spark, sf_dir))
-
-
 def q_lm_ppl(spark, sf_dir):
     """LM perplexity (D4 machinery) over the sf-scaled mixed zh/en pool.
 
@@ -691,34 +668,6 @@ def _pipeline_pool_oracle_sql() -> str:
         g = golden_row(s, zh, en)
         rows.append((i, tuple(g[c] for c in _PIPE_COLS)))
     return _pool_oracle_sql(len(PPL_POOL), _PIPE_COLS, rows)
-
-
-def q_dedup_embedding(spark, sf_dir):
-    """Embedding near-dup pairs via the scale-default path: banded
-    sign-LSH candidates + exact JVM-fold cosine verify — NO driver-side
-    collect anywhere in the plan. The oracle reproduces the same bands,
-    candidates and cosines bit-for-bit.
-
-    The synthetic embeddings table contains no true near-duplicates (max
-    pairwise cosine ~0.51 — random directions), so the corpus is
-    augmented with EMB_CLONES deterministic scaled clones (x1.5 —
-    direction preserved, cosine 1.0; the scale factor is dyadic so both
-    engines compute identical doubles). A vacuous 0-row green would
-    otherwise prove nothing about recall; the clone pairs are what a
-    near-dup detector must find."""
-    from pycorrector_spark.operators.similarity import cosine_near_dup_pairs_bucketed
-
-    emb = _emb(spark, sf_dir).select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    clones = emb.filter(F.col("vec_id") < EMB_CLONES).select(
-        (F.col("vec_id") + EMB_CLONE_OFFSET).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(1.5)).alias("embedding"),
-    )
-    return cosine_near_dup_pairs_bucketed(
-        emb.unionByName(clones),
-        threshold=0.4,
-        n_planes=EMB_LSH_PLANES,
-        bands=EMB_LSH_BANDS,
-    )
 
 
 def q_zh_t2s(spark, sf_dir):
@@ -1899,8 +1848,9 @@ def q_line_dedup(spark, sf_dir):
 # paragraph-dedup spam injection: page decorations are keyed on doc_id, so
 # identical source text never yields identical paragraphs across documents —
 # without injection the dedup would be vacuously green. Every PERIOD-th doc
-# gets a spam twin (disjoint id namespace, same trick as EMB_CLONE_OFFSET)
-# sharing one boilerplate paragraph plus a unique line.
+# gets a spam twin (disjoint high-bit id namespace: doc_id + 2^40 never
+# collides with a real doc_id) sharing one boilerplate paragraph plus a
+# unique line.
 PARA_SPAM_PERIOD = 25
 PARA_SPAM_OFFSET = 1 << 40
 PARA_SPAM_TEXT = (
@@ -2036,8 +1986,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": q_dedup_exact,
         "dedup_jaccard": q_dedup_jaccard,
         "dedup_minhash": q_dedup_minhash,
-        "dedup_simhash": q_simhash,
-        "dedup_embedding": q_dedup_embedding,
         "zh_t2s": q_zh_t2s,
         "zh_t2s_phrase": q_zh_t2s_phrase,
         "zh_s2t": q_zh_s2t,
@@ -2450,34 +2398,6 @@ def _eval_f1_oracle_sql() -> str:
     """
 
 
-# ---- embedding-space oracles: exact left-fold float math in SQL ----------
-
-
-def _fold_dot_sql(a: str, b: str, dim: int) -> str:
-    """Strict left-fold dot product — bit-identical to Spark's aggregate()
-    HOF fold and numpy per-dimension accumulation (_leftfold_dots)."""
-    return (
-        f"list_reduce(list_apply(range(1, {dim + 1}), i -> {a}[i]*{b}[i]),"
-        f" (x, y) -> x + y)"
-    )
-
-
-def _plane_lit(plane) -> str:
-    # dyadic plane components (k/1024) round-trip exactly through repr;
-    # parenthesized so the cast binds before any [i] subscript
-    return "([" + ",".join(repr(float(x)) for x in plane) + "]::DOUBLE[])"
-
-
-def _bucket_bits_sql(vec: str, planes, lo: int, hi: int, dim: int) -> str:
-    """Integer key from sign bits of planes[lo:hi] (bit j = plane lo+j)."""
-    terms = [
-        f"(CASE WHEN {_fold_dot_sql(vec, _plane_lit(planes[p]), dim)} > 0 "
-        f"THEN {1 << (p - lo)} ELSE 0 END)"
-        for p in range(lo, hi)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 @functools.lru_cache(maxsize=None)
 def _pipeline_full_oracle_sql() -> str:
     """qf_pipeline_full expected rows: the serial golden oracle
@@ -2514,46 +2434,6 @@ def _pipeline_full_oracle_sql() -> str:
         "SELECT * FROM (VALUES " + ", ".join(values) +
         ") t(url, lang_id, keep, drop_reason, ppl, n_errors, scrubbed_text)"
     )
-
-
-def _dedup_embedding_oracle_sql() -> str:
-    from pycorrector_spark.operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(EMB_DIM, EMB_LSH_PLANES, seed=42)
-    rpb = EMB_LSH_PLANES // EMB_LSH_BANDS
-    # one row per (vec, band) with the band's bit key -> the candidate join
-    # is a plain equi-join on (band, key), hash-joinable like the Spark plan
-    band_selects = " UNION ALL ".join(
-        f"SELECT vec_id, {b} AS band, "
-        f"{_bucket_bits_sql('ev', planes, b * rpb, (b + 1) * rpb, EMB_DIM)} AS key "
-        f"FROM c"
-        for b in range(EMB_LSH_BANDS)
-    )
-    dot = _fold_dot_sql("va.ev", "vb.ev", EMB_DIM)
-    nrm = f"sqrt({_fold_dot_sql('{0}.ev', '{0}.ev', EMB_DIM)})"
-    return f"""
-        WITH c AS (
-          SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
-          UNION ALL
-          SELECT vec_id + {EMB_CLONE_OFFSET} AS vec_id,
-                 list_transform(embedding::DOUBLE[], x -> x * 1.5) AS ev
-          FROM embeddings WHERE vec_id < {EMB_CLONES}),
-        bands AS ({band_selects}),
-        cand AS (
-          SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-          FROM bands a JOIN bands b
-            ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id),
-        nz AS (SELECT vec_id, ev FROM c
-               WHERE sqrt({_fold_dot_sql('ev', 'ev', EMB_DIM)}) > 0),
-        verified AS (
-          SELECT cand.id_a, cand.id_b,
-                 {dot} / ({nrm.format('va')} * {nrm.format('vb')}) AS cos_raw
-          FROM cand
-          JOIN nz va ON va.vec_id = cand.id_a
-          JOIN nz vb ON vb.vec_id = cand.id_b)
-        SELECT id_a, id_b, round(cos_raw, 6) AS cosine
-        FROM verified WHERE cos_raw >= 0.4
-    """
 
 
 def _b2q_oracle_sql() -> str:
@@ -3370,31 +3250,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "dedup_clusters": _dedup_clusters_oracle_sql(),
         "dedup_substr": _dedup_substr_oracle_sql(),
-        "dedup_embedding": _dedup_embedding_oracle_sql(),
         "dedup_minhash": _dedup_minhash_oracle_sql(),
-        "dedup_simhash": f"""
-            WITH w AS (
-              SELECT doc_id,
-                     unnest(list_filter(
-                       regexp_split_to_array(lower(coalesce(text, '')), '[ \t\n\r]+'),
-                       x -> x <> '')) AS word
-              FROM documents),
-            h AS (SELECT doc_id, ('0x' || substr(md5(word), 1, 16))::UBIGINT AS h FROM w),
-            votes AS (
-              SELECT doc_id, b,
-                     sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-              FROM h CROSS JOIN (SELECT unnest(range(64)) AS b) bits
-              GROUP BY doc_id, b),
-            fp AS (
-              SELECT doc_id,
-                     sum(CASE WHEN v > 0 THEN
-                           CASE WHEN b = 63 THEN -9223372036854775808
-                                ELSE (1::BIGINT << b) END
-                         ELSE 0 END)::BIGINT AS simhash
-              FROM votes GROUP BY doc_id)
-            SELECT d.doc_id, coalesce(fp.simhash, 0) AS simhash
-            FROM documents d LEFT JOIN fp USING (doc_id)
-        """,
         "zh_segment": _zh_segment_oracle_sql(),
         "zh_segment_hmm": _zh_segment_hmm_oracle_sql(),
         "qf_detect": _qf_detect_oracle_sql(),

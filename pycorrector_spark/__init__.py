@@ -4,8 +4,8 @@ Re-expresses the scoring machinery of shibing624/pycorrector (char n-gram
 LM perplexity, confusion-set + rule-based error detection, regex
 normalization) as vectorized Arrow-batched stages over Common-Crawl-style
 doc tables, plus the training-data-pipeline operators a 100 TB corpus
-needs: dedup (exact/MinHash-LSH/SimHash/Jaccard), ANN similarity search,
-language ID, quality scoring, fingerprinting.
+needs: dedup (exact/MinHash-LSH/Jaccard), language ID, quality scoring,
+fingerprinting.
 """
 
 __version__ = "0.1.0"

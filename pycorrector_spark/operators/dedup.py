@@ -1,6 +1,6 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four tiers, each with its scale story:
+Three tiers, each with its scale story:
 
 - exact_dedup: md5(text) group — one shuffle on the digest; the digest is
   computed JVM-side, so the shuffle carries 16 bytes + id, not the text.
@@ -10,7 +10,6 @@ Four tiers, each with its scale story:
   front of it so the join runs per LSH bucket, not per shingle.
 - minhash_lsh: MinHash signatures (vectorized numpy over Arrow batches)
   banded into bucket keys; candidate pairs = docs sharing a band bucket.
-- simhash64: 64-bit SimHash + pigeonhole banding for hamming distance <= 3.
 
 All hashes are deterministic (fixed seeds / fixed mixers) so reruns and
 resumes produce identical clusters.
@@ -28,7 +27,6 @@ from pyspark.sql import functions as F
 from ..stage import ensure_parallelism, python_stage
 from ..textops import WORD_SPLIT_PATTERN as TOKEN_SPLIT  # single frozen splitter
 from ..textops import blake2b64 as _blake2b64
-from ..textops import md5_64 as _md5_64
 
 
 def release_cached(df: DataFrame) -> None:
@@ -391,6 +389,10 @@ def minhash_dedup_pairs(
     threshold: float = 0.8,
 ) -> DataFrame:
     """LSH candidates verified by exact Jaccard (the full scale pattern)."""
+    # Checked before any Spark work: raising after the persist() below
+    # would leave a cached plan that no caller can release.
+    if num_perm % bands != 0:
+        raise ValueError(f"num_perm({num_perm}) must be divisible by bands({bands})")
     a, b = _minhash_params(num_perm, seed=42)
     pos_mult = _shingle_pos_mult(k)
 
@@ -420,8 +422,6 @@ def minhash_dedup_pairs(
     sh = python_stage(
         docs, sig_fn, f"{id_col} long, shingle_hashes array<long>, sig array<long>"
     ).persist()
-    if num_perm % bands != 0:
-        raise ValueError(f"num_perm({num_perm}) must be divisible by bands({bands})")
     cands = minhash_lsh_candidates(
         sh.select(id_col, "sig"), id_col, bands, num_perm // bands,
         persist=False, expected_perm=num_perm,
@@ -441,107 +441,6 @@ def minhash_dedup_pairs(
     )
     out._cached_deps = (sh,)  # release_cached(out) after the action
     return out
-
-
-# ---------------------------------------------------------------------------
-# SimHash
-# ---------------------------------------------------------------------------
-
-
-def simhash64(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, simhash long): 64-bit SimHash over word unigrams.
-
-    Word hash = md5_64 (not blake2b64): equally uniform, but re-derivable
-    in the DuckDB oracle (`('0x'||substr(md5(w),1,16))::UBIGINT`), so the
-    whole operator is SQL-verifiable over the real corpus. Cost parity:
-    the per-worker memo cache absorbs both hashes identically.
-    Docs with no words hash to 0.
-
-    Oracle caveat: parity assumes Python str.lower() and DuckDB lower()
-    agree on the corpus — true for ASCII/CJK, but a handful of Unicode
-    case-folding specials (e.g. U+0130 'İ') lowercase differently across
-    the two engines and would flip word hashes; the operator itself is
-    correct either way, only the cross-engine check is affected."""
-
-    def fn(it):
-        bit_idx = np.arange(64, dtype=np.uint64)
-        cache = {}
-        for pdf in it:
-            out = np.empty(len(pdf), dtype=np.int64)
-            texts = pdf[text_col].fillna("")
-            for i, t in enumerate(texts):
-                words = [w for w in _TOKEN_SPLIT_RE.split(t.lower()) if w]
-                if not words:
-                    out[i] = 0
-                    continue
-                hs = np.empty(len(words), dtype=np.uint64)
-                for j, w in enumerate(words):
-                    h = cache.get(w)
-                    if h is None:
-                        h = _md5_64(w)
-                        if len(cache) < 1_000_000:
-                            cache[w] = h
-                    hs[j] = h
-                bits = ((hs.reshape(-1, 1) >> bit_idx) & np.uint64(1)).astype(np.int64)
-                # signed arithmetic: uint64 would wrap for minority-vote bits
-                votes = bits.sum(axis=0) * 2 - len(words)
-                sim = np.uint64(0)
-                for j in np.where(votes > 0)[0]:
-                    sim |= np.uint64(1) << np.uint64(j)
-                out[i] = sim.astype(np.int64)
-            yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
-
-    docs = ensure_parallelism(df.select(id_col, text_col))
-    return python_stage(docs, fn, f"{id_col} long, simhash long")
-
-
-def simhash_near_pairs(
-    sim_df: DataFrame, id_col: str = "doc_id", max_distance: int = 3
-) -> DataFrame:
-    """Pairs with hamming(simhash) <= max_distance via 4x16-bit pigeonhole
-    banding (any pair within distance 3 shares at least one 16-bit band).
-
-    Rows with the word-less sentinel hash 0 are excluded BEFORE banding:
-    every empty/whitespace-only doc hashes to 0, so a web corpus with n
-    such docs would otherwise share all four band buckets and blow the
-    self-join up to n^2/2 false 'near-dup' pairs (the same degenerate-row
-    guard minhash_signatures applies by dropping shingle-less docs)."""
-    sim_df = sim_df.filter(F.col("simhash") != 0)
-    parts = F.array(
-        *[
-            F.shiftrightunsigned(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF))
-            for i in range(4)
-        ]
-    )
-    banded = sim_df.select(
-        F.col(id_col).alias("id"),
-        F.col("simhash"),
-        F.posexplode(parts).alias("band", "bucket"),
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= max_distance)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 # ---------------------------------------------------------------------------

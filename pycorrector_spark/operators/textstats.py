@@ -41,7 +41,7 @@ def with_fingerprint(df: DataFrame, text_col: str = "text", out: str = "fingerpr
     Pure built-ins: split-to-chars -> transform(ascii) -> aggregate fold.
     The same fold is expressible in DuckDB (list_reduce over codepoints),
     making this the SQL-verified document fingerprint. For near-dup
-    fingerprinting at scale use simhash64 (dedup.py); this one is the
+    detection at scale use minhash_dedup_pairs (dedup.py); this one is the
     exact-identity fingerprint (order-sensitive, unlike md5 it survives
     recomputation in any engine with 64-bit ints).
     """

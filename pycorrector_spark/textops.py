@@ -1056,12 +1056,3 @@ def blake2b64(s: str) -> int:
         hashlib.blake2b(s.encode("utf-8"), digest_size=8).digest(), "little"
     )
 
-
-def md5_64(s: str) -> int:
-    """64-bit hash = first 8 bytes (big-endian) of md5 — equally uniform as
-    blake2b64 but ALSO computable by the DuckDB oracle as
-    ``('0x' || substr(md5(s), 1, 16))::UBIGINT``. Used where a Spark stage's
-    hash values must be re-derivable in pure SQL (simhash64); the shingle
-    index keeps blake2b64 (its oracles compare over shingle *strings*, so
-    the hash never needs SQL parity there)."""
-    return int.from_bytes(hashlib.md5(s.encode("utf-8")).digest()[:8], "big")

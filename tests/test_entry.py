@@ -1,6 +1,6 @@
 """Driver-contract smoke tests over the real testdata parquet at sf0.001:
 entry() runs and returns rows with a stable schema; every queries() entry
-executes; oracle_sql() keys are a subset of queries() keys; every plan
+executes; oracle_sql() and queries() have the same keys; every plan
 the explain_plans tool captures names a real query.
 """
 

@@ -1,4 +1,4 @@
-"""Training-data operators: dedup / similarity / textstats,
+"""Training-data operators: dedup / textstats,
 differential-tested against brute-force pandas/numpy on small frames.
 """
 
@@ -14,8 +14,7 @@ from pycorrector_spark.operators.dedup import (
     minhash_lsh_candidates,
     minhash_signatures,
     ngram_jaccard_pairs,
-    simhash64,
-    simhash_near_pairs,
+    release_cached,
 )
 from pycorrector_spark.operators.textstats import (
     fingerprint_py,
@@ -108,22 +107,6 @@ def test_minhash_dedup_pairs_verified(spark, dup_df):
         assert jac == pytest.approx(_true_jaccard(texts[i], texts[j], 3))
 
 
-def test_simhash_properties(spark, dup_df):
-    hs = {r["doc_id"]: r["simhash"] for r in simhash64(dup_df).collect()}
-    assert hs[0] == hs[1]             # identical text -> identical hash
-    assert hs[6] == 0                 # empty text
-    def hamming(a, b):
-        return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
-    # near-dup closer than unrelated
-    assert hamming(hs[0], hs[2]) < hamming(hs[0], hs[3])
-
-
-def test_simhash_near_pairs(spark, dup_df):
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in simhash_near_pairs(simhash64(dup_df), max_distance=3).collect()}
-    assert pairs.get((0, 1)) == 0
-
-
 # -- textstats --
 
 def test_token_counts(spark):
@@ -161,13 +144,42 @@ def test_exact_dedup_null_text_not_collapsed(spark):
 
 
 def test_minhash_banding_config_validated(spark):
-    import pytest
-
-    from pycorrector_spark.operators.dedup import minhash_dedup_pairs
-
+    """A rejected banding raises before any Spark work: the caller never
+    gets the handle release_cached needs, so nothing may stay cached."""
     docs = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
+    spark.catalog.clearCache()
     with pytest.raises(ValueError):
         minhash_dedup_pairs(docs, num_perm=64, bands=10).count()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_near_dup_generators_skip_blank_documents(spark):
+    """Empty, NULL and whitespace-only docs have no shingles, so they are
+    never a near-dup candidate: a web corpus full of blank rows must not
+    pair them up (n^2/2 false pairs)."""
+    schema = "doc_id long, text string"
+    blank = [(i, t) for i, t in enumerate(["", " ", "   ", "\t", "\n \r"] * 2)]
+
+    def pairs(df):
+        mh = minhash_dedup_pairs(df)
+        got = {
+            "jaccard": {(r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(df).collect()},
+            "jaccard_max_df": {
+                (r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(df, max_df=5).collect()
+            },
+            "minhash": {(r["id_a"], r["id_b"]) for r in mh.collect()},
+        }
+        release_cached(mh)
+        return got
+
+    for rows in ([], [(i, None) for i in range(10)], blank[:4]):
+        assert pairs(spark.createDataFrame(rows, schema)) == {
+            "jaccard": set(), "jaccard_max_df": set(), "minhash": set()
+        }
+    real = [(100, "real text body one"), (101, "real text body one")]
+    assert pairs(spark.createDataFrame(blank + real, schema)) == {
+        "jaccard": {(100, 101)}, "jaccard_max_df": {(100, 101)}, "minhash": {(100, 101)}
+    }
 
 
 def test_jaccard_max_df_caps_hot_shingle_blowup(spark):
@@ -196,35 +208,6 @@ def test_jaccard_max_df_caps_hot_shingle_blowup(spark):
     small = spark.createDataFrame(rows[:5], "doc_id long, text string")
     uncapped = ngram_jaccard_pairs(small, k=2, threshold=0.3).collect()
     assert len(uncapped) == 10  # C(5,2)
-
-
-def test_similarity_kernels_survive_null_and_empty_inputs(spark):
-    """NULL embedding rows are dropped by the band-key kernel (a single
-    None row otherwise turns np.stack into a ragged-array crash)."""
-    from pycorrector_spark.operators.similarity import cosine_near_dup_pairs_bucketed
-
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, None),
-        (3, [0.0, 1.0, 0.0, 0.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs_b = cosine_near_dup_pairs_bucketed(df, threshold=0.9, n_planes=8, bands=2).collect()
-    assert {(r["id_a"], r["id_b"]) for r in pairs_b} == {(0, 1)}
-
-
-def test_simhash_near_pairs_excludes_wordless_sentinel(spark):
-    """Empty/whitespace docs all hash to 0; they must not pairwise match
-    (n^2 false positives on a web corpus full of blank rows)."""
-    from pycorrector_spark.operators.dedup import simhash64, simhash_near_pairs
-
-    rows = [(i, "   ") for i in range(10)] + [
-        (100, "real text body one"), (101, "real text body one"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = {(r["id_a"], r["id_b"]) for r in simhash_near_pairs(simhash64(df)).collect()}
-    assert pairs == {(100, 101)}
 
 
 def test_connected_components_matches_union_find(spark):

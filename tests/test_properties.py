@@ -149,7 +149,7 @@ def test_minhash_identical_sets_identical_sigs(vals):
 
 
 # ---------------------------------------------------------------------------
-# round-2 machinery: DAG segmentation, longest-match rewrite, ARPA, md5_64
+# round-2 machinery: DAG segmentation, longest-match rewrite, ARPA
 # ---------------------------------------------------------------------------
 
 ZH_TEXT = st.text(
@@ -227,21 +227,6 @@ def test_arpa_round_trip_random_corpora(corpus):
     lm2 = load_arpa(to_arpa_lines(lm))
     texts = corpus[:5] + ["甲乙丙", ""]
     assert np.allclose(lm.ppl_batch(texts), lm2.ppl_batch(texts), rtol=1e-5)
-
-
-@given(st.text(max_size=30))
-@settings(max_examples=100, deadline=None)
-def test_md5_64_matches_duckdb_expression(word):
-    """The one hash with a SQL twin: verify the exact DuckDB expression the
-    simhash oracle uses reproduces textops.md5_64."""
-    import duckdb
-
-    from pycorrector_spark.textops import md5_64
-
-    got = duckdb.sql(
-        "SELECT ('0x' || substr(md5(?), 1, 16))::UBIGINT", params=[word]
-    ).fetchone()[0]
-    assert got == md5_64(word)
 
 
 # ---------------------------------------------------------------------------

@@ -1,13 +1,11 @@
-"""Traditional->simplified (P7), homophones (P8), embedding near-dup
-pairs, and the CLI entry point (S1/S2 file->TSV flow)."""
+"""Traditional->simplified (P7), homophones (P8) and the CLI entry point
+(S1/S2 file->TSV flow)."""
 
 from __future__ import annotations
 
 import glob
 
-import numpy as np
 import pandas as pd
-import pytest
 
 from pycorrector_spark.dicts import PINYIN_ZH, T2S_CHARS
 from pycorrector_spark.textops import longest_match_rewrite, t2s, t2s_series
@@ -46,38 +44,6 @@ def test_pinyin_dict_shape():
     assert all(len(k) == 1 for k in PINYIN_ZH)
     # similar-char groups share readings (the same-pinyin candidate basis)
     assert PINYIN_ZH["座"] == PINYIN_ZH["坐"] == "zuo"
-
-
-def test_cosine_near_dup_pairs_matches_numpy(spark):
-    rng = np.random.default_rng(7)
-    base = rng.standard_normal((6, 8))
-    # make rows 0/1 near-identical and 2/3 identical
-    base[1] = base[0] + 0.01 * rng.standard_normal(8)
-    base[3] = base[2]
-    rows = [(i, [float(x) for x in base[i]]) for i in range(len(base))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    from pycorrector_spark.operators.similarity import cosine_near_dup_pairs_bucketed
-
-    got = {
-        (r.id_a, r.id_b): r.cosine
-        for r in cosine_near_dup_pairs_bucketed(df, threshold=0.95).collect()
-    }
-    norms = np.linalg.norm(base, axis=1)
-    sims = (base @ base.T) / np.outer(norms, norms)
-    want = {
-        (i, j)
-        for i in range(6)
-        for j in range(i + 1, 6)
-        if sims[i, j] >= 0.95
-    }
-    assert want == {(0, 1), (2, 3)}
-    # banded LSH only finds candidates that share a band key, so its pairs
-    # are a subset of the exact set; identical vectors share every band
-    assert set(got) <= want
-    assert (2, 3) in got
-    for (i, j), c in got.items():
-        assert c == pytest.approx(sims[i, j], abs=1e-6)
 
 
 def test_cli_text_mode(spark, tmp_path):

@@ -46,10 +46,6 @@ changes). What the plans show, and why each is the plan we want:
 - **dedup_jaccard** — shingle-hash MapInPandas -> df-cap aggregation
   (map-side partial) -> inverted-index self-join on the int64 shingle
   hash; the frequency cap bounds the worst bucket before the join.
-- **dedup_embedding** — banded sign-LSH: one MapInPandas emits
-  (id, band, 16-bit key) rows; candidates are an equi-join on
-  (band, key); exact JVM-fold cosine verifies candidates only. No
-  driver-side collect anywhere in the plan.
 - **rel_top_nations** — both dimension joins BroadcastHashJoin;
   IsNotNull pushed into every scan, ReadSchema pruned to join/agg
   columns.
@@ -74,7 +70,7 @@ changes). What the plans show, and why each is the plan we want:
 
 QUERIES = [
     "qf_pipeline_full", "qf_keep_cheap", "ngram_counts", "dedup_exact",
-    "dedup_jaccard", "dedup_minhash", "dedup_embedding", "zh_correct_full",
+    "dedup_jaccard", "dedup_minhash", "zh_correct_full",
     "rel_top_nations", "rel_sessionize",
     "qf_gopher_rules", "qf_web_pipeline", "qf_para_dedup", "dedup_substr",
     "nb_langid", "qf_decontaminate", "qf_corpus_rollup",
