@@ -582,44 +582,6 @@ def q_lm_ppl_binary(spark, sf_dir):
     return _ppl_map(spark, sf_dir, lambda: bc.value)
 
 
-@functools.lru_cache(maxsize=None)
-def _klm_model_cached():
-    """Genuine-KenLM-format round trip of the trained LM, built once:
-    write a real-layout PROBING binary (write_kenlm_probing — the
-    build_binary workalike) and decode its payload back through
-    load_kenlm_probing. float32 on disk, so this model is explicitly
-    bit_exact=False vs the float64 ARPA model — but DETERMINISTIC: the
-    Spark stage and the serial oracle score with the identical upcast
-    arrays, so their floats are bitwise equal to each other."""
-    import os
-    import tempfile
-
-    from pycorrector_spark.lm.binary import (
-        load_kenlm_probing,
-        write_kenlm_probing,
-    )
-
-    fd, path = tempfile.mkstemp(suffix=".klm")
-    os.close(fd)
-    try:
-        write_kenlm_probing(_full_artifacts_cached().lm, path)
-        return load_kenlm_probing(path)
-    finally:
-        os.unlink(path)
-
-
-def q_lm_ppl_klm(spark, sf_dir):
-    """Perplexity through the GENUINE KenLM binary format (S10 closure,
-    round-4 ask #5): the LM round-trips through a real-layout PROBING
-    ``.klm`` (float32 payload, CombineWordHash keys — reference
-    detector.py:106-117 loads exactly this format) and scores the same
-    pool as qf_lm_ppl. Oracle = frexp literals from the serial scorer on
-    the same decoded model, so the driver hash check proves the binary
-    decode + distributed scoring end-to-end."""
-    bc = _cached_bc(spark, "lm_klm", _klm_model_cached)
-    return _ppl_map(spark, sf_dir, lambda: bc.value)
-
-
 def q_pipeline_full(spark, sf_dir):
     """Complete quality-filter pipeline over the real corpus with FULL
     reference-scale dims (rows-only; exact parity with the serial oracle
@@ -1996,7 +1958,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "qf_langid_ft": q_langid_ft,
         "en_spell": q_en_spell,
         # --- (b) new or changed this round (round 5) ----------------------
-        "qf_lm_ppl_klm": q_lm_ppl_klm,
         "qf_token_budget": q_token_budget,
         "qf_curation_e2e": q_curation_e2e,
         "qf_url_dedup": q_url_dedup,
@@ -2243,20 +2204,6 @@ def _qf_lm_ppl_oracle_sql() -> str:
     from pycorrector_spark.textops import uniform
 
     lm = _full_artifacts_cached().lm
-    ppl = lm.ppl_batch([uniform(s) for s in PPL_POOL])
-    rows = [(i, (float(p),)) for i, p in enumerate(ppl)]
-    return _pool_oracle_sql(len(PPL_POOL), ["ppl"], rows)
-
-
-@functools.lru_cache(maxsize=None)
-def _qf_lm_ppl_klm_oracle_sql() -> str:
-    """Serial scoring through the SAME decoded genuine-KenLM model the
-    Spark stage broadcasts — frexp literals, bitwise-equal by shared
-    arrays (see _klm_model_cached)."""
-    from pycorrector_spark.fixtures import PPL_POOL
-    from pycorrector_spark.textops import uniform
-
-    lm = _klm_model_cached()
     ppl = lm.ppl_batch([uniform(s) for s in PPL_POOL])
     rows = [(i, (float(p),)) for i, p in enumerate(ppl)]
     return _pool_oracle_sql(len(PPL_POOL), ["ppl"], rows)
@@ -3260,7 +3207,6 @@ def oracle_sql() -> dict[str, str]:
         "en_spell_full": _en_spell_full_oracle_sql(),
         "qf_lm_ppl": _qf_lm_ppl_oracle_sql(),
         "qf_lm_ppl_binary": _qf_lm_ppl_oracle_sql(),
-        "qf_lm_ppl_klm": _qf_lm_ppl_klm_oracle_sql(),
         "qf_ccnet_buckets": _qf_ccnet_oracle_sql(),
         "qf_pipeline_pool": _pipeline_pool_oracle_sql(),
         "qf_pipeline_full": _pipeline_full_oracle_sql(),

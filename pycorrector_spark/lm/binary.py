@@ -23,14 +23,8 @@ this module closes that S10 gap with two layers:
    trie/hash-table lookup" made literal: probes are vectorized numpy
    gathers, no per-row Python.
 
-Compatibility boundary, disclosed: no real ``.klm`` file exists in this
-sandbox, so byte-for-byte compatibility with files produced by KenLM's
-``build_binary`` is NOT claimed or tested — the container uses its own
-magic, and ``read_kenlm_header`` parses a genuine KenLM file's Sanity +
-FixedWidthParameters header (magic string, version, order, model type,
-counts — the published binary_format layout) for diagnostics, raising a
-clear error for the quantized table payload. ARPA text (lm/model.py
-load_arpa/to_arpa_lines) remains the interchange format with real KenLM.
+ARPA text (lm/model.py load_arpa/to_arpa_lines) remains the interchange
+format with real KenLM.
 """
 
 from __future__ import annotations
@@ -77,53 +71,6 @@ def gram_hash(cols) -> np.ndarray:
     h = np.full(len(cols[0]), len(cols), dtype=np.uint64)
     for c in cols:
         h = _murmur64a_u64(np.asarray(c).astype(np.uint64), h)
-    return h
-
-
-def murmur64a_bytes(data: bytes, seed: int = 0) -> int:
-    """Scalar MurmurHash64A over a byte string (Austin Appleby, public
-    domain) — KenLM's util::MurmurHashNative on little-endian 64-bit,
-    used by lm/vocab.cc detail::HashForVocab(str, len) with seed 0 to key
-    vocabulary words. Driver-side only (per-word, not per-row)."""
-    m = 0xC6A4A7935BD1E995
-    mask = 0xFFFFFFFFFFFFFFFF
-    h = (seed ^ ((len(data) * m) & mask)) & mask
-    nblocks = len(data) // 8
-    for i in range(nblocks):
-        (k,) = struct.unpack_from("<Q", data, i * 8)
-        k = (k * m) & mask
-        k ^= k >> 47
-        k = (k * m) & mask
-        h = ((h ^ k) * m) & mask
-    tail = data[nblocks * 8:]
-    if tail:
-        t = 0
-        for i, b in enumerate(tail):
-            t |= b << (8 * i)
-        h = ((h ^ t) * m) & mask
-    h ^= h >> 47
-    h = (h * m) & mask
-    h ^= h >> 47
-    return h
-
-
-# detail::CombineWordHash constants (lm/search_hashed.hh, public KenLM) —
-# the chained n-gram key of the PROBING search: start from the NEWEST
-# word's raw id, fold history words newest-to-oldest.
-_KENLM_MUL_A = _U64(8978948897894561157)
-_KENLM_MUL_B = _U64(17894857484156487943)
-
-
-def kenlm_gram_hash(cols) -> np.ndarray:
-    """KenLM PROBING n-gram key for per-position id arrays (oldest word
-    first, matching gram_hash's convention): h = id_newest; then for each
-    history word going backwards, h = (h * A) ^ ((1 + id) * B) mod 2^64
-    (detail::CombineWordHash, lm/search_hashed.hh)."""
-    h = np.asarray(cols[-1], dtype=np.uint64).copy()
-    with np.errstate(over="ignore"):
-        for c in cols[-2::-1]:
-            nxt = np.asarray(c, dtype=np.uint64) + _U64(1)
-            h = (h * _KENLM_MUL_A) ^ (nxt * _KENLM_MUL_B)
     return h
 
 
@@ -179,10 +126,6 @@ class ProbingCharLM(CharNgramLM):
     the bucket array (unused slots hold NaN/0), so a probe is two numpy
     gathers with no indirection."""
 
-    # key scheme hook: subclasses loading genuine KenLM payloads swap in
-    # kenlm_gram_hash (same probe machinery, KenLM's CombineWordHash keys)
-    _gram_hash = staticmethod(gram_hash)
-
     def __init__(self, vocab, p1, bow1, tables, order):
         # parent keys/p/ctx_bow stay empty — all >=2-order probes go
         # through the hash tables below
@@ -194,7 +137,7 @@ class ProbingCharLM(CharNgramLM):
         if t is None:
             return np.full(len(cols[-1]), np.nan)
         table_keys, probs, _ = t
-        slot = _probe_table(table_keys, self._gram_hash(cols))
+        slot = _probe_table(table_keys, gram_hash(cols))
         out = np.full(len(slot), np.nan)
         hit = slot >= 0
         out[hit] = probs[slot[hit]]
@@ -205,7 +148,7 @@ class ProbingCharLM(CharNgramLM):
         if t is None or t[2] is None:
             return np.zeros(len(cols[-1]), dtype=np.float64)
         table_keys, _, bows = t
-        slot = _probe_table(table_keys, self._gram_hash(cols))
+        slot = _probe_table(table_keys, gram_hash(cols))
         out = np.zeros(len(slot), dtype=np.float64)
         hit = slot >= 0
         out[hit] = bows[slot[hit]]
@@ -311,7 +254,7 @@ def load_binary(path: str, mmap: bool = False) -> ProbingCharLM:
     property for executors loading a model staged via --files)."""
     with open(path, "rb") as f:
         if f.read(8) != _MAGIC:
-            raise ValueError(f"{path}: not an SGKLM binary (see load_klm)")
+            raise ValueError(f"{path}: not an SGKLM binary")
         version, order, n_chars, vocab_len = struct.unpack("<IIQQ", f.read(24))
         if version != 1:
             raise ValueError(f"unsupported SGKLM version {version}")
@@ -336,316 +279,3 @@ def load_binary(path: str, mmap: bool = False) -> ProbingCharLM:
     vocab = {c: i + 3 for i, c in enumerate(chars)}
     return ProbingCharLM(vocab, np.asarray(p1, dtype=np.float64),
                          np.asarray(bow1, dtype=np.float64), tables, order)
-
-
-# ---------------------------------------------------------------------------
-# genuine-KenLM header diagnostics (published binary_format layout)
-# ---------------------------------------------------------------------------
-
-KENLM_MAGIC = b"mmap lm http://kheafield.com/code format version 5\n\0"
-_KENLM_MODEL_TYPES = {
-    0: "PROBING", 1: "REST_PROBING", 2: "TRIE",
-    3: "QUANT_TRIE", 4: "ARRAY_TRIE", 5: "QUANT_ARRAY_TRIE",
-}
-
-
-def read_kenlm_header(path: str) -> dict:
-    """Parse a real KenLM binary's Sanity + FixedWidthParameters header
-    (lm/binary_format.hh in the public KenLM source): magic string,
-    reference float/int sanity values, order, probing multiplier, model
-    type, vocabulary flag and per-order counts. Raises ValueError when
-    the magic does not match (e.g. an ARPA text file). The returned dict
-    also carries ``data_offset`` — where the payload sections begin
-    (binary_format.cc TotalHeaderSize: the header block is ALIGN8'd as a
-    whole)."""
-    with open(path, "rb") as f:
-        magic = f.read(len(KENLM_MAGIC))
-        if magic != KENLM_MAGIC:
-            raise ValueError(
-                f"{path}: KenLM magic mismatch (got {magic[:20]!r}...)"
-            )
-        # struct Sanity tail: float zero, one, minus_half; uint32 one_word,
-        # max_word; uint64 one. The floats sit at natural 4-byte alignment
-        # after the magic array; tolerate an ALIGN8'd magic array too by
-        # detecting the (0, 1, -0.5) reference floats 4 bytes later.
-        pad = (-f.tell()) % 4
-        f.seek(pad, 1)
-        zero_f, one_f, minus_half_f = struct.unpack("<fff", f.read(12))
-        if (zero_f, one_f, minus_half_f) != (0.0, 1.0, -0.5):
-            f.seek(-8, 1)
-            zero_f, one_f, minus_half_f = struct.unpack("<fff", f.read(12))
-        one_word, max_word = struct.unpack("<II", f.read(8))
-        pad = (-f.tell()) % 8
-        f.seek(pad, 1)
-        (one_u64,) = struct.unpack("<Q", f.read(8))
-        sane = (
-            zero_f == 0.0 and one_f == 1.0 and minus_half_f == -0.5
-            and one_word == 1 and one_u64 == 1
-        )
-        # FixedWidthParameters: uchar order; float probing_multiplier;
-        # int model_type; bool has_vocabulary; uint search_version
-        (order,) = struct.unpack("<B", f.read(1))
-        f.seek((-f.tell()) % 4, 1)
-        (probing_multiplier,) = struct.unpack("<f", f.read(4))
-        (model_type,) = struct.unpack("<i", f.read(4))
-        (has_vocab,) = struct.unpack("<B", f.read(1))
-        f.seek((-f.tell()) % 4, 1)
-        (search_version,) = struct.unpack("<I", f.read(4))
-        counts = struct.unpack(f"<{order}Q", f.read(8 * order))
-        data_offset = f.tell() + ((-f.tell()) % 8)
-    return {
-        "sane": sane,
-        "order": order,
-        "probing_multiplier": probing_multiplier,
-        "model_type": _KENLM_MODEL_TYPES.get(model_type, f"unknown({model_type})"),
-        "has_vocabulary": bool(has_vocab),
-        "search_version": search_version,
-        "counts": list(counts),
-        "max_word_index": max_word,
-        "data_offset": data_offset,
-    }
-
-
-# ---------------------------------------------------------------------------
-# genuine-KenLM PROBING payload (round-4 verdict ask #5)
-#
-# Section layout after the header, from the public KenLM source
-# (lm/binary_format.cc, lm/vocab.cc/.hh, lm/search_hashed.hh,
-# util/probing_hash_table.hh):
-#
-#   vocab:    ALIGN8(ProbingVocabularyHeader{uint64 bound}) then a
-#             probing table of #pragma pack(4) entries
-#             {uint64 murmur64a(word_utf8, seed=0); uint32 word_id}
-#             (12 bytes each); buckets = max(n+1, uint64(float32(mult)*n))
-#   unigrams: dense ProbBackoff{float prob; float backoff} array indexed
-#             by word id, counts[0]+2 entries (search_hashed Unigram::Size)
-#   middle:   for n = 2..order-1, a probing table of pack(4) entries
-#             {uint64 key; float prob; float backoff} (16 bytes)
-#   longest:  probing table of pack(4) {uint64 key; float prob} (12 bytes)
-#   words:    if has_vocabulary, the '\0'-separated word strings in id
-#             order (what build_binary appends for vocab recovery)
-#
-# n-gram keys are detail::CombineWordHash chains (kenlm_gram_hash above);
-# probing start slot is key % buckets with linear probing and 0 as the
-# empty sentinel — identical mechanics to _build_table/_probe_table.
-#
-# DISCLOSED BOUNDARY: no kenlm binary or source exists in this sandbox,
-# so these section sizes are written from the published layout and
-# round-trip-tested against write_kenlm_probing below, NOT against a
-# file produced by kenlm's build_binary. Values are float32 on disk —
-# loads are explicitly bit_exact=False; the ARPA path (load_arpa)
-# remains the exact float64 interchange route.
-# ---------------------------------------------------------------------------
-
-_VOCAB_ENTRY = np.dtype([("key", "<u8"), ("id", "<u4")])       # pack(4), 12B
-_UNI_ENTRY = np.dtype([("prob", "<f4"), ("backoff", "<f4")])   # 8B
-_MID_ENTRY = np.dtype([("key", "<u8"), ("prob", "<f4"), ("backoff", "<f4")])
-_LONG_ENTRY = np.dtype([("key", "<u8"), ("prob", "<f4")])      # pack(4), 12B
-
-
-def _probing_buckets(entries: int, multiplier: float) -> int:
-    """util::ProbingHashTable::Size bucket count: max(entries + 1,
-    uint64(multiplier * float(entries))) — float32 arithmetic like the
-    C++ (float multiplier * static_cast<float>(entries))."""
-    return max(entries + 1, int(np.float32(multiplier) * np.float32(entries)))
-
-
-def _fill_probing(entries: np.ndarray, buckets: int) -> np.ndarray:
-    """Lay structured entries (field 'key') into an open-addressing table
-    of ``buckets`` slots, start slot key % buckets, linear probe, empty
-    key 0 — util::ProbingHashTable insertion."""
-    keys = entries["key"]
-    if np.any(keys == 0):
-        raise ValueError("key equals the probing empty sentinel (0)")
-    if len(np.unique(keys)) != len(keys):
-        raise ValueError("64-bit key collision; cannot build probing table")
-    table = np.zeros(buckets, dtype=entries.dtype)
-    for e in entries:
-        pos = int(e["key"] % np.uint64(buckets))
-        while table["key"][pos] != 0:
-            pos = (pos + 1) % buckets
-        table[pos] = e
-    return table
-
-
-def _unpack_cols(keys: np.ndarray, n: int, base: int):
-    """Vectorized inverse of model._pack_cols: n id columns, oldest first."""
-    cols, rem = [], np.asarray(keys, dtype=np.int64)
-    for j in range(n - 1, -1, -1):
-        div = base ** j
-        cols.append(rem // div)
-        rem = rem % div
-    return cols
-
-
-def write_kenlm_probing(
-    lm: CharNgramLM,
-    path: str,
-    probing_multiplier: float = _MULTIPLIER,
-    has_vocabulary: bool = True,
-) -> None:
-    """Serialize a CharNgramLM as a KenLM PROBING binary (layout above) —
-    the build_binary workalike that gives this engine a genuine ``.klm``
-    fixture to test the decode path against. Probabilities quantize to
-    float32 exactly as kenlm stores them."""
-    base = lm.base
-    # word table: special tokens by string, chars by utf-8 bytes, all
-    # murmur64a(word, seed 0) per lm/vocab.cc HashForVocab
-    words = ["<unk>", "<s>", "</s>"] + sorted(lm.vocab, key=lm.vocab.get)
-    ids = [0, 1, 2] + [lm.vocab[w] for w in words[3:]]
-    ventries = np.zeros(len(words), dtype=_VOCAB_ENTRY)
-    ventries["key"] = [murmur64a_bytes(w.encode("utf-8")) for w in words]
-    ventries["id"] = ids
-    vbuckets = _probing_buckets(len(words), probing_multiplier)
-    vtable = _fill_probing(ventries, vbuckets)
-
-    counts = [base] + [
-        int(len(lm.keys.get(n, ()))) for n in range(2, lm.order + 1)
-    ]
-    with open(path, "wb") as f:
-        # Sanity (binary_format.cc SetToReference); the float members
-        # follow the magic char array at natural (4-byte) alignment
-        f.write(KENLM_MAGIC)
-        f.write(b"\0" * ((-f.tell()) % 4))
-        f.write(struct.pack("<fff", 0.0, 1.0, -0.5))
-        f.write(struct.pack("<II", 1, 0xFFFFFFFF))
-        f.write(b"\0" * ((-f.tell()) % 8))
-        f.write(struct.pack("<Q", 1))
-        # FixedWidthParameters
-        f.write(struct.pack("<B", lm.order))
-        f.write(b"\0" * ((-f.tell()) % 4))
-        f.write(struct.pack("<f", probing_multiplier))
-        f.write(struct.pack("<i", 0))             # model_type PROBING
-        f.write(struct.pack("<B", 1 if has_vocabulary else 0))
-        f.write(b"\0" * ((-f.tell()) % 4))
-        f.write(struct.pack("<I", 0))             # hashed search kVersion
-        f.write(struct.pack(f"<{lm.order}Q", *counts))
-        f.write(b"\0" * ((-f.tell()) % 8))        # TotalHeaderSize ALIGN8
-
-        # vocab section
-        f.write(struct.pack("<Q", base))          # ProbingVocabularyHeader
-        f.write(vtable.tobytes())
-
-        # unigram section: dense by id, counts[0] + 2 entries
-        uni = np.zeros(counts[0] + 2, dtype=_UNI_ENTRY)
-        uni["prob"][:base] = lm.p1.astype(np.float32)
-        uni["backoff"][:base] = lm.bow1.astype(np.float32)
-        f.write(uni.tobytes())
-
-        # middle + longest n-gram tables, CombineWordHash keys
-        for n in range(2, lm.order + 1):
-            kk = lm.keys.get(n)
-            cnt = 0 if kk is None else len(kk)
-            dtype = _MID_ENTRY if n < lm.order else _LONG_ENTRY
-            if cnt == 0:
-                f.write(np.zeros(_probing_buckets(0, probing_multiplier),
-                                 dtype=dtype).tobytes())
-                continue
-            entries = np.zeros(cnt, dtype=dtype)
-            entries["key"] = kenlm_gram_hash(_unpack_cols(kk, n, base))
-            entries["prob"] = lm.p[n].astype(np.float32)
-            if n < lm.order:
-                bows = lm.ctx_bow.get(n)
-                if bows is not None:
-                    entries["backoff"] = bows.astype(np.float32)
-            f.write(
-                _fill_probing(entries, _probing_buckets(cnt, probing_multiplier))
-                .tobytes()
-            )
-
-        if has_vocabulary:
-            f.write(b"\0".join(w.encode("utf-8") for w in words) + b"\0")
-
-
-class KenLMProbingLM(ProbingCharLM):
-    """ProbingCharLM over tables read from a genuine KenLM PROBING binary:
-    KenLM's CombineWordHash keys and word-id assignment, float32 values
-    upcast to float64 at load (``bit_exact = False`` — scores match the
-    source ARPA model to float32 tolerance, not bitwise)."""
-
-    bit_exact = False
-    _gram_hash = staticmethod(kenlm_gram_hash)
-
-    def __init__(self, vocab, p1, bow1, tables, order, bos_id, eos_id):
-        super().__init__(vocab, p1, bow1, tables, order)
-        self.bos_id = np.int64(bos_id)
-        self.eos_id = np.int64(eos_id)
-
-
-def _read_np(f, dtype, count):
-    return np.frombuffer(f.read(dtype.itemsize * count), dtype=dtype).copy()
-
-
-def load_kenlm_probing(path: str) -> KenLMProbingLM:
-    """Decode a KenLM PROBING binary's payload into the hash-probing
-    scorer. Requires the vocabulary-strings section (build_binary writes
-    it by default) to map text characters to word ids; the special-token
-    ids are probed from the vocab table by their literal strings."""
-    info = read_kenlm_header(path)
-    if not info["sane"]:
-        # KenLM's Sanity block exists precisely to catch ABI-incompatible
-        # binaries (endianness, struct packing); reading the payload
-        # anyway would decode silently into garbage probabilities.
-        raise ValueError(
-            f"KenLM binary {path!r} failed the Sanity reference-value "
-            "check (built on an ABI-incompatible platform?); rebuild the "
-            "binary on a little-endian host or convert to ARPA"
-        )
-    if info["model_type"] != "PROBING":
-        raise NotImplementedError(
-            f"KenLM {info['model_type']} payload decode is not implemented "
-            "(PROBING only); convert to ARPA and use load_arpa"
-        )
-    order, counts, mult = info["order"], info["counts"], info["probing_multiplier"]
-    with open(path, "rb") as f:
-        f.seek(info["data_offset"])
-        (bound,) = struct.unpack("<Q", f.read(8))
-        vtable = _read_np(f, _VOCAB_ENTRY, _probing_buckets(counts[0], mult))
-        uni = _read_np(f, _UNI_ENTRY, counts[0] + 2)
-        tables = {}
-        for n in range(2, order + 1):
-            dtype = _MID_ENTRY if n < order else _LONG_ENTRY
-            t = _read_np(f, dtype, _probing_buckets(counts[n - 1], mult))
-            tables[n] = (
-                t["key"].copy(),
-                t["prob"].astype(np.float64),
-                t["backoff"].astype(np.float64) if n < order else None,
-            )
-        if not info["has_vocabulary"]:
-            raise NotImplementedError(
-                f"{path}: no vocabulary-strings section (has_vocabulary=0); "
-                "text cannot be mapped to word ids — rebuild with vocab or "
-                "convert to ARPA"
-            )
-        words = f.read().split(b"\0")[:-1]
-
-    def _vocab_id(word: str) -> int:
-        key = np.array([murmur64a_bytes(word.encode("utf-8"))], dtype=np.uint64)
-        slot = _probe_table(vtable["key"], key)[0]
-        return int(vtable["id"][slot]) if slot >= 0 else 0
-
-    vocab = {}
-    for w in words:
-        s = w.decode("utf-8")
-        if s in ("<unk>", "<s>", "</s>"):
-            continue
-        vocab[s] = _vocab_id(s)
-    n_uni = min(max(int(bound), 3), counts[0])
-    p1 = uni["prob"][:n_uni].astype(np.float64)
-    bow1 = uni["backoff"][:n_uni].astype(np.float64)
-    return KenLMProbingLM(
-        vocab, p1, bow1, tables, order,
-        bos_id=_vocab_id("<s>"), eos_id=_vocab_id("</s>"),
-    )
-
-
-def load_klm(path: str, mmap: bool = False):
-    """Load a binary LM: SGKLM containers load fully (bit-exact float64);
-    genuine KenLM PROBING binaries decode via load_kenlm_probing
-    (float32 payload, bit_exact=False); other KenLM model types raise
-    with ARPA-conversion guidance."""
-    with open(path, "rb") as f:
-        head = f.read(8)
-    if head == _MAGIC:
-        return load_binary(path, mmap=mmap)
-    return load_kenlm_probing(path)

@@ -78,7 +78,7 @@ class CharNgramLM:
         self.vocab = vocab                      # dict char -> id (>=3)
         self.base = len(vocab) + 3
         self.order = order
-        # special-token ids; genuine-KenLM loads override these (KenLM
+        # special-token ids; no loader changes them, but tests may (KenLM
         # assigns <s>/</s> ids by ARPA order, only <unk>=0 is fixed)
         self.bos_id = np.int64(1)
         self.eos_id = np.int64(2)
@@ -92,28 +92,6 @@ class CharNgramLM:
         self._cp_map = np.zeros(max_cp + 2, dtype=np.int32)  # default unk=0
         for ch, i in vocab.items():
             self._cp_map[ord(ch)] = i
-
-    # ---- backward-compatible views (order <= 3 ARPA tests, window math) ----
-
-    @property
-    def keys2(self):
-        return self.keys.get(2, np.empty(0, dtype=np.int64))
-
-    @property
-    def p2(self):
-        return self.p.get(2, np.empty(0, dtype=np.float64))
-
-    @property
-    def bow2(self):
-        return self.ctx_bow.get(2, np.zeros(len(self.keys2), dtype=np.float64))
-
-    @property
-    def keys3(self):
-        return self.keys.get(3, np.empty(0, dtype=np.int64))
-
-    @property
-    def p3(self):
-        return self.p.get(3, np.empty(0, dtype=np.float64))
 
     # ---------------- encoding ----------------
 
@@ -416,21 +394,6 @@ def mad_outlier_indices_batch(rows, ratio: float = 0.6745, threshold: float = 2.
     return out
 
 
-def stddev_outlier_indices(scores: np.ndarray, n_sigma: float = 2.0):
-    """Mean +- n*sigma outlier rule — reference detector.py:357-372 (the
-    unused alternative to the MAD test; kept for config parity). Matches
-    the reference exactly: sample std (ddof=1) and BOTH tails flagged."""
-    scores = np.asarray(scores, dtype=np.float64)
-    if len(scores) < 2:
-        return []
-    std = scores.std(ddof=1)
-    if std == 0:
-        return []
-    mean = scores.mean()
-    lo, hi = mean - n_sigma * std, mean + n_sigma * std
-    return [int(i) for i in np.where((scores < lo) | (scores > hi))[0]]
-
-
 def _id_to_token(lm: CharNgramLM):
     rev = {}
     for c, i in lm.vocab.items():
@@ -507,7 +470,11 @@ def load_arpa(source, max_order: int = 5) -> CharNgramLM:
     ARPA cannot carry a bare space token, since space is the n-gram
     separator (this is a CHAR LM, the reference's people_chars_lm.klm
     class of model). Backoff weights default to 0 when a line omits them,
-    per the ARPA spec."""
+    per the ARPA spec. A truncated or malformed file raises ValueError:
+    every order the \\data\\ header declares must have exactly its
+    ``ngram n=c`` count of rows, each row must carry ``n`` tokens, and
+    the file must end with \\end\\ (a headerless line list skips only
+    the count check)."""
     if isinstance(source, str):
         with open(source, "r", encoding="utf-8") as f:
             lines = f.read().splitlines()
@@ -515,6 +482,8 @@ def load_arpa(source, max_order: int = 5) -> CharNgramLM:
         lines = list(source)
 
     sections = {}
+    declared = {}
+    ended = False
     order = 0
     for line in lines:
         line = line.strip()
@@ -526,7 +495,12 @@ def load_arpa(source, max_order: int = 5) -> CharNgramLM:
                 raise ValueError(f"ARPA order {order} unsupported (max {max_order})")
             sections[order] = []
             continue
-        if line in ("\\data\\", "\\end\\") or line.startswith("ngram "):
+        if line.startswith("ngram "):
+            n, c = line[len("ngram "):].split("=")
+            declared[int(n)] = int(c)
+            continue
+        if line in ("\\data\\", "\\end\\"):
+            ended = line == "\\end\\"
             order = 0
             continue
         if order:
@@ -536,12 +510,30 @@ def load_arpa(source, max_order: int = 5) -> CharNgramLM:
                 parts = [parts[0], " ".join(parts[1:order + 1])] + parts[order + 1:]
             logp = float(parts[0])
             gram = parts[1].split(" ")
+            if len(gram) != order:
+                raise ValueError(
+                    f"ARPA order {order}: row {line!r} has {len(gram)} tokens"
+                )
             bow = float(parts[2]) if len(parts) > 2 else 0.0
             sections[order].append((logp, gram, bow))
 
     if 1 not in sections:
         raise ValueError("ARPA file has no \\1-grams: section")
     model_order = max(sections)
+    if declared:
+        for n in sorted(set(declared) | set(sections)):
+            got = len(sections.get(n, ()))
+            if got != declared.get(n, 0):
+                raise ValueError(
+                    f"ARPA order {n}: the \\data\\ header declares "
+                    f"{declared.get(n, 0)} n-grams, the file has {got} "
+                    "(truncated or malformed)"
+                )
+    if not ended:
+        raise ValueError(
+            f"ARPA file has no \\end\\ line after its order {model_order} "
+            "section (truncated)"
+        )
 
     special = {"<s>": 1, "</s>": 2, "<unk>": 0}
     # un-escape the space token before vocabulary assembly

@@ -20,8 +20,16 @@ def test_training_deterministic():
     a = train_char_lm(lm_corpus())
     b = train_char_lm(lm_corpus())
     assert a.vocab == b.vocab
-    np.testing.assert_array_equal(a.keys3, b.keys3)
-    np.testing.assert_array_equal(a.p3, b.p3)
+    np.testing.assert_array_equal(a.p1, b.p1)
+    np.testing.assert_array_equal(a.bow1, b.bow1)
+    assert a.order == b.order
+    assert set(a.keys) == set(b.keys) == set(range(2, a.order + 1))
+    assert set(a.ctx_bow) == set(b.ctx_bow)
+    for n in range(2, a.order + 1):
+        np.testing.assert_array_equal(a.keys[n], b.keys[n])
+        np.testing.assert_array_equal(a.p[n], b.p[n])
+    for n in a.ctx_bow:
+        np.testing.assert_array_equal(a.ctx_bow[n], b.ctx_bow[n])
 
 
 def test_score_is_sum_of_log10_probs(lm):
@@ -211,19 +219,6 @@ def test_mad_outlier_rule():
     assert mad_outlier_indices(np.array([1.0, 1.0, 1.0])) == []
 
 
-def test_stddev_outlier_indices():
-    from pycorrector_spark.lm.model import stddev_outlier_indices
-    import numpy as np
-
-    scores = np.array([-1.0, -1.1, -0.9, -1.0] * 3 + [-8.0])
-    assert stddev_outlier_indices(scores) == [12]
-    assert stddev_outlier_indices(np.array([])) == []
-    assert stddev_outlier_indices(np.array([5.0])) == []
-    assert stddev_outlier_indices(np.array([2.0, 2.0, 2.0])) == []
-    # reference semantics: BOTH tails flagged (detector.py:357-372)
-    assert stddev_outlier_indices(np.array([-1.0, -1.1, -0.9, -1.0] * 3 + [6.0])) == [12]
-
-
 def test_train_char_lm_rejects_min_count():
     import pytest
 
@@ -296,10 +291,10 @@ def test_arpa_round_trip_matches_trained_lm():
     assert np.allclose(p1, p2, rtol=1e-5)
 
 
-def test_load_arpa_rejects_high_order_and_multichar_tokens():
+def test_load_arpa_rejects_high_order_and_multichar_tokens(lm):
     import pytest
 
-    from pycorrector_spark.lm.model import load_arpa
+    from pycorrector_spark.lm.model import load_arpa, to_arpa_lines
 
     # orders above max_order (default 5) rejected
     with pytest.raises(ValueError, match="order 6"):
@@ -309,6 +304,17 @@ def test_load_arpa_rejects_high_order_and_multichar_tokens():
                   max_order=3)
     with pytest.raises(ValueError, match="single character"):
         load_arpa(["\\data\\", "\\1-grams:", "-1.0\tword", "\\end\\"])
+    # a truncated export: order 4 is cut short, order 5 and \end\ are gone
+    lines = to_arpa_lines(lm)
+    with pytest.raises(ValueError, match="order 4: .* declares 878 .* has 529"):
+        load_arpa(lines[: 2 * len(lines) // 3])
+    # a row with fewer tokens than its section's order
+    with pytest.raises(ValueError, match="order 2: row"):
+        load_arpa(["\\data\\", "\\1-grams:", "-1.0\ta", "-1.0\tb", "",
+                   "\\2-grams:", "-0.3\ta b", "-0.3\tb", "\\end\\"])
+    # every section complete, only the \end\ line missing
+    with pytest.raises(ValueError, match=r"no \\end\\ line"):
+        load_arpa(lines[:-1])
 
 
 def test_order1_model_batch_matches_score():

@@ -1,21 +1,15 @@
-"""Binary LM container + KenLM-probing-style hash scorer (S10 closure).
-
-Contract (round-2 verdict item 2): a unit test loading a binary model and
-matching load_arpa scores bit-for-bit."""
-
-import struct
+"""SGKLM binary LM container + KenLM-probing-style hash scorer: a model
+saved and loaded back (in memory or mmap'd) matches the sorted-array and
+load_arpa scores bit-for-bit."""
 
 import numpy as np
 import pytest
 
 from pycorrector_spark.fixtures import PPL_POOL, lm_corpus
 from pycorrector_spark.lm.binary import (
-    KENLM_MAGIC,
     ProbingCharLM,
     gram_hash,
     load_binary,
-    load_klm,
-    read_kenlm_header,
     save_binary,
 )
 from pycorrector_spark.lm.model import load_arpa, to_arpa_lines, train_char_lm
@@ -96,136 +90,3 @@ def test_save_rejects_nothing_loads_garbage(tmp_path):
     p.write_bytes(b"not a model at all, definitely")
     with pytest.raises(ValueError):
         load_binary(str(p))
-
-
-def _write_fake_header(p, model_type: int):
-    with open(p, "wb") as f:
-        f.write(KENLM_MAGIC)
-        pad = (-f.tell()) % 4
-        f.write(b"\0" * pad)
-        f.write(struct.pack("<fff", 0.0, 1.0, -0.5))
-        f.write(struct.pack("<II", 1, 4294967295))
-        f.write(b"\0" * ((-f.tell()) % 8))
-        f.write(struct.pack("<Q", 1))
-        f.write(struct.pack("<B", 5))
-        f.write(b"\0" * ((-f.tell()) % 4))
-        f.write(struct.pack("<f", 1.5))
-        f.write(struct.pack("<i", model_type))
-        f.write(struct.pack("<B", 1))
-        f.write(b"\0" * ((-f.tell()) % 4))
-        f.write(struct.pack("<I", 0))
-        f.write(struct.pack("<5Q", 100, 200, 300, 400, 500))
-
-
-def test_kenlm_header_parse_and_payload_boundary(tmp_path):
-    """Synthesize a genuine-layout KenLM header (published Sanity +
-    FixedWidthParameters structs): the parser decodes every field;
-    non-PROBING model types raise the documented conversion error; a
-    truncated PROBING payload fails loudly."""
-    p = tmp_path / "fake.klm"
-    _write_fake_header(p, model_type=0)  # PROBING
-    info = read_kenlm_header(str(p))
-    assert info["sane"] and info["order"] == 5
-    assert info["model_type"] == "PROBING"
-    assert info["counts"] == [100, 200, 300, 400, 500]
-    assert info["probing_multiplier"] == pytest.approx(1.5)
-
-    # header-only file: payload decode must fail loudly, not return junk
-    with pytest.raises((ValueError, struct.error)):
-        load_klm(str(p))
-
-    t = tmp_path / "trie.klm"
-    _write_fake_header(t, model_type=2)  # TRIE
-    with pytest.raises(NotImplementedError) as ei:
-        load_klm(str(t))
-    assert "TRIE" in str(ei.value)
-
-    q = tmp_path / "not_klm.bin"
-    q.write_bytes(b"\\data\\\nngram 1=3\n")
-    with pytest.raises(ValueError):
-        read_kenlm_header(str(q))
-
-
-# ---------------------------------------------------------------------------
-# genuine-KenLM PROBING payload round-trip (round-4 verdict ask #5)
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def klm_path(lm, tmp_path_factory):
-    from pycorrector_spark.lm.binary import write_kenlm_probing
-
-    p = tmp_path_factory.mktemp("klm") / "model.klm"
-    write_kenlm_probing(lm, str(p))
-    return str(p)
-
-
-def test_kenlm_probing_payload_roundtrip_scores(lm, klm_path):
-    """A real-layout PROBING binary (written by this module's
-    build_binary workalike from the fixture LM) loads through the genuine
-    payload decoder and reproduces the float64 model's scores to float32
-    tolerance — the disclosed bit_exact=False contract."""
-    from pycorrector_spark.lm.binary import KenLMProbingLM
-
-    m = load_klm(klm_path)
-    assert isinstance(m, KenLMProbingLM) and m.bit_exact is False
-    assert m.order == lm.order
-    assert int(m.bos_id) == 1 and int(m.eos_id) == 2
-    got, want = _scores(m), _scores(lm)
-    np.testing.assert_allclose(got, want, rtol=2e-4)
-    # per-sentence raw log10 scores too (ppl exponentiation can hide sign
-    # errors on short strings)
-    for t in TEXTS[:8]:
-        a = m.score_chars(t, bos=True, eos=True)
-        b = lm.score_chars(t, bos=True, eos=True)
-        assert a == pytest.approx(b, rel=2e-4, abs=1e-3)
-
-
-def test_kenlm_probing_header_fields(lm, klm_path):
-    info = read_kenlm_header(klm_path)
-    assert info["sane"] and info["model_type"] == "PROBING"
-    assert info["order"] == lm.order
-    assert info["counts"][0] == lm.base
-    assert info["counts"][1:] == [len(lm.keys.get(n, ())) for n in
-                                  range(2, lm.order + 1)]
-    assert info["has_vocabulary"]
-
-
-def test_kenlm_probing_oov_and_unk(lm, klm_path):
-    """OOV chars miss the vocab probing table and fall to <unk> id 0 —
-    same path a genuine kenlm query takes."""
-    m = load_klm(klm_path)
-    oov = "\N{SNOWMAN}"
-    assert np.all(m.encode(oov) == 0)
-    assert np.isfinite(m.perplexity_chars(oov + "的"))
-
-
-def test_kenlm_insane_header_refuses_to_load(lm, tmp_path):
-    """A .klm whose Sanity reference values fail (ABI-incompatible
-    producer) must raise instead of decoding the payload into silent
-    garbage perplexities."""
-    import struct
-
-    from pycorrector_spark.lm.binary import (
-        load_kenlm_probing,
-        read_kenlm_header,
-        write_kenlm_probing,
-    )
-
-    p = tmp_path / "insane.klm"
-    write_kenlm_probing(lm, str(p))
-    raw = bytearray(p.read_bytes())
-    # locate the Sanity block's (0.0f, 1.0f, -0.5f) reference floats,
-    # then corrupt the u64 reference ONE that follows (float reads stay
-    # aligned, so the header still parses and reports sane=False)
-    pat = struct.pack("<fff", 0.0, 1.0, -0.5)
-    i = raw.find(pat)
-    assert i > 0
-    pos = i + len(pat) + 8          # skip one_word + max_word
-    pos += (-pos) % 8               # word-align like the reader
-    assert struct.unpack_from("<Q", raw, pos)[0] == 1
-    raw[pos] = 0x02
-    p.write_bytes(bytes(raw))
-    assert read_kenlm_header(str(p))["sane"] is False
-    with pytest.raises(ValueError, match="[Ss]anity"):
-        load_kenlm_probing(str(p))
