@@ -126,18 +126,21 @@ def _doc_map(df: DataFrame, ddl: str, make) -> DataFrame:
     return python_stage(ensure_parallelism(df.select("doc_id", "text")), fn, ddl)
 
 
-def _ppl_map(spark: SparkSession, sf_dir: str, lm_of, bins: bool = False) -> DataFrame:
+def _ppl_map(spark: SparkSession, sf_dir: str, bins: bool = False) -> DataFrame:
     """(doc_id, ppl[, bin]) over the sf-scaled PPL pool: one ``ppl_batch``
-    probe per batch of uniform()ed text, with the LM ``lm_of()`` returns on
-    the worker; ``bins`` adds curation.ppl_bin's log-space integer bins
-    from the same batch."""
+    probe per batch of uniform()ed text, with the full-flavor artifacts' LM
+    (identical in both flavors; sharing the broadcast keeps a single
+    artifact generation alive across the driver-gate run); ``bins`` adds
+    curation.ppl_bin's log-space integer bins from the same batch."""
     from pycorrector_spark.fixtures import PPL_POOL
+
+    bc = _artifacts_bc(spark, full=True)
 
     def make():
         from pycorrector_spark.operators.curation import ppl_bin
         from pycorrector_spark.textops import uniform
 
-        lm = lm_of()
+        lm = bc.value.lm
 
         def cols(texts):
             ppl = lm.ppl_batch([uniform(t) for t in texts])
@@ -532,10 +535,7 @@ def q_lm_ppl(spark, sf_dir):
     by the same vectorized scorer (exact frexp-encoded double literals, so
     the floats are bit-identical — ppl_batch's per-row reduceat makes the
     value independent of batch composition)."""
-    # full flavor (LM is identical in both; sharing the broadcast keeps a
-    # single artifact generation alive across the driver-gate run)
-    bc = _artifacts_bc(spark, full=True)
-    return _ppl_map(spark, sf_dir, lambda: bc.value.lm)
+    return _ppl_map(spark, sf_dir)
 
 
 def q_ccnet_buckets(spark, sf_dir):
@@ -549,37 +549,10 @@ def q_ccnet_buckets(spark, sf_dir):
     cutoff rule with an integer window cumsum."""
     from pycorrector_spark.operators.curation import ccnet_buckets
 
-    bc = _artifacts_bc(spark, full=True)
-    bucketed = ccnet_buckets(_ppl_map(spark, sf_dir, lambda: bc.value.lm, bins=True))
+    bucketed = ccnet_buckets(_ppl_map(spark, sf_dir, bins=True))
     out = bucketed.select("doc_id", "ppl", "ppl_bucket")
     out._cached_deps = getattr(bucketed, "_cached_deps", ())
     return out
-
-
-def q_lm_ppl_binary(spark, sf_dir):
-    """Perplexity through the BINARY model path (S10): the trained LM is
-    serialized to the SGKLM container, re-loaded as the KenLM-probing-
-    style hash-table scorer (chained MurmurHash64A keys, open-addressing
-    probes — lm/binary.py), broadcast, and scored over the same pool as
-    qf_lm_ppl. The oracle is qf_lm_ppl's frexp-literal table: binary
-    round-trip + hash probing must reproduce the sorted-array scores
-    bit-for-bit, which this hash check proves end-to-end."""
-    def build():
-        import os
-        import tempfile
-
-        from pycorrector_spark.lm.binary import load_binary, save_binary
-
-        fd, path = tempfile.mkstemp(suffix=".sgklm")
-        os.close(fd)
-        try:
-            save_binary(_full_artifacts_cached().lm, path)
-            return load_binary(path)  # plain arrays -> picklable broadcast
-        finally:
-            os.unlink(path)
-
-    bc = _cached_bc(spark, "lm_binary", build)
-    return _ppl_map(spark, sf_dir, lambda: bc.value)
 
 
 def q_pipeline_full(spark, sf_dir):
@@ -2003,7 +1976,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nb_langid": q_nb_langid,
         "dsir_select": q_dsir_select,
         "qf_lm_ppl": q_lm_ppl,
-        "qf_lm_ppl_binary": q_lm_ppl_binary,
         "qf_ccnet_buckets": q_ccnet_buckets,
         "qf_gopher_rules": q_gopher_rules,
         "qf_top_ngram": q_top_ngram,
@@ -3206,7 +3178,6 @@ def oracle_sql() -> dict[str, str]:
         "zh_correct_full": _zh_correct_full_oracle_sql(),
         "en_spell_full": _en_spell_full_oracle_sql(),
         "qf_lm_ppl": _qf_lm_ppl_oracle_sql(),
-        "qf_lm_ppl_binary": _qf_lm_ppl_oracle_sql(),
         "qf_ccnet_buckets": _qf_ccnet_oracle_sql(),
         "qf_pipeline_pool": _pipeline_pool_oracle_sql(),
         "qf_pipeline_full": _pipeline_full_oracle_sql(),

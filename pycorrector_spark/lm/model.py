@@ -136,36 +136,27 @@ class CharNgramLM:
         if m == 0:
             return self.p1[w]
         n = m + 1
-        pn = self._probe_ngram(n, list(ctx_cols) + [w])
+        # log10 prob of the stored (m+1)-grams; NaN where the gram (or its
+        # whole order) is not stored
+        if n in self.keys:
+            pn = self._probe(self.keys[n], self.p[n],
+                             _pack_cols(list(ctx_cols) + [w], self.base), np.nan)
+        else:
+            pn = np.full(len(w), np.nan)
         miss = np.isnan(pn)
         if miss.any():
             mc = [c[miss] for c in ctx_cols]
-            # backoff weight of the length-m context (misses only)
+            # backoff weight of the length-m context (misses only; 0 where
+            # the context, or its order's weights, are absent)
             if m == 1:
                 bow = self.bow1[mc[0]]
+            elif m in self.keys and m in self.ctx_bow:
+                bow = self._probe(self.keys[m], self.ctx_bow[m],
+                                  _pack_cols(mc, self.base), 0.0)
             else:
-                bow = self._probe_bow(m, mc)
+                bow = np.zeros(len(mc[-1]), dtype=np.float64)
             pn[miss] = bow + self.cond(mc[1:], w[miss])
         return pn
-
-    # -- probe hooks (overridden by the hash-probing binary model,
-    #    lm/binary.ProbingCharLM — same recursion, different key scheme) --
-
-    def _probe_ngram(self, n: int, cols) -> np.ndarray:
-        """log10 prob of the n-grams formed by ``cols`` (n id arrays,
-        oldest first); NaN where the gram is not stored."""
-        if n not in self.keys:
-            return np.full(len(cols[-1]), np.nan)
-        q = _pack_cols(cols, self.base)
-        return self._probe(self.keys[n], self.p[n], q, np.nan)
-
-    def _probe_bow(self, m: int, cols) -> np.ndarray:
-        """log10 backoff weight of the length-m contexts (0 when absent)."""
-        if m in self.keys and m in self.ctx_bow:
-            return self._probe(
-                self.keys[m], self.ctx_bow[m], _pack_cols(cols, self.base), 0.0
-            )
-        return np.zeros(len(cols[-1]), dtype=np.float64)
 
     def cond2(self, v: np.ndarray, w: np.ndarray) -> np.ndarray:
         """log10 P(w | v) with backoff."""
@@ -260,8 +251,8 @@ class CharNgramLM:
                 out[pos] = self.cond([flat[pos - m + j] for j in range(m)], flat[pos])
                 continue
             # score each distinct (context, char) gram once, then scatter
-            # back by code; the key packs the m+1 ids as _probe_ngram does,
-            # here for every window of the flat sequence at once
+            # back by code; the key packs the m+1 ids as cond does, here
+            # for every window of the flat sequence at once
             windows = [flat[j:len(flat) - m + j] for j in range(m + 1)]
             codes, grams = pd.factorize(_pack_cols(windows, self.base)[pos - m])
             cols = []
@@ -472,9 +463,10 @@ def load_arpa(source, max_order: int = 5) -> CharNgramLM:
     class of model). Backoff weights default to 0 when a line omits them,
     per the ARPA spec. A truncated or malformed file raises ValueError:
     every order the \\data\\ header declares must have exactly its
-    ``ngram n=c`` count of rows, each row must carry ``n`` tokens, and
-    the file must end with \\end\\ (a headerless line list skips only
-    the count check)."""
+    ``ngram n=c`` count of rows, each row must carry ``n`` tokens, each
+    token of a higher order must be <s>/</s>/<unk> or a \\1-grams: token,
+    no gram may be listed twice, and the file must end with \\end\\ (a
+    headerless line list skips only the count check)."""
     if isinstance(source, str):
         with open(source, "r", encoding="utf-8") as f:
             lines = f.read().splitlines()
@@ -542,6 +534,9 @@ def load_arpa(source, max_order: int = 5) -> CharNgramLM:
             for j, tok in enumerate(gram):
                 if tok == "<sp>":
                     gram[j] = " "
+    for tok, count in Counter(g[0] for _, g, _ in sections[1]).most_common(1):
+        if count > 1:
+            raise ValueError(f"ARPA order 1: token {tok!r} is listed {count} times")
     chars = sorted(
         g[0] for _, g, _ in sections[1] if g[0] not in special
     )
@@ -559,13 +554,19 @@ def load_arpa(source, max_order: int = 5) -> CharNgramLM:
             "int64 packed-key space; prune the vocabulary or the order"
         )
 
-    def tid(tok):
-        return special.get(tok, vocab.get(tok, 0))
+    def tid(tok, n):
+        i = special.get(tok, vocab.get(tok))
+        if i is None:
+            raise ValueError(
+                f"ARPA order {n}: token {tok!r} is not in the \\1-grams: "
+                "vocabulary (malformed row)"
+            )
+        return i
 
     p1 = np.full(base, LOG10_EPS, dtype=np.float64)
     bow1 = np.zeros(base, dtype=np.float64)
     for logp, gram, bow in sections[1]:
-        i = tid(gram[0])
+        i = tid(gram[0], 1)
         p1[i] = logp
         bow1[i] = bow
 
@@ -575,13 +576,17 @@ def load_arpa(source, max_order: int = 5) -> CharNgramLM:
         for logp, gram, bow in sections.get(n, []):
             key = 0
             for t in gram:
-                key = key * base + tid(t)
+                key = key * base + tid(t, n)
             kk.append(key)
             pv.append(logp)
             bv.append(bow)
         arr = np.array(kk, dtype=np.int64)
         order_idx = np.argsort(arr, kind="stable")
         keys[n] = arr[order_idx]
+        dup = np.flatnonzero(keys[n][1:] == keys[n][:-1])
+        if len(dup):
+            gram = sections[n][order_idx[dup[0]]][1]
+            raise ValueError(f"ARPA order {n}: gram {' '.join(gram)!r} is listed twice")
         ps[n] = np.array(pv, dtype=np.float64)[order_idx]
         if n < model_order:
             ctx_bow[n] = np.array(bv, dtype=np.float64)[order_idx]

@@ -171,14 +171,6 @@ class Detector:
         self._word_set = set(word_freq)
         self._logp_table = log_prob_table(word_freq)  # O(dict) once, not per call
 
-    # -- kenlm-equivalent helpers (detector.py:268-284) --
-
-    def ngram_score(self, chars) -> float:
-        return self.lm.score_chars(chars, bos=False, eos=False)
-
-    def ppl_score(self, words) -> float:
-        return self.lm.perplexity_chars(words)
-
     def word_frequency(self, word: str) -> int:
         return self.word_freq.get(word, 0)
 

@@ -275,20 +275,22 @@ ngram 3=1
 
 
 def test_arpa_round_trip_matches_trained_lm():
-    """train -> dump ARPA -> reload: same vocabulary, same ppl to within
-    the %.7f serialization precision."""
-    import numpy as np
-
-    from pycorrector_spark.fixtures import lm_corpus
-    from pycorrector_spark.lm.model import load_arpa, to_arpa_lines, train_char_lm
+    """train -> dump ARPA -> reload: same vocabulary and bit-for-bit the
+    same scores, since to_arpa_lines writes every float by repr (the
+    shortest string that round-trips the exact float64)."""
+    from pycorrector_spark.fixtures import PPL_POOL
+    from pycorrector_spark.lm.model import load_arpa, to_arpa_lines
 
     lm = train_char_lm(lm_corpus())
     lm2 = load_arpa(to_arpa_lines(lm))
     assert lm2.vocab == lm.vocab
-    texts = ["少先队员应该为老人让座", "the quick brown fox", "人工只能布局", ""]
-    p1 = lm.ppl_batch(texts)
-    p2 = lm2.ppl_batch(texts)
-    assert np.allclose(p1, p2, rtol=1e-5)
+    texts = [t for t in PPL_POOL if t.strip()]
+    assert lm2.ppl_batch(texts).tolist() == lm.ppl_batch(texts).tolist()
+    # the detector's window scorer runs the cond2/cond3 backoff
+    for s in ["少先队员应该为老人让座", "天下大乱形势大好", "abc一二三"]:
+        assert lm2.window_avg_scores(s).tolist() == lm.window_avg_scores(s).tolist()
+    # chars outside the vocab map to <unk> in both models
+    assert lm2.score_chars("ΩΨ漢拏") == lm.score_chars("ΩΨ漢拏")
 
 
 def test_load_arpa_rejects_high_order_and_multichar_tokens(lm):
@@ -315,6 +317,18 @@ def test_load_arpa_rejects_high_order_and_multichar_tokens(lm):
     # every section complete, only the \end\ line missing
     with pytest.raises(ValueError, match=r"no \\end\\ line"):
         load_arpa(lines[:-1])
+    # a space-separated bigram row whose backoff weight lands in the gram
+    with pytest.raises(ValueError, match="order 2: token '-0.1' is not in"):
+        load_arpa(["\\data\\", "\\1-grams:", "-1.0 a", "-1.0 b", "",
+                   "\\2-grams:", "-0.3 b -0.1", "\\end\\"])
+    # a gram listed twice, at order 2 and at order 1
+    with pytest.raises(ValueError, match="order 2: gram 'a b' is listed twice"):
+        load_arpa(["\\data\\", "ngram 1=2", "ngram 2=2", "\\1-grams:",
+                   "-1.0\ta", "-1.0\tb", "\\2-grams:", "-0.3\ta b",
+                   "-0.9\ta b", "\\end\\"])
+    with pytest.raises(ValueError, match="order 1: token 'a' is listed 2 times"):
+        load_arpa(["\\data\\", "ngram 1=3", "\\1-grams:", "-1.0\ta",
+                   "-1.0\ta", "-1.0\tb", "\\end\\"])
 
 
 def test_order1_model_batch_matches_score():
