@@ -28,7 +28,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--input", required=True, help="input path (text or parquet)")
     p.add_argument("--output", required=True, help="output directory")
     p.add_argument("--format", choices=["text", "parquet"], default="parquet")
-    p.add_argument("--master", default=None, help="override spark master (default: cluster config)")
+    p.add_argument("--master", default=None, help="override spark master (default: SPARK_GRAFT_MASTER, "
+                   "else spark-submit's --master, else one local core per CPU)")
     p.add_argument("--no-resume", action="store_true",
                    help="parquet mode: overwrite instead of checkpoint-resume append")
     return p

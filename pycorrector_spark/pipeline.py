@@ -19,7 +19,10 @@ host. The score stage runs one task per core (``defaultParallelism``): at
 perfbench's end-to-end docs/s rose 2.6x on web_en and 2.2x on zh_crawl.
 Like every Python stage it runs through ``stage.python_stage``, which
 drops the cached zipimporters when a task ends, so the next task on that
-worker has no archive to re-read.
+worker has no archive to re-read. Where ``session.get_spark`` starts the
+workers from ``pycorrector_spark.daemon`` (a local master it launches),
+the daemon imports pyspark from the installed package and drops its zip
+finders before it forks, so the first task skips the re-read too.
 
 Scale notes (100 TB / 1000 executors):
 - The pipeline is stateless per document: the only shuffle is the initial

@@ -2,8 +2,13 @@
 
 It is the only caller of ``mapInPandas``, so per-task costs that every
 stage pays live here once. Today that is the task-end zip-finder release
-(``_release_zip_finders``): without it, each task on a reused worker
-re-reads pyspark.zip and the spark-core jar, 0.18-0.38 s per task.
+(``daemon._release_zip_finders``): a task that imports from a zip caches
+finders that the next task's ``importlib.invalidate_caches()`` re-reads.
+Workers forked from ``pycorrector_spark.daemon`` start with none, so even
+a worker's first task re-reads nothing; under pyspark's own daemon
+(spark-submit, cluster masters) the first task on each worker still
+re-reads pyspark.zip and the spark-core jar, 0.18-0.38 s, and the release
+spares every later one.
 
 ``python_stage`` never repartitions: the url-hash score stage, the
 streaming stage and curation's range-partitioned cumsum mean something by
@@ -13,10 +18,9 @@ their partitioning. Stages that only want every core busy call
 
 from __future__ import annotations
 
-import sys
-import zipimport
-
 from pyspark.sql import DataFrame
+
+from .daemon import _release_zip_finders
 
 
 def ensure_parallelism(df: DataFrame, min_parts: int = None) -> DataFrame:
@@ -49,21 +53,3 @@ def _task(fn):
             _release_zip_finders()
 
     return task
-
-
-def _release_zip_finders():
-    """Drop every zipimporter from ``sys.path_importer_cache``.
-
-    A reused Python worker starts each task with
-    ``importlib.invalidate_caches()`` (pyspark ``setup_spark_files``). On
-    CPython < 3.13 that re-reads the whole archive directory once per
-    cached zipimporter, eagerly: each worker caches ~16 of them (pyspark.zip,
-    the spark-core jar, py4j), 0.2-0.4 s per task. With none cached, the
-    next task's call has nothing to re-read. A later import from a zip
-    builds a fresh finder from ``zipimport._zip_directory_cache``, which is
-    left alone, so the rebuild does not read the archive either.
-    """
-    cache = sys.path_importer_cache
-    for path, finder in list(cache.items()):
-        if isinstance(finder, zipimport.zipimporter):
-            cache.pop(path, None)

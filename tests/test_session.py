@@ -29,6 +29,13 @@ def test_env_and_argument_override(clean_env):
     assert resolve_master("local[5]") == ("local[5]", 5)
 
 
-@pytest.mark.parametrize("master", ["local[*]", "local[x]", "spark://head:7077"])
+@pytest.mark.parametrize("master,cores", [("local", 1), ("local[3,2]", 3)])
+def test_local_core_counts(clean_env, master, cores):
+    """``local`` runs one thread; ``local[N,F]`` runs N (F is the task
+    retry count)."""
+    assert resolve_master(master) == (master, cores)
+
+
+@pytest.mark.parametrize("master", ["local[*]", "local[*,3]", "local[x]", "spark://head:7077"])
 def test_unparsable_core_counts_fall_back_to_host_cores(clean_env, master):
     assert resolve_master(master) == (master, HOST_CORES)

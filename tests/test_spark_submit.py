@@ -2,10 +2,11 @@
 --py-files on a multi-executor cluster'): build the --py-files zip with
 tools/make_pyfiles.py, then launch a REAL spark-submit subprocess whose
 driver imports pycorrector_spark ONLY from the zip (cwd is a scratch
-dir, no repo on sys.path) and runs the scoring pipeline over a small
-parquet input. Verifies the package is self-contained executor-side —
-embedded dicts + driver-trained LM — exactly as the packaging docstring
-claims."""
+dir, no repo on sys.path), builds its session with get_spark as the CLI
+does, and runs the scoring pipeline over a small parquet input. Verifies
+the package is self-contained executor-side — embedded dicts +
+driver-trained LM — exactly as the packaging docstring claims, and that
+get_spark keeps the submitted master and pyspark's own Python daemon."""
 
 import json
 import os
@@ -18,17 +19,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 JOB = """
 import json, sys
-from pyspark.sql import SparkSession
-
-spark = (SparkSession.builder.master("local[2]")
-         .appName("submit-smoke")
-         .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.ui.enabled", "false")
-         .getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
 
 import pycorrector_spark
 assert "pycorrector_spark.zip" in pycorrector_spark.__file__, pycorrector_spark.__file__
+
+from pycorrector_spark.session import get_spark
+
+spark = get_spark("submit-smoke", shuffle_partitions=4)
 
 from pycorrector_spark.pipeline import run_quality_pipeline
 from pycorrector_spark.operators.score import build_artifacts
@@ -43,6 +40,8 @@ docs = spark.createDataFrame(
 bc = spark.sparkContext.broadcast(build_artifacts())
 out = run_quality_pipeline(spark, docs, bc=bc).select("url", "keep").collect()
 print("RESULT " + json.dumps({
+    "master": spark.sparkContext.master,
+    "daemon": spark.sparkContext.getConf().get("spark.python.daemon.module", None),
     "rows": len(out),
     "kept": sum(1 for r in out if r["keep"]),
 }))
@@ -70,6 +69,10 @@ def test_spark_submit_py_files(tmp_path):
     lines = [l for l in proc.stdout.splitlines() if l.startswith("RESULT ")]
     assert lines, proc.stdout[-2000:]
     got = json.loads(lines[-1].removeprefix("RESULT "))
+    # the submitted master is kept, and pyspark's own daemon starts the
+    # workers: the package only arrives with the task
+    assert got["master"] == "local[2]"
+    assert got["daemon"] is None
     assert got["rows"] == 21
     # the junk row must be dropped, the clean ones kept
     assert got["kept"] == 20
