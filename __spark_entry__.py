@@ -272,9 +272,9 @@ SAMPLE_RATE = 0.1         # deterministic md5-bucket sample rate (qf_sample)
 NB_MIN_COUNT = 2          # NB classifier vocabulary prune (nb_langid)
 TOKEN_BUDGET = 15_000     # corpus token budget (qf_token_budget)
 
-# bucketed-table dirs created by q_rel_bucketed_join in this process
-# (reaped on the next call; the final survivor is removed at interpreter
-# exit)
+# scratch output dirs created by q_rel_bucketed_join (bucketed tables) and
+# q_resume_pipeline (docs_out + audit) in this process (reaped on the next
+# call of either; the final survivor is removed at interpreter exit)
 _TMP_DIRS: set = set()
 
 
@@ -872,22 +872,6 @@ def q_eval_f1(spark, sf_dir):
     return eval_corrector(spark, pairs)
 
 
-# source/checkpoint dirs created by q_stream_dedup in this process (same
-# reap discipline as _TMP_DIRS)
-_STREAM_DIRS: set = set()
-
-
-def _reap_stream_dirs():
-    import shutil
-
-    for old in list(_STREAM_DIRS):
-        shutil.rmtree(old, ignore_errors=True)
-        _STREAM_DIRS.discard(old)
-
-
-atexit.register(_reap_stream_dirs)
-
-
 DOMAIN_MIX_WEIGHTS = {"src0": 0.4, "src1": 0.3, "src2": 0.2, "src3": 0.1}
 
 
@@ -1002,9 +986,9 @@ def q_resume_pipeline(spark, sf_dir):
     from pycorrector_spark.fixtures import PPL_POOL
     from pycorrector_spark.pipeline import run_with_resume
 
-    _reap_stream_dirs()
+    _reap_tmp_dirs()
     out = tempfile.mkdtemp(prefix="pycorrector_spark_resume_")
-    _STREAM_DIRS.add(out)
+    _TMP_DIRS.add(out)
 
     docs = _pool_docs(spark, sf_dir, PPL_POOL).withColumn(
         "url", F.concat(F.lit("doc://"), F.col("doc_id"))
@@ -1026,30 +1010,6 @@ def _resume_pipeline_oracle_sql() -> str:
         g = golden_row(s, zh, en)
         rows.append((i, tuple(g[c] for c in _RESUME_COLS)))
     return _pool_oracle_sql(len(PPL_POOL), _RESUME_COLS, rows)
-
-
-def q_stream_pipeline(spark, sf_dir):
-    """The COMPLETE scoring pipeline under Structured Streaming,
-    driver-gated (§2.9): the pool corpus is written as parquet, replayed
-    through stream_quality_pipeline (the same one-Arrow-pass stage as the
-    batch path, behind readStream) with an availableNow trigger into the
-    per-epoch idempotent sink, and the resulting docs_out must match the
-    per-pool-index golden rows exactly — streaming and batch label
-    identically, row for row."""
-    import tempfile
-
-    from pycorrector_spark.fixtures import PPL_POOL
-    from pycorrector_spark.streaming import run_streaming_pipeline
-
-    _reap_stream_dirs()
-    root = tempfile.mkdtemp(prefix="pycorrector_spark_streampipe_")
-    _STREAM_DIRS.add(root)
-    src, out = f"{root}/src", f"{root}/out"
-
-    _pool_docs(spark, sf_dir, PPL_POOL).coalesce(2).write.parquet(src)
-    run_streaming_pipeline(spark, src, out)
-    got = spark.read.parquet(f"{out}/docs_out")
-    return got.select("doc_id", *_RESUME_COLS)
 
 
 def q_corpus_rollup(spark, sf_dir):
@@ -1224,86 +1184,6 @@ def _curation_e2e_oracle_sql() -> str:
         JOIN gkeep g USING (doc_id)
         LEFT JOIN hits h USING (doc_id)
     """
-
-
-def q_stream_dedup(spark, sf_dir):
-    """Structured Streaming first-seen dedup (§2.9) driven END TO END as a
-    bounded job: the sf docs subset is replayed as TWO deterministic
-    micro-batches (doc_id parity; one availableNow pass per batch against
-    a shared checkpoint, so batch boundaries don't depend on file-listing
-    order), through the applyInPandasWithState operator
-    (streaming.stream_dedup_first_seen), collecting update-mode output via
-    foreachBatch.
-
-    The docs table has NO naturally duplicated texts (verified at sf0.01),
-    so both stateful paths are exercised by injected duplicates:
-    batch 0 = docs [0, 200); batch 1 = docs [100, 300) — rows [100, 200)
-    are exact re-crawls SUPPRESSED by cross-batch state — plus mirror
-    copies of [250, 300) under a different url (doc_id + 1000), which the
-    in-batch collapse merges (first_in_batch == 2, min-url winner).
-
-    Deterministic by construction: the representative row per key is the
-    MIN-url row of the key's first batch (streaming.py), so the oracle is
-    plain SQL over the same injected union: group by content key,
-    first batch = min(b), url = min(url) and first_in_batch = count(*)
-    within that batch."""
-    import tempfile
-
-    from pycorrector_spark.streaming import stream_dedup_first_seen
-
-    _reap_stream_dirs()
-    root = tempfile.mkdtemp(prefix="pycorrector_spark_stream_")
-    _STREAM_DIRS.add(root)
-    src, ckpt = f"{root}/src", f"{root}/ckpt"
-
-    # documents.parquet carries no url column; synthesize the webpage url
-    # deterministically from (source, doc_id) — the oracle repeats the
-    # same concat, so the min-url representative choice is comparable
-    def pages(df):
-        return df.select(
-            "doc_id",
-            F.concat(
-                F.lit("https://"), F.coalesce("source", F.lit("x")),
-                F.lit("/"), F.col("doc_id"),
-            ).alias("url"),
-            "text",
-        )
-
-    d = _docs(spark, sf_dir)
-    batch0 = pages(d.filter(F.col("doc_id") < 200))
-    mirrors = d.filter(
-        (F.col("doc_id") >= 250) & (F.col("doc_id") < 300)
-    ).withColumn("doc_id", F.col("doc_id") + 1000)
-    batch1 = pages(
-        d.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 300))
-    ).unionByName(pages(mirrors))
-    batches = [batch0, batch1]
-    schema = "doc_id long, url string, text string"
-    collected: list = []
-
-    def sink(batch_df, epoch_id):
-        collected.extend(batch_df.collect())
-
-    for b, bdf in enumerate(batches):
-        bdf.coalesce(1).write.mode("append").parquet(src)
-        q = (
-            stream_dedup_first_seen(
-                spark.readStream.schema(schema).parquet(src)
-            )
-            .withColumn("first_batch", F.lit(b))
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    return spark.createDataFrame(
-        [(r["dedup_key"], r["url"], int(r["first_in_batch"]), int(r["first_batch"]))
-         for r in collected],
-        "dedup_key string, url string, first_in_batch long, first_batch int",
-    )
 
 
 def q_zh_correct_full(spark, sf_dir):
@@ -1950,7 +1830,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "qf_pipeline_full": q_pipeline_full,
         "qf_pipeline_pool": q_pipeline_pool,
         "resume_pipeline": q_resume_pipeline,
-        "stream_pipeline": q_stream_pipeline,
         # --- (c) stable greens (proven in CORRECTNESS_r04) ----------------
         "en_spell_full": q_en_spell_full,
         "rel_pricing_summary": q_rel_pricing_summary,
@@ -1959,7 +1838,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rel_events_daily": q_rel_events_daily,
         "rel_user_top_event": q_rel_user_top_event,
         "rel_sessionize": q_rel_sessionize,
-        "stream_dedup": q_stream_dedup,
         "qf_decontaminate": q_decontaminate,
         "qf_corpus_rollup": q_corpus_rollup,
         "qf_domain_mix": q_domain_mix,
@@ -3068,7 +2946,6 @@ def oracle_sql() -> dict[str, str]:
         "qf_decontaminate": _decontaminate_oracle_sql(),
         "zh_segment_pos": _zh_segment_pos_oracle_sql(),
         "resume_pipeline": _resume_pipeline_oracle_sql(),
-        "stream_pipeline": _resume_pipeline_oracle_sql(),
         "qf_domain_mix": _domain_mix_oracle_sql(),
         "qf_corpus_rollup": """
             SELECT source, lang, GROUPING(source, lang) AS gid,
@@ -3076,31 +2953,6 @@ def oracle_sql() -> dict[str, str]:
                    sum(n_chars)::BIGINT AS total_chars,
                    avg(n_chars) AS avg_chars
             FROM documents GROUP BY ROLLUP(source, lang)
-        """,
-        "stream_dedup": f"""
-            WITH sub AS (
-              SELECT 'https://' || coalesce(source, 'x') || '/' || doc_id AS url,
-                     md5(coalesce(text, '')) AS dedup_key,
-                     0 AS b
-              FROM documents WHERE doc_id < 200
-              UNION ALL
-              SELECT 'https://' || coalesce(source, 'x') || '/' || doc_id,
-                     md5(coalesce(text, '')), 1
-              FROM documents WHERE doc_id >= 100 AND doc_id < 300
-              UNION ALL
-              SELECT 'https://' || coalesce(source, 'x') || '/' || (doc_id + 1000),
-                     md5(coalesce(text, '')), 1
-              FROM documents WHERE doc_id >= 250 AND doc_id < 300
-            ),
-            fb AS (SELECT dedup_key, min(b) AS first_batch
-                   FROM sub GROUP BY dedup_key)
-            SELECT s.dedup_key,
-                   min(s.url) AS url,
-                   count(*) AS first_in_batch,
-                   f.first_batch
-            FROM sub s
-            JOIN fb f ON s.dedup_key = f.dedup_key AND s.b = f.first_batch
-            GROUP BY s.dedup_key, f.first_batch
         """,
         "qf_quality_signals": _SIGNALS_CTE + """
             SELECT doc_id, n_chars, n_words, symbol_ratio, rep_ratio, len_ok FROM sig2

@@ -9,7 +9,9 @@ per line, per-line correct, TSV out) re-expressed as a Spark job:
 Formats:
   text    — S1/S2: one document per line in; `url \t keep \t scrubbed` TSV out
   parquet — docs table (url, warc_ts, html, text, lang) in; full scored
-            docs_out + audit parquet out, checkpoint-resumable
+            docs_out + audit parquet out, checkpoint-resumable (re-running
+            on the same --output scores only what is missing; a fresh
+            --output gives a clean full run)
 
 Local smoke: python -m pycorrector_spark --input tests_file.txt \
     --output /tmp/out --format text --master 'local[4]'
@@ -30,8 +32,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--format", choices=["text", "parquet"], default="parquet")
     p.add_argument("--master", default=None, help="override spark master (default: SPARK_GRAFT_MASTER, "
                    "else spark-submit's --master, else one local core per CPU)")
-    p.add_argument("--no-resume", action="store_true",
-                   help="parquet mode: overwrite instead of checkpoint-resume append")
     return p
 
 
@@ -52,7 +52,7 @@ def load_docs(spark: SparkSession, path: str, fmt: str):
 def main(argv=None) -> None:
     args = build_parser().parse_args(argv)
     from .session import get_spark
-    from .pipeline import run_quality_pipeline, run_with_resume, write_outputs
+    from .pipeline import run_quality_pipeline, run_with_resume
 
     spark = get_spark("pycorrector-spark", master=args.master)
     docs = load_docs(spark, args.input, args.format)
@@ -69,17 +69,6 @@ def main(argv=None) -> None:
             F.col("keep").cast("string"),
             F.coalesce("scrubbed_text", F.lit("")),
         ).write.mode("overwrite").option("quote", "").csv(args.output, sep="\t")
-    elif args.no_resume:
-        # same sinks as the resume path (docs_out + audit — the audit
-        # table is part of the output contract either way); --no-resume
-        # only changes append-with-anti-join to a clean overwrite
-        from .pipeline import audit_frame
-
-        scored = run_quality_pipeline(spark, docs).localCheckpoint(eager=True)
-        scored.drop("errors", "corrections").write.mode("overwrite").parquet(
-            f"{args.output}/docs_out"
-        )
-        audit_frame(scored).write.mode("overwrite").parquet(f"{args.output}/audit")
     else:
         run_with_resume(spark, docs, args.output)
 

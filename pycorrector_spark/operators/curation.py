@@ -24,7 +24,7 @@ Scale notes
 - ``incremental_dedup`` anti-joins the new crawl against the seen-hash
   snapshot, with an optional broadcast bloom prefilter: rows the bloom
   rejects are *definitely new* and skip the shuffle entirely; only bloom
-  positives (true dups + the tuned false-positive fraction) are joined.
+  positives (true dups + a 1% false-positive fraction) are joined.
   At 100 TB/day against a multi-PB seen-set, that turns a full-corpus
   shuffle into a shuffle of the (tiny) dup fraction. The bloom has no
   false negatives, so the prefiltered plan returns byte-identical results
@@ -533,22 +533,30 @@ def build_bloom(
     return out
 
 
+# target false-positive rate of incremental_dedup's bloom prefilter
+INCREMENTAL_BLOOM_FP_RATE = 0.01
+
+
 def incremental_dedup(
     new_docs: DataFrame,
     seen_docs: DataFrame,
     text_col: str = "text",
     use_bloom: bool = True,
-    fp_rate: float = 0.01,
-    seen_count: int | None = None,
 ) -> DataFrame:
     """Rows of ``new_docs`` whose ``text_col`` md5 was NOT seen in
     ``seen_docs``, with the hash exposed as ``text_md5``.
+
+    The library's one cross-run exact dedup. Like the resume driver
+    (``pipeline.run_with_resume``) it is a batch anti-join keyed on
+    content, not on which files a row arrived in, so a rewritten or
+    compacted ``seen_docs`` table dedups the same.
 
     NULL text never matches anything (md5(NULL) is NULL; NULL join keys
     don't equate) — degenerate rows pass through as new, mirroring the
     exact-dedup operator's NULL contract.
 
-    With ``use_bloom`` the plan splits on a broadcast bloom probe:
+    With ``use_bloom`` the plan splits on a broadcast bloom probe, sized
+    from ``seen_docs.count()`` for INCREMENTAL_BLOOM_FP_RATE:
     bloom-negative rows (definitely new) bypass the anti-join shuffle;
     only bloom positives join. No false negatives ⇒ identical output to
     the plain anti-join, so both variants share one oracle.
@@ -560,8 +568,7 @@ def incremental_dedup(
     if not use_bloom:
         return new_h.join(seen_h, "text_md5", "left_anti")
 
-    n_seen = seen_count if seen_count is not None else seen_docs.count()
-    m_bits, k = BloomFilter.sized_for(n_seen, fp_rate)
+    m_bits, k = BloomFilter.sized_for(seen_docs.count(), INCREMENTAL_BLOOM_FP_RATE)
     bf = build_bloom(seen_docs, text_col, m_bits, k)
     spark = new_docs.sparkSession
     bits_bc = spark.sparkContext.broadcast(bf.bits.tobytes())

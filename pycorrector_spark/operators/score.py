@@ -377,29 +377,14 @@ def make_score_stage(bc, input_fields):
     """Build (python_stage function, output schema DDL) for the one-pass
     stage: signals + gate + LM + detect/correct + scrub + decision.
 
-    ``input_fields``: list of (name, ddl_type) for the input columns.
-    (The old DDL-string form is rejected: recovering names by splitting on
-    ', ' silently mis-parses types that legitimately contain ', ' — e.g.
-    struct simpleStrings — into wrong (name, type) pairs.) Input columns
-    colliding with COMPUTED_COLS are excluded here — the stage recomputes
-    and owns those — so EVERY caller (batch pipeline, streaming, tests)
-    gets a valid duplicate-free output schema."""
-    if isinstance(input_fields, str):
-        raise TypeError(
-            "make_score_stage takes a list of (name, ddl_type) pairs; build "
-            "it from df.schema.fields — DDL-string parsing was removed as "
-            "unsound (types may contain ', ')"
-        )
-    computed = set(COMPUTED_COLS)
-    kept = [(n, t) for n, t in input_fields if n not in computed]
-    dropped = [n for n, _ in input_fields if n in computed]
-    schema = ", ".join(f"{n} {t}" for n, t in kept) + ", " + SCORE_SCHEMA_SUFFIX
+    ``input_fields``: list of (name, ddl_type) for the input columns, as
+    ``pipeline.stage_for_scoring`` returns them: no input column is named
+    like one of COMPUTED_COLS, which the stage computes and appends."""
+    schema = ", ".join(f"{n} {t}" for n, t in input_fields) + ", " + SCORE_SCHEMA_SUFFIX
 
     def fn(iterator):
         art, zh, en = _get_workers(bc)
         for pdf in iterator:
-            if dropped:
-                pdf = pdf.drop(columns=dropped, errors="ignore")
             yield process_batch(pdf, zh, en, art.cfg)
 
     return fn, schema

@@ -128,17 +128,14 @@ def run_quality_pipeline(
 
 
 def stage_for_scoring(docs: DataFrame):
-    """(staged_df, fields) ready for make_score_stage — shared by the
-    batch pipeline and the streaming variant so both apply the SAME
-    pre-Arrow pruning.
+    """(staged_df, fields) ready for make_score_stage.
 
     html is dead weight through the Python stage — drop it before the
     Arrow exchange (column pruning the optimizer can't do for us because
     mapInPandas is schema-opaque). Input columns colliding with computed
     output names (e.g. an upstream n_chars/lang_id) are also excluded
-    BEFORE the exchange so dead columns are never shipped;
-    make_score_stage applies the same exclusion to the schema for callers
-    that don't pre-drop."""
+    BEFORE the exchange: the stage recomputes and owns those, and dead
+    columns are never shipped."""
     from .operators.score import COMPUTED_COLS
 
     computed = set(COMPUTED_COLS)
@@ -146,6 +143,11 @@ def stage_for_scoring(docs: DataFrame):
     staged = docs.select(*cols)
     fields = [(f.name, f.dataType.simpleString()) for f in staged.schema.fields]
     return staged, fields
+
+
+def _sum0(col):
+    """SUM that reads 0, not NULL, over zero rows (or all-NULL input)."""
+    return F.coalesce(F.sum(col), F.lit(0).cast("long"))
 
 
 def audit_frame(scored: DataFrame, run_id: str = None) -> DataFrame:
@@ -162,12 +164,12 @@ def audit_frame(scored: DataFrame, run_id: str = None) -> DataFrame:
     run_id = run_id or uuid.uuid4().hex
     metrics = [
         F.count("*").alias("n_rows"),
-        F.sum(F.col("keep").cast("long")).alias("n_keep"),
-        F.sum((~F.col("keep")).cast("long")).alias("n_drop"),
+        _sum0(F.col("keep").cast("long")).alias("n_keep"),
+        _sum0((~F.col("keep")).cast("long")).alias("n_drop"),
         F.min("ppl").alias("min_ppl"),
         F.max("ppl").alias("max_ppl"),
-        F.sum(F.length("text")).alias("chars_in"),
-        F.sum(F.length("scrubbed_text")).alias("chars_out"),
+        _sum0(F.length("text")).alias("chars_in"),
+        _sum0(F.length("scrubbed_text")).alias("chars_out"),
     ]
     per_part = (
         scored.withColumn("partition_id", F.spark_partition_id())
@@ -198,6 +200,18 @@ def write_outputs(scored: DataFrame, out_dir: str, run_id: str = None) -> None:
     audit_frame(scored, run_id).write.mode("append").parquet(f"{out_dir}/audit")
 
 
+# AnalysisException messages for a docs_out with nothing to anti-join
+# against: no directory, or a directory with no data file in it
+_NO_OUTPUT_ERRORS = ("PATH_NOT_FOUND", "Path does not exist", "UNABLE_TO_INFER_SCHEMA")
+
+
+def _delete_uncommitted(spark: SparkSession, path: str) -> None:
+    """Delete ``{path}/_temporary`` through the path's Hadoop FileSystem."""
+    sc = spark.sparkContext
+    tmp = sc._jvm.org.apache.hadoop.fs.Path(f"{path}/_temporary")
+    tmp.getFileSystem(sc._jsc.hadoopConfiguration()).delete(tmp, True)
+
+
 def run_with_resume(
     spark: SparkSession,
     docs: DataFrame,
@@ -213,17 +227,27 @@ def run_with_resume(
     primary key, but keying on the snapshot timestamp too means multiple
     snapshots of one url can never shadow each other across a resume).
 
-    Only a MISSING output path falls back to the full input; any other
-    read failure (corrupt footer, permissions, schema drift) must raise —
-    silently reprocessing everything would append the whole corpus as
-    duplicates.
+    One writer per ``out_dir``: a run must not start while another run on
+    the same ``out_dir`` is still writing. Each run first deletes the
+    ``_temporary`` dirs under docs_out and audit: under the
+    FileOutputCommitter they hold only the task output of a job that was
+    killed before its commit, which the anti-join cannot see (readers skip
+    ``_``-prefixed paths) and the next job commit would merge in as
+    duplicates. A docs_out holding no data file then reads as no output.
+
+    Only a missing or data-less output path falls back to the full input;
+    any other read failure (a corrupt or empty part file, permissions,
+    schema drift) must raise — silently reprocessing everything would
+    append the whole corpus as duplicates.
     """
     from pyspark.errors import AnalysisException
 
+    for sink in ("docs_out", "audit"):
+        _delete_uncommitted(spark, f"{out_dir}/{sink}")
     try:
         existing = spark.read.parquet(f"{out_dir}/docs_out")
     except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
+        if not any(m in str(e) for m in _NO_OUTPUT_ERRORS):
             raise
         existing = None
     if existing is not None:

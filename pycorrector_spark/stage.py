@@ -10,9 +10,9 @@ a worker's first task re-reads nothing; under pyspark's own daemon
 re-reads pyspark.zip and the spark-core jar, 0.18-0.38 s, and the release
 spares every later one.
 
-``python_stage`` never repartitions: the url-hash score stage, the
-streaming stage and curation's range-partitioned cumsum mean something by
-their partitioning. Stages that only want every core busy call
+``python_stage`` never repartitions: the url-hash score stage and
+curation's range-partitioned cumsum mean something by their
+partitioning. Stages that only want every core busy call
 ``ensure_parallelism`` first.
 """
 

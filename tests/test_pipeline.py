@@ -90,13 +90,18 @@ def test_drop_reasons_exercised(scored_pdf):
 
 
 def test_deterministic_across_partitionings(spark, docs_pdf, scored_pdf):
-    # same input at a different partition count -> identical output
-    docs = spark.createDataFrame(docs_pdf).repartition(7)
+    # same input at a different partition count -> identical output; an
+    # upstream column named like a computed one is replaced by the stage's
+    from pyspark.sql import functions as F
+
+    docs = spark.createDataFrame(docs_pdf).repartition(7).withColumn("lang_id", F.lit("xx"))
     again = (
         run_quality_pipeline(spark, docs)
         .toPandas()
         .sort_values("url", ignore_index=True)
     )
+    assert list(again.columns) == list(scored_pdf.columns)
+    assert again["lang_id"].tolist() == scored_pdf["lang_id"].tolist()
     assert again["keep"].tolist() == scored_pdf["keep"].tolist()
     assert again["scrubbed_text"].tolist() == scored_pdf["scrubbed_text"].tolist()
     def norm_ppl(col):
