@@ -28,10 +28,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def _docs_as_webpages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map the documents table into the pipeline's web-page schema."""
     d = _docs(spark, sf_dir)
@@ -272,9 +268,9 @@ SAMPLE_RATE = 0.1         # deterministic md5-bucket sample rate (qf_sample)
 NB_MIN_COUNT = 2          # NB classifier vocabulary prune (nb_langid)
 TOKEN_BUDGET = 15_000     # corpus token budget (qf_token_budget)
 
-# scratch output dirs created by q_rel_bucketed_join (bucketed tables) and
-# q_resume_pipeline (docs_out + audit) in this process (reaped on the next
-# call of either; the final survivor is removed at interpreter exit)
+# scratch output dirs (docs_out + audit) created by q_resume_pipeline in
+# this process (reaped on its next call; the final survivor is removed at
+# interpreter exit)
 _TMP_DIRS: set = set()
 
 
@@ -1206,165 +1202,6 @@ def q_en_spell_full(spark, sf_dir):
     return _en_spell_map(spark, sf_dir, full=True)
 
 
-def q_rel_pricing_summary(spark, sf_dir):
-    li = _tbl(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("sum_base"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def q_rel_top_nations(spark, sf_dir):
-    c = _tbl(spark, sf_dir, "customer")
-    n = _tbl(spark, sf_dir, "nation")
-    o = _tbl(spark, sf_dir, "orders")
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total_price"),
-        )
-    )
-
-
-def q_rel_shipping_priority(spark, sf_dir):
-    """TPC-H Q3 shape (shipping priority): 3-way join filtered on
-    segment/date windows, revenue agg per order, deterministic top-10.
-    Catalyst pushes the segment/date predicates into the scans and
-    broadcasts the filtered customer side; per-term DECIMAL(18,2) casts
-    make the revenue sum partition-order independent (exact decimal
-    addition), so the hash oracle holds on any parallelism."""
-    c = _tbl(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    o = _tbl(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
-    )
-    li = _tbl(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp")
-    )
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,2)")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(rev).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-    )
-
-
-def q_rel_local_supplier(spark, sf_dir):
-    """TPC-H Q5 shape (local supplier volume): 6-table join where the
-    customer and the supplier share a nation, revenue per nation within
-    one region. nation/region are broadcast dims; the supplier join
-    carries the co-nation equi-condition so no post-join filter blows up
-    the intermediate."""
-    c = _tbl(spark, sf_dir, "customer")
-    o = _tbl(spark, sf_dir, "orders")
-    li = _tbl(spark, sf_dir, "lineitem")
-    s = _tbl(spark, sf_dir, "supplier")
-    n = _tbl(spark, sf_dir, "nation")
-    r = _tbl(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,2)")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(s),
-            (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
-        )
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(F.sum(rev).cast("double").alias("revenue"))
-    )
-
-
-def q_rel_bucketed_join(spark, sf_dir):
-    """Revenue per customer nation through BUCKETED catalog tables: both
-    sides are persisted pre-hash-partitioned and pre-sorted on the
-    customer key (storage.write_bucketed — the parquet/catalog stand-in
-    for Iceberg's bucket(N, key) transform), so the join itself needs no
-    Exchange on either side (asserted by tests/test_storage.py; at gate
-    scale AQE may still pick an equally shuffle-free broadcast). Values
-    are layout-independent, which is exactly what the oracle checks."""
-    import tempfile
-
-    from pycorrector_spark.storage import colocated_join, write_bucketed
-
-    _reap_tmp_dirs()
-    base = tempfile.mkdtemp(prefix="sgbucket_")
-    _TMP_DIRS.add(base)
-    cust = _tbl(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = _tbl(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    write_bucketed(cust, "bt_customer", f"{base}/customer", key="c_custkey", buckets=8)
-    write_bucketed(orders, "bt_orders", f"{base}/orders", key="o_custkey", buckets=8)
-    j = colocated_join(
-        spark, "bt_orders", "bt_customer",
-        on=F.col("o_custkey") == F.col("c_custkey"),
-    )
-    return j.groupBy("c_nationkey").agg(
-        F.count("*").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("revenue"),
-    )
-
-
-def q_rel_events_daily(spark, sf_dir):
-    # No session-timezone games (closes the round-3 advice item): the
-    # events parquet stores ts as TIMESTAMP_NTZ (isAdjustedToUTC=false),
-    # and NTZ -> DATE is a pure wall-time cast — the session timezone is
-    # never consulted, on ANY session (verified under Asia/Tokyo).
-    # date_trunc would NOT do: it implicitly casts NTZ -> LTZ through the
-    # session zone, which is why earlier rounds pinned
-    # spark.sql.session.timeZone here (a global side effect, now gone).
-    # The DuckDB oracle truncates the same naive value. The bucket is
-    # cast back to TIMESTAMP_NTZ (wall midnight) so both engines emit a
-    # timestamp — the checker normalizes datetime64, not date objects.
-    e = _tbl(spark, sf_dir, "events")
-    day = F.col("ts").cast("date").cast("timestamp_ntz").alias("day")
-    return (
-        e.groupBy("event_type", day)
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-        )
-    )
-
-
-def q_rel_user_top_event(spark, sf_dir):
-    from pyspark.sql import Window
-
-    e = _tbl(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
-    return (
-        e.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", "event_type", "value")
-    )
-
-
-def q_rel_sessionize(spark, sf_dir):
-    from pyspark.sql import Window
-
-    e = _tbl(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = (F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))) > 1800
-    new_sess = F.when(gap | F.lag("ts").over(w).isNull(), 1).otherwise(0)
-    return (
-        e.withColumn("new_sess", new_sess)
-        .groupBy("user_id")
-        .agg(F.sum("new_sess").cast("long").alias("n_sessions"), F.count("*").alias("n_events"))
-    )
-
-
 def _webpages(spark, sf_dir):
     """documents folded into deterministic multi-line pages (webrules)."""
     from pycorrector_spark.operators.webrules import with_webpage_text
@@ -1780,45 +1617,19 @@ def q_web_pipeline(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDERING CONTRACT: the driver's correctness gate records queries in
-    # dict order and has historically capped the window at 50 entries.
-    # Sections, per the round-4 verdict's rotation ask: (a) queries whose
-    # newest official proof is the ROUND-3 artifact (rotated into the
-    # window so no proof goes >1 round stale), (b) queries new or changed
-    # this round, (c) stable greens proven in CORRECTNESS_r04 — the tail
-    # past position 50 is exclusively r4-proven, unchanged code.
+    # Dict order is gate order: the driver's correctness gate records queries
+    # in dict order and has capped at 50 entries, so the paper's path comes
+    # first (langid, signals, keep_cheap, scrub, LM ppl, zh detect/correct,
+    # en spell, the pipeline and its resume), then dedup and curation, then
+    # the rest. tests/test_entry.py keeps the paper's path inside the window.
     return {
-        # --- (a) rotated: newest proof is CORRECTNESS_r03 -----------------
-        "qf_split_len": q_sent_split_len,
-        "qf_b2q": q_b2q,
-        "ngram_counts": q_ngram_counts,
-        "qf_host_cap": q_host_cap,
-        "qf_sample": q_sample_hash,
-        "dedup_incremental": q_dedup_incremental,
-        "qf_fix_encoding": q_fix_encoding,
-        "tok_counts": q_token_counts,
-        "doc_fingerprint": q_fingerprint,
-        "dedup_exact": q_dedup_exact,
-        "dedup_jaccard": q_dedup_jaccard,
-        "dedup_minhash": q_dedup_minhash,
-        "zh_t2s": q_zh_t2s,
-        "zh_t2s_phrase": q_zh_t2s_phrase,
-        "zh_s2t": q_zh_s2t,
-        "zh_s2t_phrase": q_zh_s2t_phrase,
-        "zh_homophones": q_homophones,
-        "zh_homophones_full": q_homophones_full,
-        "langid_agreement": q_langid_agreement,
-        "qf_langid_ft": q_langid_ft,
-        "en_spell": q_en_spell,
-        # --- (b) new or changed this round (round 5) ----------------------
-        "qf_token_budget": q_token_budget,
-        "qf_curation_e2e": q_curation_e2e,
-        "qf_url_dedup": q_url_dedup,
-        "rel_shipping_priority": q_rel_shipping_priority,
-        "rel_local_supplier": q_rel_local_supplier,
-        # word_freq grew by COMMON_WORDS_ZH this round: every consumer of
-        # the dict (segmentation, OOV detect, correct, pipeline) changed
-        # behavior and re-proves here
+        "qf_langid": q_langid,
+        "qf_quality_signals": q_quality_signals,
+        "qf_keep_cheap": q_keep_cheap,
+        "qf_scrub": q_scrub,
+        "qf_lm_ppl": q_lm_ppl,
+        "qf_sent_split": q_sent_split,
+        "qf_uniform": q_uniform,
         "zh_segment": q_zh_segment,
         "zh_segment_hmm": q_zh_segment_hmm,
         "zh_segment_pos": q_zh_segment_pos,
@@ -1827,40 +1638,50 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "zh_confusion": q_confusion,
         "zh_proper": q_proper,
         "eval_f1": q_eval_f1,
+        "en_spell": q_en_spell,
+        "en_spell_full": q_en_spell_full,
         "qf_pipeline_full": q_pipeline_full,
         "qf_pipeline_pool": q_pipeline_pool,
         "resume_pipeline": q_resume_pipeline,
-        # --- (c) stable greens (proven in CORRECTNESS_r04) ----------------
-        "en_spell_full": q_en_spell_full,
-        "rel_pricing_summary": q_rel_pricing_summary,
-        "rel_top_nations": q_rel_top_nations,
-        "rel_bucketed_join": q_rel_bucketed_join,
-        "rel_events_daily": q_rel_events_daily,
-        "rel_user_top_event": q_rel_user_top_event,
-        "rel_sessionize": q_rel_sessionize,
-        "qf_decontaminate": q_decontaminate,
-        "qf_corpus_rollup": q_corpus_rollup,
-        "qf_domain_mix": q_domain_mix,
-        "dedup_substr": q_substr_dedup,
+        "dedup_exact": q_dedup_exact,
+        "dedup_jaccard": q_dedup_jaccard,
+        "dedup_minhash": q_dedup_minhash,
         "dedup_clusters": q_dedup_clusters,
+        "dedup_substr": q_substr_dedup,
+        "dedup_incremental": q_dedup_incremental,
+        "doc_fingerprint": q_fingerprint,
         "qf_para_dedup": q_paragraph_dedup,
-        "qf_quality_signals": q_quality_signals,
-        "qf_langid": q_langid,
-        "qf_keep_cheap": q_keep_cheap,
-        "qf_scrub": q_scrub,
-        "qf_sent_split": q_sent_split,
-        "qf_uniform": q_uniform,
         "qf_line_dedup": q_line_dedup,
-        "nb_langid": q_nb_langid,
-        "dsir_select": q_dsir_select,
-        "qf_lm_ppl": q_lm_ppl,
-        "qf_ccnet_buckets": q_ccnet_buckets,
+        "qf_curation_e2e": q_curation_e2e,
+        "qf_decontaminate": q_decontaminate,
         "qf_gopher_rules": q_gopher_rules,
-        "qf_top_ngram": q_top_ngram,
         "qf_c4_filter": q_c4_filter,
+        "qf_ccnet_buckets": q_ccnet_buckets,
+        "qf_token_budget": q_token_budget,
+        "qf_host_cap": q_host_cap,
+        "qf_sample": q_sample_hash,
+        "qf_domain_mix": q_domain_mix,
+        "qf_corpus_rollup": q_corpus_rollup,
+        "dsir_select": q_dsir_select,
+        "langid_agreement": q_langid_agreement,
+        "qf_langid_ft": q_langid_ft,
+        "nb_langid": q_nb_langid,
+        "qf_split_len": q_sent_split_len,
+        "qf_b2q": q_b2q,
+        "zh_t2s": q_zh_t2s,
+        "zh_t2s_phrase": q_zh_t2s_phrase,
+        "zh_s2t": q_zh_s2t,
+        "zh_s2t_phrase": q_zh_s2t_phrase,
+        "zh_homophones": q_homophones,
+        "zh_homophones_full": q_homophones_full,
+        "qf_fix_encoding": q_fix_encoding,
+        "ngram_counts": q_ngram_counts,
+        "tok_counts": q_token_counts,
+        "qf_top_ngram": q_top_ngram,
         "qf_html_extract": q_html_extract,
         "qf_toxicity": q_toxicity,
         "qf_url_filter": q_url_filter,
+        "qf_url_dedup": q_url_dedup,
         "qf_web_pipeline": q_web_pipeline,
     }
 
@@ -3064,73 +2885,5 @@ def oracle_sql() -> dict[str, str]:
                    round(avg(s.lang_conf), 6) AS avg_conf
             FROM sig2 s JOIN documents d USING (doc_id)
             GROUP BY d.lang, s.lang_id
-        """,
-        "rel_pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   sum(l_quantity::DECIMAL(18,2))::DOUBLE AS sum_qty,
-                   sum(l_extendedprice::DECIMAL(18,2))::DOUBLE AS sum_base,
-                   count(*) AS count_order
-            FROM lineitem GROUP BY l_returnflag, l_linestatus
-        """,
-        "rel_shipping_priority": """
-            SELECT l_orderkey,
-                   sum((l_extendedprice*(1-l_discount))::DECIMAL(18,2))::DOUBLE AS revenue,
-                   o_orderdate, o_orderpriority
-            FROM customer JOIN orders ON c_custkey = o_custkey
-                          JOIN lineitem ON l_orderkey = o_orderkey
-            WHERE c_mktsegment = 'BUILDING'
-              AND o_orderdate < TIMESTAMP '1998-01-01'
-              AND l_shipdate > TIMESTAMP '1998-01-01'
-            GROUP BY l_orderkey, o_orderdate, o_orderpriority
-            ORDER BY revenue DESC, l_orderkey LIMIT 10
-        """,
-        "rel_local_supplier": """
-            SELECT n_name,
-                   sum((l_extendedprice*(1-l_discount))::DECIMAL(18,2))::DOUBLE AS revenue
-            FROM customer JOIN orders ON c_custkey = o_custkey
-                          JOIN lineitem ON l_orderkey = o_orderkey
-                          JOIN supplier ON l_suppkey = s_suppkey
-                                       AND c_nationkey = s_nationkey
-                          JOIN nation ON c_nationkey = n_nationkey
-                          JOIN region ON n_regionkey = r_regionkey
-            WHERE r_name = 'ASIA'
-            GROUP BY n_name
-        """,
-        "rel_top_nations": """
-            SELECT n_name,
-                   count(*) AS n_orders,
-                   sum(o_totalprice::DECIMAL(18,2))::DOUBLE AS total_price
-            FROM orders JOIN customer ON o_custkey = c_custkey
-                        JOIN nation ON c_nationkey = n_nationkey
-            GROUP BY n_name
-        """,
-        "rel_bucketed_join": """
-            SELECT c_nationkey,
-                   count(*) AS n_orders,
-                   sum(o_totalprice::DECIMAL(18,2))::DOUBLE AS revenue
-            FROM orders JOIN customer ON o_custkey = c_custkey
-            GROUP BY c_nationkey
-        """,
-        "rel_events_daily": """
-            SELECT event_type, date_trunc('day', ts) AS day,
-                   count(*) AS n_events,
-                   sum(value::DECIMAL(18,2))::DOUBLE AS total_value
-            FROM events GROUP BY event_type, date_trunc('day', ts)
-        """,
-        "rel_user_top_event": """
-            SELECT user_id, event_id, event_type, value FROM (
-              SELECT user_id, event_id, event_type, value,
-                     row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS rn
-              FROM events) WHERE rn = 1
-        """,
-        "rel_sessionize": """
-            WITH g AS (
-              SELECT user_id,
-                     CASE WHEN lag(ts) OVER w IS NULL
-                               OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-                          THEN 1 ELSE 0 END AS new_sess
-              FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-            SELECT user_id, sum(new_sess)::BIGINT AS n_sessions, count(*) AS n_events
-            FROM g GROUP BY user_id
         """,
     }

@@ -46,11 +46,6 @@ changes). What the plans show, and why each is the plan we want:
 - **dedup_jaccard** — shingle-hash MapInPandas -> df-cap aggregation
   (map-side partial) -> inverted-index self-join on the int64 shingle
   hash; the frequency cap bounds the worst bucket before the join.
-- **rel_top_nations** — both dimension joins BroadcastHashJoin;
-  IsNotNull pushed into every scan, ReadSchema pruned to join/agg
-  columns.
-- **rel_sessionize** — one Exchange on user_id feeds both the window
-  and the final agg (partitioning reused across stages).
 - **qf_decontaminate** — the corpus side is scan -> Generate (n-gram
   explode) -> BroadcastHashJoin with NO Exchange: the whole-corpus scan
   never shuffles. The only Exchanges are the tiny bench-dim distinct
@@ -71,7 +66,6 @@ changes). What the plans show, and why each is the plan we want:
 QUERIES = [
     "qf_pipeline_full", "qf_keep_cheap", "ngram_counts", "dedup_exact",
     "dedup_jaccard", "dedup_minhash", "zh_correct_full",
-    "rel_top_nations", "rel_sessionize",
     "qf_gopher_rules", "qf_web_pipeline", "qf_para_dedup", "dedup_substr",
     "nb_langid", "qf_decontaminate", "qf_corpus_rollup",
     "qf_token_budget", "qf_url_dedup",
