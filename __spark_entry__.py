@@ -341,51 +341,70 @@ WITH sig AS (
 # ---------------------------------------------------------------------------
 
 
-def q_quality_signals(spark, sf_dir):
-    from pycorrector_spark.operators.quality import with_quality_columns
+def _signals_map(df: DataFrame, cols: list) -> DataFrame:
+    """(doc_id, cols) over ``df``'s doc_id/text from ``textops.signals_frame``,
+    the score stage's signal kernel; null text gets the signals of ""."""
+    from pycorrector_spark.operators.score import SIGNAL_COLS
 
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return with_quality_columns(d).select(
-        "doc_id",
-        F.col("n_chars").cast("long").alias("n_chars"),
-        F.col("n_words").cast("long").alias("n_words"),
-        "symbol_ratio",
-        "rep_ratio",
-        "len_ok",
+    types = dict(SIGNAL_COLS)
+
+    def make():
+        from pycorrector_spark.textops import signals_frame
+
+        return lambda texts: signals_frame(texts)[cols]
+
+    return _doc_map(df, ", ".join(["doc_id long"] + [f"{c} {types[c]}" for c in cols]), make)
+
+
+def q_quality_signals(spark, sf_dir):
+    return _signals_map(
+        _docs(spark, sf_dir), ["n_chars", "n_words", "symbol_ratio", "rep_ratio", "len_ok"]
     )
 
 
 def q_langid(spark, sf_dir):
-    from pycorrector_spark.operators.quality import with_lang_id
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return with_lang_id(d).select("doc_id", "lang_id", "lang_conf")
+    return _signals_map(_docs(spark, sf_dir), ["lang_id", "lang_conf"])
 
 
 def q_keep_cheap(spark, sf_dir):
-    """SQL-expressible prefix of the frozen keep/drop rule (len/symbol/
-    repetition/lang); the full rule adds LM ppl + error density, verified
-    in tests (q_pipeline_full is the rows-only complete version)."""
-    from pycorrector_spark.operators.quality import with_lang_id, with_quality_columns
-    from pycorrector_spark.config import DEFAULT_CONFIG as C
+    """SQL-expressible prefix of the frozen keep/drop rule: the score
+    stage's ``keep_decisions`` with no ppl and no errors, so only
+    len/symbol/repetition/lang can fire (q_pipeline_full is the complete
+    version)."""
 
-    d = with_lang_id(with_quality_columns(_docs(spark, sf_dir).select("doc_id", "text")))
-    reason = (
-        F.when(~F.col("len_ok"), F.lit("len"))
-        .when(F.col("symbol_ratio") > C.max_symbol_ratio, F.lit("symbol"))
-        .when(F.col("rep_ratio") > C.max_rep_ratio, F.lit("repetition"))
-        .when(~F.col("lang_id").isin(*C.allowed_langs), F.lit("lang"))
-        .otherwise(F.lit(""))
-    )
-    return d.select("doc_id", (reason == "").alias("keep_cheap"), reason.alias("drop_reason"))
+    def make():
+        import numpy as np
+
+        from pycorrector_spark.config import keep_decisions
+        from pycorrector_spark.textops import signals_frame
+
+        def cols(texts):
+            s = signals_frame(texts)
+            keep, reason = keep_decisions(
+                s["len_ok"], s["symbol_ratio"], s["rep_ratio"], s["lang_id"],
+                np.full(len(s), np.nan), np.zeros(len(s)),
+            )
+            return {"keep_cheap": keep, "drop_reason": reason}
+
+        return cols
+
+    return _doc_map(_docs(spark, sf_dir), "doc_id long, keep_cheap boolean, drop_reason string", make)
 
 
 def q_scrub(spark, sf_dir):
-    from pycorrector_spark.operators.quality import with_scrubbed
+    """The score stage's ``scrub_series``; a NULL text stays NULL."""
+    import pandas as pd
 
-    return with_scrubbed(_docs(spark, sf_dir).select("doc_id", "text")).select(
-        "doc_id", "scrubbed_text"
-    )
+    from pycorrector_spark.stage import ensure_parallelism, python_stage
+
+    def fn(it):
+        from pycorrector_spark.textops import scrub_series
+
+        for pdf in it:
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "scrubbed_text": scrub_series(pdf["text"])})
+
+    docs = ensure_parallelism(_docs(spark, sf_dir).select("doc_id", "text"))
+    return python_stage(docs, fn, "doc_id long, scrubbed_text string")
 
 
 def q_sent_split(spark, sf_dir):
@@ -787,9 +806,10 @@ def _langid_ft_oracle_sql() -> str:
 def q_langid_agreement(spark, sf_dir):
     """A5-style confusion-matrix aggregation: claimed `lang` column vs
     computed lang_id — per-cell counts + mean confidence."""
-    from pycorrector_spark.operators.quality import with_lang_id
-
-    d = with_lang_id(_docs(spark, sf_dir).select("doc_id", "lang", "text"))
+    docs = _docs(spark, sf_dir)
+    d = docs.select("doc_id", "lang").join(
+        _signals_map(docs, ["lang_id", "lang_conf"]), "doc_id"
+    )
     return d.groupBy("lang", "lang_id").agg(
         F.count("*").alias("n_docs"),
         F.round(F.avg("lang_conf"), 6).alias("avg_conf"),
@@ -1327,12 +1347,9 @@ def q_host_cap(spark, sf_dir):
     one skew shape AQE cannot split)."""
     from pycorrector_spark.operators.curation import top_n_per_key
     from pycorrector_spark.operators.htmlx import synth_url_expr, with_url_filter
-    from pycorrector_spark.operators.quality import with_quality_columns
 
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", "text", synth_url_expr(F.col("doc_id")).alias("url")
-    )
-    d = with_quality_columns(with_url_filter(docs))
+    d = _signals_map(_docs(spark, sf_dir), ["n_words"])
+    d = with_url_filter(d.withColumn("url", synth_url_expr(F.col("doc_id"))))
     capped = top_n_per_key(
         d, "host", HOST_CAP_N,
         [F.col("n_words").desc(), F.col("doc_id").asc()],
@@ -1377,9 +1394,8 @@ def q_token_budget(spark, sf_dir):
     WITHOUT a global sort — distributed prefix-sum over range partitions
     (hot scores split on the id tie-break; see select_token_budget)."""
     from pycorrector_spark.operators.curation import select_token_budget
-    from pycorrector_spark.operators.quality import with_quality_columns
 
-    d = with_quality_columns(_docs(spark, sf_dir).select("doc_id", "text"))
+    d = _signals_map(_docs(spark, sf_dir), ["n_words"])
     out = select_token_budget(
         d, TOKEN_BUDGET, score_col="n_words", tokens_col="n_words",
         id_col="doc_id",
@@ -1571,17 +1587,19 @@ def q_web_pipeline(spark, sf_dir):
     curation -> html text extraction -> language ID -> Gopher repetition
     rules -> C4 line filter -> toxicity -> PII scrub, emitting the final
     keep/drop label with a first-failing-stage drop_reason and the
-    scrubbed retained text. One zero-shuffle codegen map stage per row;
-    the whole chain is SQL-mirrored, so the driver hash-checks the
+    scrubbed retained text. The url, html, Gopher, C4 and toxicity stages
+    are JVM column expressions; language ID and the scrub run the
+    score stage's pandas kernels in one Python stage (NULL text counts as
+    ''). The whole chain is SQL-mirrored, so the driver hash-checks the
     complete keep/drop contract (the north-rule deliverable)."""
     from pycorrector_spark.config import DEFAULT_CONFIG as C
     from pycorrector_spark.operators import htmlx as H
-    from pycorrector_spark.operators.quality import with_lang_id, with_scrubbed
     from pycorrector_spark.operators.webrules import (
         webpage_text_expr, with_c4_filter, with_gopher_columns,
     )
+    from pycorrector_spark.stage import ensure_parallelism, python_stage
 
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = ensure_parallelism(_docs(spark, sf_dir).select("doc_id", "text"))
     # WARC stand-in: deterministic page markup + messy url per doc
     df = d.select(
         "doc_id",
@@ -1593,11 +1611,23 @@ def q_web_pipeline(spark, sf_dir):
     )
     df = H.with_url_filter(df)
     df = df.withColumn("page_text", H.extract_text_expr(F.decode(F.col("html"), "utf-8")))
-    df = with_lang_id(df, "page_text")
     df = with_gopher_columns(df)
     df = with_c4_filter(df)
     df = H.with_toxicity(df, "page_text")
-    df = with_scrubbed(df, "c4_text", "scrubbed_text")
+    flags = ["url_keep", "gopher_keep", "c4_keep", "toxicity_keep"]
+
+    def fn(it):
+        from pycorrector_spark.textops import scrub_series, signals_frame
+
+        for pdf in it:
+            yield pdf[["doc_id", "norm_url", *flags]].assign(
+                lang_id=signals_frame(pdf["page_text"])["lang_id"],
+                scrubbed_text=scrub_series(pdf["c4_text"].fillna("")),
+            )
+
+    ddl = ("doc_id long, norm_url string, " + ", ".join(f"{c} boolean" for c in flags)
+           + ", lang_id string, scrubbed_text string")
+    df = python_stage(df.select("doc_id", "norm_url", *flags, "page_text", "c4_text"), fn, ddl)
     reason = (
         F.when(~F.col("url_keep"), F.lit("url"))
         .when(~F.col("lang_id").isin(*C.allowed_langs), F.lit("lang"))

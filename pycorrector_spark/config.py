@@ -33,7 +33,7 @@ class PipelineConfig:
     enable_word_error: bool = True
 
     # keep/drop thresholds; length bounds default to the textops
-    # constants and flow from HERE into the scalar/vectorized/JVM signal
+    # constants and flow from HERE into the scalar/vectorized signal
     # functions and the generated oracle SQL (one wired source of truth)
     min_len: int = _TEXTOPS_MIN_LEN
     max_len: int = _TEXTOPS_MAX_LEN

@@ -294,9 +294,6 @@ def process_batch(pdf: pd.DataFrame, zh: Corrector, en: EnSpellCorrector,
     The cheap signals (length/symbol/repetition/langid) are computed here
     too, by ``signals_frame`` over the batch's codepoint buffer; the
     property tests hold them equal to the scalar oracle's regex counts.
-    They were originally JVM column expressions, but java.util.regex
-    anti-scales under thread parallelism in this environment (see
-    BENCH/BASELINE.md) while this path scales linearly.
     """
     from ..textops import signals_frame
 

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 # any other non-space char. Identical in Java regex and RE2.
 BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[一-龥]|[^A-Za-z0-9一-龥 \t\n\r]"
 from ..textops import WORD_SPLIT_PATTERN as WS_TOKEN_SPLIT  # single frozen splitter
-from ..textops import WS_CHARS  # frozen whitespace set (shared with quality.py btrim)
+from ..textops import WS_CHARS  # frozen whitespace set
 
 FP_MOD = 2147483647  # 2^31 - 1; keeps (h*31 + c) in int64 range
 FP_MULT = 31
@@ -21,8 +21,7 @@ FP_MULT = 31
 
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add ws_tokens (whitespace split) and bpe_tokens (regex token count).
-    NULL text counts as '' (0 tokens) — the engine-wide NULL convention
-    shared with quality.py and the pandas stage's fillna."""
+    NULL text counts as '' (0 tokens), as in the signals stage."""
     c = F.coalesce(F.col(text_col), F.lit(""))
     ws = F.size(
         F.filter(

@@ -561,12 +561,11 @@ class MultiPatternScanner:
 # only on the texts that hold its trigger (same Python `re` engine).
 # --------------------------------------------------------------------------
 
-# Patterns are written in the common subset of Python re / Java regex /
-# RE2 (no \s, no lookaround, no backrefs) so the SAME strings drive the
-# pandas stage, the native Spark regexp_replace chain, and the DuckDB
-# oracle. Order matters (url before ip, ip before phone).
+# Patterns are written in the common subset of Python re and RE2 (no \s,
+# no lookaround, no backrefs) so the SAME strings drive the pandas stage
+# and the DuckDB oracle. Order matters (url before ip, ip before phone).
 #
-# Compiled with re.ASCII: Java regex and RE2 treat \b/\d/\w as ASCII by
+# Compiled with re.ASCII: RE2 treats \b/\d/\w as ASCII by
 # default, while Python's are unicode-aware — without the flag, \b after
 # a CJK char never matches (PII adjacent to Chinese text leaks through)
 # and \d matches fullwidth digits (scrubbing strings the oracle keeps).
@@ -686,9 +685,9 @@ MAX_LEN = 1_000_000   # chars
 def quality_signals(text: str, min_len: int = MIN_LEN, max_len: int = MAX_LEN) -> dict:
     """Frozen heuristic quality signals for one document.
 
-    Every definition here has an exact Spark-SQL and DuckDB-SQL equivalent
-    (see operators/quality.py and __spark_entry__.py oracles); parity is
-    test-enforced over the full fixture set.
+    Every definition here has an exact DuckDB-SQL equivalent (the
+    __spark_entry__.py oracles); parity is test-enforced over the full
+    fixture set.
     """
     n = len(text)
     stripped = text.strip(WS_CHARS)
@@ -730,11 +729,9 @@ def signals_frame(texts: pd.Series, min_len: int = MIN_LEN, max_len: int = MAX_L
     counts, the stripped length and the word count come from class masks
     and prefix sums at the texts' offsets; only the distinct-word count
     splits each text. Agreement with quality_signals()/lang_id() is
-    checked by the property tests, not by construction.
-    (The JVM column variants in operators/quality.py compute the same
-    frozen definitions for the SQL oracle; java.util.regex turned out to
-    anti-scale under thread parallelism in this environment — see
-    BENCH/BASELINE.md — so the pipeline hot path uses this form.)
+    checked by the property tests, not by construction. The signals run
+    here rather than as Spark regex column expressions because
+    java.util.regex anti-scales under thread parallelism (BENCH/BASELINE.md).
     """
     docs = texts.fillna("").tolist()
     n = len(docs)

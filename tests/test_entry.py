@@ -2,7 +2,8 @@
 entry() runs and returns rows with a stable schema; every queries() entry
 executes; oracle_sql() and queries() have the same keys; every plan
 the explain_plans tool captures names a real query; the paper's queries
-sit inside the gate's first-50 window.
+sit inside the gate's first-50 window; the queries that run the score
+stage's signal and scrub kernels match their DuckDB oracles.
 """
 
 import importlib.util
@@ -34,13 +35,17 @@ def test_oracle_keys_subset_of_queries():
     assert set(o) == set(q)
 
 
-def test_explain_plans_queries_exist():
+def _tool(name):
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "tools", "explain_plans.py")
-    spec = importlib.util.spec_from_file_location("explain_plans", path)
+                        "tools", f"{name}.py")
+    spec = importlib.util.spec_from_file_location(name, path)
     tool = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(tool)  # module body only; main() starts Spark
-    assert set(tool.QUERIES) <= set(entry_mod.queries())
+    return tool
+
+
+def test_explain_plans_queries_exist():
+    assert set(_tool("explain_plans").QUERIES) <= set(entry_mod.queries())
 
 
 PAPER_PATH = [
@@ -68,3 +73,56 @@ def test_each_query_executes(spark, name):
     # every query produces rows at sf0.001 (a 0-row result would be a
     # vacuous pass downstream in the oracle gate)
     assert n > 0, f"{name} returned no rows at {SF}"
+
+
+def _oracle(sql, sf_dir):
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')")
+    return con.execute(sql).fetchdf()
+
+
+# the queries that run the score stage's signals_frame / keep_decisions /
+# scrub_series; the first four must reach them through a Python stage
+KERNEL_QUERIES = ["qf_langid", "qf_quality_signals", "qf_keep_cheap", "qf_scrub"]
+MOVED_QUERIES = KERNEL_QUERIES + [
+    "langid_agreement", "qf_host_cap", "qf_token_budget", "qf_web_pipeline",
+]
+
+
+@pytest.mark.parametrize("name", MOVED_QUERIES)
+def test_moved_query_matches_oracle(spark, name):
+    import pandas as pd
+
+    from pycorrector_spark.operators.dedup import release_cached
+
+    normalize = _tool("check_correctness").normalize
+    df = entry_mod.queries()[name](spark, SF)
+    got = df.toPandas()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    release_cached(df)
+    want = _oracle(entry_mod.oracle_sql()[name], SF)
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(normalize(got), normalize(want), check_dtype=False,
+                                  check_exact=True)
+    if name in KERNEL_QUERIES:
+        assert "MapInPandas" in plan, plan
+
+
+def test_scrub_keeps_null_text(spark, tmp_path, zh, en):
+    """A NULL text scrubs to NULL in q_scrub, in its oracle and in the
+    score stage's scrubbed_text."""
+    import pandas as pd
+
+    from pycorrector_spark.config import DEFAULT_CONFIG
+    from pycorrector_spark.operators.score import process_batch
+
+    texts = [None, "mail a@b.com now"]
+    pd.DataFrame({"doc_id": [1, 2], "text": texts}).to_parquet(tmp_path / "documents.parquet")
+    got = {r["doc_id"]: r["scrubbed_text"] for r in entry_mod.q_scrub(spark, str(tmp_path)).collect()}
+    want = _oracle(entry_mod.oracle_sql()["qf_scrub"], str(tmp_path))
+    want = dict(zip(want["doc_id"], want["scrubbed_text"]))
+    pipeline = process_batch(pd.DataFrame({"text": texts}), zh, en, DEFAULT_CONFIG)
+    assert got == want == {1: None, 2: "mail <EMAIL> now"}
+    assert pipeline["scrubbed_text"].tolist() == [None, "mail <EMAIL> now"]

@@ -197,13 +197,15 @@ def test_skew_salting_balances_partitions(spark):
 
 
 def test_null_text_matches_python_path(spark):
-    from pycorrector_spark.operators.quality import with_lang_id, with_quality_columns
+    from __spark_entry__ import _signals_map
     from pycorrector_spark.textops import lang_id, quality_signals
 
     df = spark.createDataFrame([(1, None), (2, "hello world of spark jobs")],
                                "doc_id long, text string")
-    rows = {r["doc_id"]: r for r in with_lang_id(with_quality_columns(df)).collect()}
-    # JVM expressions treat NULL as '' — same as the pandas fillna path
+    cols = ["len_ok", "n_words", "lang_id", "lang_conf"]
+    rows = {r["doc_id"]: r for r in _signals_map(df, cols).collect()}
+    # the Spark signals stage (signals_frame) treats NULL as '', as the
+    # scalar path does
     py = quality_signals("")
     assert rows[1]["len_ok"] == py["len_ok"] == False
     assert rows[1]["n_words"] == py["n_words"] == 0

@@ -25,15 +25,23 @@ changes). What the plans show, and why each is the plan we want:
   small-file split; no-op at 100 TB where the scan has thousands of
   splits) -> ONE MapInPandas: the whole scoring pipeline is a single
   Python stage, one JVM->Python Arrow exchange, zero shuffles.
-- **qf_keep_cheap** — pure JVM expressions, no Exchange: scan ->
-  WholeStageCodegen project.
-- **qf_token_budget** (round 5) — distributed prefix-sum: ONE range
-  Exchange (hot scores split across partitions on the id tie-break;
-  every partition ~n/P rows regardless of the score distribution) ->
-  sort-within-partitions -> ONE MapInPandas cumsum (cached) -> tiny
-  per-partition max agg to the driver -> broadcast-joined offsets.
-  No window partitioned by a data value anywhere — the r4 hot-score
-  straggler is structurally impossible.
+- **qf_keep_cheap** — scan -> one round-robin Exchange -> ONE
+  MapInPandas: the score stage's own signals_frame + keep_decisions,
+  so the oracle checks the kernels that label documents.
+- **qf_token_budget** (round 5) — n_words from the signals MapInPandas
+  (behind its round-robin Exchange), then a distributed prefix-sum: ONE
+  range Exchange carrying (doc_id, n_words) only (hot scores split
+  across partitions on the id tie-break; every partition ~n/P rows
+  regardless of the score distribution) -> sort-within-partitions ->
+  ONE MapInPandas cumsum (cached) -> tiny per-partition max agg to the
+  driver -> broadcast-joined offsets. No window partitioned by a data
+  value anywhere — the r4 hot-score straggler is structurally
+  impossible.
+- **qf_web_pipeline** — scan -> one round-robin Exchange -> the url,
+  html-extraction, Gopher, C4 and toxicity projections -> ONE
+  MapInPandas (langid + scrub, the score stage's kernels) -> the
+  first-failing-stage drop_reason projection. No shuffle after the
+  round-robin.
 - **ngram_counts** — transform/sequence/explode/groupBy codegen'd;
   partial HashAggregate before the Exchange (map-side combine), so the
   shuffle carries (gram, partial_count), not raw grams.
